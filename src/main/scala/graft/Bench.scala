@@ -43,9 +43,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    over the timed loop; cpu_other_frac subtracts this JVM's own CPU
   *    time (OperatingSystemMXBean) — the direct external-contention
   *    signal (≈0 on an idle machine).
-  *  - parallelism / host_cores: the local[N] actually used vs what the
-  *    host has, since SPARK_GRAFT_CPUS defaults to 32 and a smaller
-  *    host would silently oversubscribe (ADVICE r3).
+  *  - parallelism / host_cores: the local[N] actually used
+  *    (SPARK_GRAFT_CPUS, see [[Sessions]]) vs what the host has.
   *  - gc_sec / throttled_periods / throttled_sec: stop-the-world GC
   *    time and cgroup-v2 CPU-quota throttling over the timed loop —
   *    the two stall modes /proc/stat cannot see (BENCH_r04 showed two
@@ -177,49 +176,20 @@ object Bench {
       (kv.getOrElse("nr_throttled", -1L), kv.getOrElse("throttled_usec", -1L) / 1e6)
     } catch { case _: Throwable => (-1L, -1.0) }
 
+  /** One run of a catalog row through the noop sink: every row is
+    * fully computed, nothing is written.
+    */
+  def runNoop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Parsed defensively (ADVICE r4): a non-numeric SPARK_GRAFT_CPUS
-    // interpolated raw would make both the master URL and the telemetry
-    // JSON invalid — fall back to 32 and carry the int everywhere.
-    val cpus = scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt)
-      .getOrElse(32)
-    // Shuffle writer strategy: r19 forced the sort-based writer
-    // (threshold 0) on the strength of ONE 5k-row distinct microbench
-    // (0.56 s bypass vs 0.26 s sort at M=R=32); the driver's r19
-    // catalog-wide ground truth then moved the other way and the
-    // VERDICT demanded a controlled full-catalog A/B. r20 ran it —
-    // four back-to-back full benches on one host, two per setting
-    // (records/bench_r20_ab_*.json): the default BYPASS writer wins or
-    // ties every steal-resistant measure (process CPU 795/800 s vs
-    // 812/869 s forced-sort, min-per-query wall sum 44.0 s vs 45.5 s,
-    // geomean 0.949), so the default is RESTORED to Spark's 200. The
-    // microbench generalized badly: per-(M×R)-file create cost exists,
-    // but the sort writer's per-record sort/serialize overhead costs
-    // more across the real catalog's mostly-tiny exchanges.
-    // Env-overridable so the A/B stays reproducible.
-    val bypassThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "200")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.shuffle.sort.bypassMergeThreshold", bypassThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    // Spark's default shuffle writer (bypass threshold 200): a four-leg
+    // full-catalog A/B measured it ahead of the forced sort writer
+    // (records/bench_r20_ab_*.json).
+    val spark = Sessions.start("graft-bench")
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def jsonEscape(s: String): String =
-      s.flatMap {
-        case '"'           => "\\\""
-        case '\\'          => "\\\\"
-        case '\n'          => "\\n"
-        case '\r'          => "\\r"
-        case '\t'          => "\\t"
-        case c if c < ' '  => f"\\u${c.toInt}%04x"
-        case c             => c.toString
-      }
     // Returns (seconds, succeeded). Success matters to the caller: a
     // fast-FAILING attempt (e.g. a 0.1 s exception) must not become the
     // reported best-of-N time for a query whose other attempt succeeded
@@ -227,7 +197,7 @@ object Bench {
     def runOne(name: String, fn: (SparkSession, String) => DataFrame, dir: String, record: Boolean): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, dir).write.mode("overwrite").format("noop").save(); true }
+        try { runNoop(fn(spark, dir)); true }
         catch {
           case e: Throwable =>
             if (record) {
@@ -352,7 +322,7 @@ object Bench {
 
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + jsonEscape(v) + "\"" }
+    val errs = errors.map { case (k, v) => Json.quote(k) + ":" + Json.quote(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // capped_queries: rows whose graded form slices to a fixed-density

@@ -35,20 +35,33 @@ object Cli {
       source: String = "html"
   )
 
+  private val Stages: Seq[String] = Seq("extract", "transform", "load", "validate", "search", "reset", "all")
+
+  /** Rejects a bad command line before any session starts. */
   private[graft] def parse(argv: Array[String]): Args = {
-    require(argv.nonEmpty, "stage required: extract|transform|load|validate|search|reset|all")
+    require(argv.nonEmpty, s"stage required: ${Stages.mkString("|")}")
+    if (!Stages.contains(argv.head))
+      throw new IllegalArgumentException(s"unknown stage ${argv.head}: expected ${Stages.mkString("|")}")
     var a = Args(stage = argv.head)
     var i = 1
     while (i < argv.length) {
-      argv(i) match {
-        case "--input" => a = a.copy(input = argv(i + 1)); i += 2
-        case "--work" => a = a.copy(work = argv(i + 1)); i += 2
-        case "--query" => a = a.copy(query = argv(i + 1)); i += 2
-        case "--collection" => a = a.copy(collection = argv(i + 1)); i += 2
-        case "--k" => a = a.copy(k = argv(i + 1).toInt); i += 2
-        case "--source" => a = a.copy(source = argv(i + 1)); i += 2
+      val flag = argv(i)
+      def value: String =
+        if (i + 1 < argv.length) argv(i + 1)
+        else throw new IllegalArgumentException(s"flag $flag needs a value")
+      a = flag match {
+        case "--input" => a.copy(input = value)
+        case "--work" => a.copy(work = value)
+        case "--query" => a.copy(query = value)
+        case "--collection" => a.copy(collection = value)
+        case "--k" =>
+          val v = value
+          a.copy(k = v.toIntOption.filter(_ >= 1).getOrElse(
+            throw new IllegalArgumentException(s"flag --k needs an integer >= 1, got '$v'")))
+        case "--source" => a.copy(source = value)
         case other => throw new IllegalArgumentException(s"unknown flag $other")
       }
+      i += 2
     }
     a
   }
@@ -80,7 +93,7 @@ object Cli {
     val chunks = spark.read.parquet(chunksPath(a))
     val embedded = Embedders.withEmbedding(chunks, "text", "embedding", Embedders.default)
     val folderCol = if (embedded.columns.contains("folder_name")) "folder_name" else "language"
-    new VectorStore(storePath(a)).writePartitioned(embedded, folderCol, "docs_")
+    new VectorStore(storePath(a)).writePartitioned(TextCleaner.capForStore(embedded), folderCol, "docs_")
     spark.read.parquet(storePath(a))
   }
 
@@ -120,13 +133,7 @@ object Cli {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .appName(s"graft-${a.stage}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start(s"graft-${a.stage}")
     try run(spark, a)
     finally spark.stop()
   }

@@ -30,15 +30,15 @@ object Pipeline {
     val chunks = Chunker.explodeChunks(cleaned, "text", "source", cfg)
     val deduped = Dedup.exactDedup(chunks, "text", Seq("source", "chunk_index"))
     val embedded = Embedders.withEmbedding(deduped, "text", "embedding", embedder)
-    embedded
+    TextCleaner.capForStore(embedded)
       .withColumn("collection", TextCleaner.collectionName(col("folder_name"), collectionPrefix))
       .select(
         col("chunk_id"),
-        substring(col("text"), 1, graft.model.FieldCaps.Text).as("text"),
+        col("text"),
         col("embedding"),
-        substring(col("source"), 1, graft.model.FieldCaps.Source).as("source"),
-        substring(col("filename"), 1, graft.model.FieldCaps.Filename).as("filename"),
-        substring(col("language"), 1, graft.model.FieldCaps.Language).as("language"),
+        col("source"),
+        col("filename"),
+        col("language"),
         col("chunk_index"),
         col("total_chunks"),
         col("chunk_size_chars"),

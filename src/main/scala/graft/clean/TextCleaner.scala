@@ -1,6 +1,6 @@
 package graft.clean
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's text-cleaning battery re-expressed as a chain of
@@ -205,6 +205,13 @@ object TextCleaner {
     substring(coalesce(filename, lit("")), 1, graft.model.FieldCaps.Filename).as("filename"),
     substring(coalesce(language, lit("unknown")), 1, graft.model.FieldCaps.Language).as("language")
   )
+
+  /** [[truncateForStore]] over a frame's own text/source/filename/
+    * language columns, each replaced in place.
+    */
+  def capForStore(df: DataFrame): DataFrame = df.withColumns(
+    Seq("text", "source", "filename", "language").zip(
+      truncateForStore(col("text"), col("source"), col("filename"), col("language"))).toMap)
 
   /** C19 — collection-name normalization (config.py:37-43). */
   def collectionName(folder: Column, prefix: String): Column =

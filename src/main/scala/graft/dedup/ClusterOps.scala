@@ -47,8 +47,8 @@ private[dedup] trait ClusterOps extends Serializable {
     * a round producing no change, so the returned count always
     * includes that final fixpoint-confirming identity round (≥ 1 even
     * for an input already at the fixpoint); productive contractions =
-    * rounds − 1. Probes use it to verify the O(log n) claim at decade
-    * scale (SCALE.md); the DataFrame result is identical to
+    * rounds − 1. The O(log n) claim was verified with it at decade
+    * scale (records/probe_r15_clusters.log, SCALE.md); the DataFrame result is identical to
     * [[nearDupClusters]]'s.
     */
   def nearDupClustersWithRounds(

@@ -109,7 +109,7 @@ object SemanticDedup {
     * two-level k-means ([[graft.search.HierarchicalKMeans]]): flat
     * Lloyd is n·k work per iteration — n²/TARGET once k ∝ n — while
     * the two-level form is n·√k for both training and assignment.
-    * tools/SemDedupProbe measured the flat path 78 s at 200k vectors
+    * SCALE.md round 12 records the flat path at 78 s for 200k vectors
     * (fit-dominated, 22.8× across a 10× decade) vs seconds
     * hierarchical; same dominance-filter semantics either way.
     */

@@ -3163,8 +3163,8 @@ object QueryCatalog {
     // so an uncapped row measures the fixture's pair volume, not the
     // operator — it was the catalog's slowest row and ENOSPC'd the
     // sf100 sweep. The operator's real scale path is probe-measured on
-    // the documents corpus decades (tools/StreamNearDupProbe, SCALE.md
-    // round-13).
+    // the documents corpus decades (records/probe_r15_streamneardup.log,
+    // SCALE.md round-13).
     val ev = eventsRaw(s, dir).select("event_id").filter(col("event_id") < 100000L)
     val base = math.max(1L, ev.count() / 10L)
     // rebalanced BEFORE the signature UDF: the single-row-group local
@@ -3566,7 +3566,7 @@ object QueryCatalog {
         // frontier that holds recall@10 = 10/10 at every shipped sf on
         // these isotropic synthetic embeddings — the hardest PQ case,
         // since iid dims leave no correlated structure for the
-        // subspace codebooks to exploit (tools/PqProbe sweep).
+        // subspace codebooks to exploit (SCALE.md round-7 PQ sweep).
         val cbs = ProductQuant.fit(e, m = 16)
         (ProductQuant.encode(e, cbs).cache(), cbs)
       }
@@ -3795,7 +3795,7 @@ object QueryCatalog {
     // via Expand — every input row replicated per aggregate group
     // before the partial agg — and the doubled stream through the
     // distinct machinery went super-linear at the third decade
-    // (tools/DistinctProbe: combined 5.5 s at sf1 → 43.0 s at sf10,
+    // (BASELINE.md round 11: combined 5.5 s at sf1 → 43.0 s at sf10,
     // 16× for 10× rows; split 1.8 → 3.0 s, linear, identical values).
     // Each pass is a pruned one-column scan; at 100 TB two cheap
     // scans beat one Expand-doubled shuffle. The null filter keeps

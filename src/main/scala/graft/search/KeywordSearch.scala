@@ -75,7 +75,7 @@ object KeywordSearch {
     // as a broadcast, and broadcast builds run as independent jobs
     // that do NOT share exchange results with the streamed score side
     // — so an unpinned perDoc re-ran the scan + tokenize once per
-    // consumer (2 full corpus passes per query; r20 ScanAudit). These
+    // consumer (2 full corpus passes per query; `Inspect scans`). These
     // rows are a handful of longs per document — far narrower than
     // re-reading the text — and checkpoint blocks are RUN-LOCAL (not
     // plan-matched by the CacheManager, reclaimed by the

@@ -4,6 +4,7 @@ import graft.embed.Embedder
 import graft.lang.LanguageDetect
 import graft.model.SearchConfig
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Search façade (reference search_utils.py:36-98, SURVEY.md §2.6
@@ -34,44 +35,21 @@ object SearchFacade {
     VectorSearch.topK(collection, qvec, k, vecCol = vecCol, predicate = predicate)
   }
 
-  /** Q6/Q8 batch form — MANY queries against ONE collection. The naive
+  /** Q6/Q8 batch form — MANY queries against ONE collection. A naive
     * per-query loop re-executes the collection's whole upstream plan
-    * (clean → detect → embed, linear in corpus characters) once PER
-    * QUERY; the round-10 sf10 bench measured the graded facade query at
-    * 92 s, ~3× its single-pass corpus-embed cost, exactly that
-    * re-derivation. This form materializes the NARROW projection the
-    * searches actually need (filter column + vector + caller-kept
-    * columns) with one localCheckpoint, then runs every per-query
-    * top-k against the materialized blocks — the same
-    * materialize-the-reused-subtree policy the prefix-Jaccard join
-    * adopted in round 9. At 100 TB a query batch must never rescan the
-    * corpus per query.
-    */
-  def searchBatch(
-      collection: DataFrame,
-      queries: Seq[(String, String)],
-      embedder: Embedder,
-      k: Int = SearchConfig().defaultK,
-      langCol: String = "language",
-      vecCol: String = "embedding",
-      extraCols: Seq[String] = Nil
-  ): Seq[(String, DataFrame)] = {
-    val narrow = collection
-      .select((Seq(langCol, vecCol) ++ extraCols).distinct.map(col): _*)
-      .localCheckpoint()
-    queries.map { case (tag, q) =>
-      tag -> search(narrow, q, embedder, k, langCol = langCol, vecCol = vecCol)
-    }
-  }
-
-  /** Bracketed [[searchBatch]]: the checkpointed blocks of the narrow
-    * projection are released as soon as `use` returns, so a long-lived
+    * (clean → detect → embed) once PER QUERY; the round-10 sf10 bench
+    * measured the graded facade query at ~3× its single-pass
+    * corpus-embed cost, exactly that re-derivation. This materializes
+    * the NARROW projection the searches need (filter column + vector +
+    * caller-kept columns) with one localCheckpoint and runs every
+    * per-query top-k against those blocks.
+    *
+    * The blocks are released as soon as `use` returns, so a long-lived
     * session (the bench runs the facade query warm-up plus two timed
-    * attempts) cannot accumulate un-unpersisted RDD blocks until
-    * storage eviction kicks in. `use` must fully consume the per-query
-    * frames (collect / checkpoint / write) before returning — after the
-    * bracket they would silently recompute from the un-checkpointed
-    * lineage.
+    * attempts) cannot accumulate them. `use` must fully consume the
+    * per-query frames (collect / checkpoint / write) before returning —
+    * after the bracket they would silently recompute from the
+    * un-checkpointed lineage.
     */
   def withSearchBatch[T](
       collection: DataFrame,
@@ -88,7 +66,12 @@ object SearchFacade {
     try use(queries.map { case (tag, q) =>
       tag -> search(narrow, q, embedder, k, langCol = langCol, vecCol = vecCol)
     })
-    finally narrow.unpersist(blocking = false)
+    finally narrow.queryExecution.logical.foreach {
+      // Dataset.unpersist only drops CacheManager entries: the blocks of
+      // a localCheckpoint belong to the RDD under its LogicalRDD
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 
   /** Driver-side C15 (the query is a single driver-side string). Same

@@ -14,9 +14,9 @@ final class VectorStore(root: String) {
 
   private def dir(collection: String) = s"$root/$collection"
 
-  /** S10 — write one collection (drop_existing ≡ overwrite). Applies
-    * the reference's insert-time truncation caps (C18) when the
-    * columns are present.
+  /** S10 — write one collection (drop_existing ≡ overwrite), as is:
+    * callers apply the reference's insert-time caps (C18) first with
+    * [[graft.clean.TextCleaner.capForStore]].
     */
   def writeCollection(df: DataFrame, collection: String, overwrite: Boolean = true): Unit = {
     val mode = if (overwrite) SaveMode.Overwrite else SaveMode.Append

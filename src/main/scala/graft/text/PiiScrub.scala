@@ -52,14 +52,14 @@ object PiiScrub {
     * (differential-tested in PiiScanSpec: 5000 randomized digit-soup
     * cases, targeted guard-consumption edge cases, and the full real
     * corpus), ~13× the throughput of the raw 4-stage replaceAll chain
-    * at 32 threads (tools/PiiSpin: 175 vs 13 Mchars/s).
+    * at 32 threads (175 vs 13 Mchars/s; BASELINE.md round-12 addendum).
     *
     * Why gating instead of tuning the chain: every stage pattern opens
     * with a guard alternation (`(^|[^0-9])…`) java.util.regex cannot
     * derive a start-set from, so `replaceAll` attempts the full NFA at
     * ~every position (~59 ns/char measured) — and the attempt loop is
-    * also where the engine's concurrency ceiling lives (tools/PiiProbe:
-    * 32 threads ≈ 2-4× one thread on a ≥16-core host, corpus-size
+    * also where the engine's concurrency ceiling lives (BASELINE.md
+    * round-12 addendum: 32 threads ≈ 2-4× one thread on a ≥16-core host, corpus-size
     * independent). Candidate positions (digit/'@'/'+'/'(' adjacency)
     * are enumerated with plain char scans instead, and the SAME
     * compiled Patterns do the matching via region-anchored lookingAt,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the bench corpus (VERDICT r3 #8: turn
@@ -100,13 +100,8 @@ object ScaleUp {
         t
       } else allTables.toSet
     require(rep <= 26, "suffix alphabet covers at most 26 replicas")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.start("graft-scaleup")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def write(df: => DataFrame, name: String, files: Int): Unit =

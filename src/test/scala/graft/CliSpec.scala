@@ -80,6 +80,39 @@ class CliSpec extends SparkTestBase {
     assert(results.count() == 2)
   }
 
+  test("load applies the reference's insert-time caps (C18) and null defaults") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-cli-caps").toString
+    Seq(("c1", "x" * 70000, "s/a.html", None: Option[String], "guides", "english"))
+      .toDF("chunk_id", "text", "source", "filename", "folder_name", "language")
+      .write.parquet(s"$work/chunks")
+
+    Cli.run(spark, Cli.parse(Array("load", "--work", work)))
+    val row = spark.read.parquet(s"$work/store").select("text", "filename").head()
+    assert(row.getString(0).length == 65535)
+    assert(row.getString(1) == "")
+  }
+
+  test("parse: a trailing flag with no value names the flag") {
+    val e = intercept[IllegalArgumentException](Cli.parse(Array("search", "--work", "/w", "--k")))
+    assert(e.getMessage.contains("--k"))
+  }
+
+  test("parse: a non-integer --k names the flag") {
+    val e = intercept[IllegalArgumentException](Cli.parse(Array("search", "--k", "abc")))
+    assert(e.getMessage.contains("--k") && e.getMessage.contains("abc"))
+  }
+
+  test("parse: --k below 1 is rejected") {
+    val e = intercept[IllegalArgumentException](Cli.parse(Array("search", "--k", "0")))
+    assert(e.getMessage.contains("--k"))
+  }
+
+  test("parse: an unknown stage is rejected before any session starts") {
+    val e = intercept[IllegalArgumentException](Cli.parse(Array("nope", "--work", "/w")))
+    assert(e.getMessage.contains("nope"))
+  }
+
   test("unknown stage/flag rejected") {
     intercept[IllegalArgumentException](Cli.parse(Array("extract", "--bogus", "x")))
     intercept[IllegalArgumentException](

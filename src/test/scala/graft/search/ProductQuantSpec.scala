@@ -159,7 +159,8 @@ class ProductQuantSpec extends SparkTestBase {
     assert(ProductQuant.adaptiveShortlist(2000, 10) == 100)
     assert(ProductQuant.adaptiveShortlist(0, 10) == 100)
     assert(ProductQuant.adaptiveShortlist(2000, 40) == 200)
-    // the two measured anchors (tools/PqProbe): 200k → 100 (10/10),
+    // the two measured anchors (BASELINE.md round-11 sf100 oracle
+    // sweep): 200k → 100 (10/10),
     // 2M → 1000 (10/10 where the fixed 100 collapsed to 0–3/10)
     assert(ProductQuant.adaptiveShortlist(200000, 10) == 100)
     assert(ProductQuant.adaptiveShortlist(2000000, 10) == 1000)

@@ -51,20 +51,27 @@ class SearchFacadeSpec extends SparkTestBase {
     assert(messages(1) == ("user" -> "what is spark?"))
   }
 
-  test("searchBatch materializes once and matches per-query search exactly") {
+  test("withSearchBatch matches per-query search and releases its checkpoint") {
     val queries = Seq(("ko", "스파크 조인 지원"), ("en", "spark joins"))
-    val batch = SearchFacade.searchBatch(corpus, queries, embedder, k = 2, extraCols = Seq("id"))
+    val input = corpus
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    val batch = SearchFacade.withSearchBatch(input, queries, embedder, k = 2, extraCols = Seq("id")) {
+      _.map { case (tag, hits) =>
+        // the batch side must run over materialized blocks, not re-derive
+        // the upstream plan: its plan carries a checkpointed scan
+        val plan = hits.queryExecution.optimizedPlan.toString
+        assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"),
+          s"batch search did not materialize the collection:\n$plan")
+        tag -> hits.select("id", "language", "score").collect().toSeq
+      }
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+      "withSearchBatch left its checkpointed blocks persisted")
     assert(batch.map(_._1) == queries.map(_._1))
     for (((tag, hits), (_, q)) <- batch.zip(queries)) {
-      val naive = SearchFacade.search(corpus, q, embedder, k = 2)
+      val naive = SearchFacade.search(input, q, embedder, k = 2)
         .select("id", "language", "score").collect().toSeq
-      assert(hits.select("id", "language", "score").collect().toSeq == naive,
-        s"batch result for $tag diverged from per-query search")
-      // the batch side must run over materialized blocks, not re-derive
-      // the upstream plan: its physical plan carries a checkpointed scan
-      val plan = hits.queryExecution.optimizedPlan.toString
-      assert(plan.contains("LogicalRDD") || plan.contains("ExistingRDD"),
-        s"batch search did not materialize the collection:\n$plan")
+      assert(hits == naive, s"batch result for $tag diverged from per-query search")
     }
   }
 

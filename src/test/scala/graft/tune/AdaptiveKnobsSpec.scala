@@ -78,7 +78,8 @@ class AdaptiveKnobsSpec extends AnyFunSuite {
   }
 
   test("measured anchors from the probe records hold") {
-    // PqProbe: 200k → 100 (10/10), 2M → 1000 (fixed 100 collapsed)
+    // PQ shortlist sweep (BASELINE.md round-11 sf100 oracle sweep):
+    // 200k → 100 (10/10), 2M → 1000 (fixed 100 collapsed)
     assert(AdaptiveKnobs.shortlist(10)(200000L) == 100)
     assert(AdaptiveKnobs.shortlist(10)(2000000L) == 1000)
     // SimHash: 5k docs → legacy 4 blocks; 5M → 5 (the sf100 fix)
