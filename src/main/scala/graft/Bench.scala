@@ -1,4 +1,5 @@
 package graft
+import graft.queries.QueryCatalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: one JSON line with per-query seconds over
@@ -226,14 +227,8 @@ object Bench {
     // where timing the full catalog would cost hours without adding
     // information. Unset = the full catalog, which every recorded
     // BENCH_r*.json uses.
-    val selected = sys.env.get("SPARK_GRAFT_QUERIES") match {
-      case Some(listed) =>
-        val want = listed.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val missing = want.diff(SparkEntry.queries.keySet)
-        require(missing.isEmpty, s"SPARK_GRAFT_QUERIES names unknown queries: $missing")
-        SparkEntry.queries.filter { case (n, _) => want(n) }
-      case None => SparkEntry.queries
-    }
+    val selected = QueryCatalog.select(sys.env.get("SPARK_GRAFT_QUERIES").toSeq.flatMap(_.split(",")))
+      .map(r => r.name -> r.q).toMap
     warmDir match {
       case Some(d) =>
         System.err.println(s"[bench] warm-up pass on ${d.getPath}")
@@ -334,7 +329,7 @@ object Bench {
     // artifacts are unaffected. Full-corpus decade numbers for these
     // operators live in SCALE.md's probe ladders.
     val capped = results.keysIterator
-      .filter(graft.queries.QueryCatalog.cappedQueries)
+      .filter(QueryCatalog.cappedQueries)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // Self-labeling (VERDICT r18 #2): `settled` = all four calibration
     // legs inside the pinned idle bands — an artifact from a contended

@@ -1,10 +1,11 @@
 package graft
 
-import graft.queries.QueryCatalog
+import graft.queries.{CatalogSupport, QueryCatalog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * The real catalog lives in [[graft.queries.QueryCatalog]].
+  * The real catalog lives in [[graft.queries.QueryCatalog]]; every map
+  * and set here is derived from its rows.
   */
 object SparkEntry {
 
@@ -13,7 +14,7 @@ object SparkEntry {
     * smoke-checks rows > 0.
     */
   def entry(spark: SparkSession): DataFrame =
-    QueryCatalog.qPipelineE2E(spark, "/root/testdata/sf0.001")
+    QueryCatalog.queries("q_pipeline_e2e")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -24,7 +25,7 @@ object SparkEntry {
     * Benchmarks run this before the timing loop.
     */
   def prepare(spark: SparkSession, sfDir: String): Unit =
-    QueryCatalog.prepare(spark, sfDir)
+    CatalogSupport.prepare(spark, sfDir)
 
   /** Rows that read the prepared in-memory index artifacts — Bench
     * re-pins cache residency before timing these (see
@@ -36,12 +37,10 @@ object SparkEntry {
     * caches were already fully resident.
     */
   def ensureIndexCaches(spark: SparkSession, sfDir: String): Boolean =
-    QueryCatalog.ensureIndexCaches(spark, sfDir)
+    CatalogSupport.ensureIndexCaches(spark, sfDir)
 
-  /** DuckDB-equivalent SQL for every SQL-expressible query; the
-    * remainder (hash-seeded MinHash/SimHash, KMeans IVF, the recursive
-    * chunker, the end-to-end pipeline) get rows-only checks and are
-    * covered by ScalaTest instead.
+  /** DuckDB-equivalent SQL per query; a row declared rows-only (none
+    * today) is absent and gets the driver's rows > 0 check.
     */
   def oracleSql: Map[String, String] =
     QueryCatalog.oracleSql

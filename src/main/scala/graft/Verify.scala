@@ -1,15 +1,16 @@
 package graft
+import graft.queries.QueryCatalog
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each catalog row's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query names] — the third
-    // (local-iteration only; the driver passes two) restricts the run.
+    // (local-iteration only; the driver passes two) restricts the run
+    // and fails on an unknown name.
     val sfDir = args(0)
     val outDir = args(1)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
+    val rows = QueryCatalog.select(args.lift(2).toSeq.flatMap(_.split(',')))
     val spark = Sessions.start("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Dump partitioning: repartition(1), NOT coalesce(1): coalesce
@@ -34,15 +35,13 @@ object Verify {
     val npartsRaw = sys.env.getOrElse("GRAFT_VERIFY_NPARTS", "1")
     val nparts = npartsRaw.trim.toIntOption.filter(_ >= 0).getOrElse(
       sys.error(s"GRAFT_VERIFY_NPARTS must be an integer >= 0, got '$npartsRaw'"))
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    rows.foreach { r =>
       try {
-        val out = fn(spark, sfDir)
+        val out = r.q(spark, sfDir)
         val shaped = if (nparts > 0) out.repartition(nparts) else out
-        shaped.write.mode("overwrite").parquet(s"$outDir/$name")
+        shaped.write.mode("overwrite").parquet(s"$outDir/${r.name}")
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${r.name} failed: ${e.getMessage}")
       }
     }
     val json = SparkEntry.oracleSql

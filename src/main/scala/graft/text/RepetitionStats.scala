@@ -54,7 +54,7 @@ object RepetitionStats {
     * pathological input past that bound must not grade WRONG silently
     * (ADVICE r16), so it falls over to the same formula in BigInt —
     * still exact, never a misrounded double. The Column-side mirror
-    * (QueryCatalog.ratio6Col) needs no twin guard: Spark 4 runs ANSI
+    * (CatalogSupport.ratio6Col) needs no twin guard: Spark 4 runs ANSI
     * by default, so a bigint overflow there throws loudly.
     */
   private[text] def ratio6(numer: Long, denom: Long): Double =

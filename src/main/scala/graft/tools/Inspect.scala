@@ -1,9 +1,9 @@
 package graft.tools
 
 import graft.{Bench, Sessions}
-import graft.queries.QueryCatalog
+import graft.queries.{CatalogRow, CatalogSupport, QueryCatalog}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
@@ -42,10 +42,7 @@ object Inspect {
       case "scans" | "plan" => (0, args.drop(2).toSeq)
       case other => throw new IllegalArgumentException(s"unknown mode $other; $Usage")
     }
-    val unknown = listed.filterNot(QueryCatalog.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val rows = (if (listed.nonEmpty) listed else QueryCatalog.queries.keys.toSeq.sorted)
-      .map(n => n -> QueryCatalog.queries(n))
+    val rows = QueryCatalog.select(listed)
 
     val spark = Sessions.start(s"graft-inspect-$mode")
     try mode match {
@@ -54,8 +51,6 @@ object Inspect {
       case "plan" => plan(spark, sfDir, rows)
     } finally spark.stop()
   }
-
-  private type CatalogRow = (String, (SparkSession, String) => DataFrame)
 
   private final case class StageRow(
       id: Int,
@@ -71,7 +66,7 @@ object Inspect {
 
   private def profile(spark: SparkSession, sfDir: String, iters: Int, rows: Seq[CatalogRow]): Unit = {
     val stages = ArrayBuffer.empty[StageRow]
-    QueryCatalog.prepare(spark, sfDir)
+    CatalogSupport.prepare(spark, sfDir)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
@@ -92,7 +87,8 @@ object Inspect {
         }
       }
     })
-    rows.foreach { case (n, fn) =>
+    rows.foreach { r =>
+      val (n, fn) = (r.name, r.q)
       Bench.runNoop(fn(spark, sfDir)) // warm: JIT, codegen, footers
       val walls = (1 to iters).map { i =>
         stages.synchronized(stages.clear())
@@ -120,9 +116,10 @@ object Inspect {
     def fileScans(p: SparkPlan): Seq[FileSourceScanExec] =
       (p match { case f: FileSourceScanExec => Seq(f); case _ => Nil }) ++
         p.children.flatMap(fileScans) ++ p.subqueries.flatMap(fileScans)
-    rows.foreach { case (n, fn) =>
+    rows.foreach { row =>
+      val n = row.name
       try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
+        val plan = row.q(spark, sfDir).queryExecution.executedPlan
         val byPath = fileScans(plan).groupBy(f =>
           f.relation.location.rootPaths.headOption.map(_.getName).getOrElse("?"))
         val nReuse = plan.collectWithSubqueries { case r: ReusedExchangeExec => r }.size
@@ -140,9 +137,9 @@ object Inspect {
   }
 
   private def plan(spark: SparkSession, sfDir: String, rows: Seq[CatalogRow]): Unit =
-    rows.foreach { case (n, fn) =>
-      println(s"\n===== $n =====")
-      try fn(spark, sfDir).explain("formatted")
+    rows.foreach { r =>
+      println(s"\n===== ${r.name} =====")
+      try r.q(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"plan failed: ${e.getMessage}") }
     }
 }

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *    realistic shape for a fixed collection period); `ts` passes
   *    through in whatever encoding the source carries (timestamp[us]
   *    NTZ for driver testdata, long nanos when chaining from a
-  *    fix_scaleup_events output — QueryCatalog.eventsMicros handles
+  *    fix_scaleup_events output — CatalogSupport.eventsMicros handles
   *    both), and tools/fix_scaleup_events.py rewrites the result to
   *    timestamp[ns] so DuckDB binds a timestamp for the oracles.
   *
@@ -72,7 +72,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
 
   /** Default per-replica key offset; graded-slice caps
-    * (QueryCatalog.Replica0Cap) must stay far below it so replica-0
+    * (CatalogRow.Caps.Replica0Cap) must stay far below it so replica-0
     * filters select the same fixed-density slice at every decade.
     */
   val DefaultKeyStride: Long = 10_000_000L

@@ -20,6 +20,16 @@ class SkewToolsSpec extends SparkTestBase {
     assert(salted("hot") == 10000L)
   }
 
+  test("salted join fails on a Long key outside the packed-key bound") {
+    import spark.implicits._
+    // 2^62 · 4 wraps to 0 in a long, the packed key of k = 0
+    val large = Seq((1L << 62, "big"), (0L, "zero")).toDF("k", "payload")
+    val dim = Seq((1L << 62, "big"), (0L, "zero")).toDF("k", "label")
+    val e = intercept[Exception](SkewTools.saltedJoin(large, dim, Seq("k"), factor = 4).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"key column k outside the packed-key bound |key| < ${Long.MaxValue / 4}"), msgs)
+  }
+
   test("salted collect_list aggregation preserves the multiset per key") {
     import spark.implicits._
     val df = ((1 to 500).map(i => ("hot", i)) ++ Seq(("cold", 1))).toDF("k", "v")

@@ -29,17 +29,17 @@ class ApproxQuantileParitySpec extends SparkTestBase {
   private val pcts = Seq(0.5, 0.95)
 
   /** The replay, through the PRODUCTION helper the query uses (r20:
-    * QueryCatalog.percentileBrackets's two-level cumulative sum +
+    * RelationalRows.percentileBrackets's two-level cumulative sum +
     * percentileInterp — the spec no longer re-implements the plan, so
     * a drift in the shared code fails here directly).
     */
   private def replay(df: org.apache.spark.sql.DataFrame): Seq[Double] = {
-    val row = QueryCatalog.percentileBrackets(df, pcts).head()
+    val row = RelationalRows.percentileBrackets(df, pcts).head()
     val n = row.getLong(2 * pcts.length)
     val pos = pcts.map(p => p * (n - 1))
     Seq(
-      QueryCatalog.percentileInterp(pos(0), row.getLong(0), row.getLong(1)),
-      QueryCatalog.percentileInterp(pos(1), row.getLong(2), row.getLong(3)))
+      RelationalRows.percentileInterp(pos(0), row.getLong(0), row.getLong(1)),
+      RelationalRows.percentileInterp(pos(1), row.getLong(2), row.getLong(3)))
   }
 
   private def aggregateForm(df: org.apache.spark.sql.DataFrame): Seq[Double] =
@@ -84,7 +84,7 @@ class ApproxQuantileParitySpec extends SparkTestBase {
     // keys planted ON and AROUND n·PctBucketWidth, plus negatives that
     // share truncating-division bucket 0 with small positives — the
     // shapes where a mis-bucketed cumulative sum would misrank
-    val w = QueryCatalog.PctBucketWidth
+    val w = RelationalRows.PctBucketWidth
     assertBitEqual(
       Seq(-w - 1, -w, -w + 1, -1L, 0L, 1L, w - 1, w, w + 1, 2 * w, 3 * w - 1, 3 * w)
         .flatMap(v => Seq.fill(3)(v)),
@@ -102,7 +102,7 @@ class ApproxQuantileParitySpec extends SparkTestBase {
   test("empty and all-null inputs yield a null bracket row (no NPE)") {
     import spark.implicits._
     Seq(Seq.empty[Option[Long]], Seq[Option[Long]](None, None)).foreach { vs =>
-      val row = QueryCatalog.percentileBrackets(vs.toDF("cents"), pcts).head()
+      val row = RelationalRows.percentileBrackets(vs.toDF("cents"), pcts).head()
       assert((0 to 2 * pcts.length).forall(row.isNullAt),
         s"expected all-null bracket row for input $vs, got $row")
     }

@@ -76,7 +76,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   /** Writes the fixture in the given encoding; returns a dir holding
-    * exactly `events.parquet` the way QueryCatalog reads it.
+    * exactly `events.parquet` the way CatalogSupport reads it.
     */
   private def writeFixture(enc: String): String = {
     val dir = Files.createTempDirectory(s"graft-events-$enc").toString
@@ -146,10 +146,10 @@ class EventTimeEncodingSpec extends SparkTestBase {
     df.collect().toSeq.sortBy(_.mkString("\u0000"))
 
   private val family: Seq[(String, QueryCatalog.Q)] = Seq(
-    "q_events_hourly" -> QueryCatalog.qEventsHourly,
-    "q_sessionize" -> QueryCatalog.qSessionize,
-    "q_asof_join" -> QueryCatalog.qAsofJoin,
-    "q_interval_join" -> QueryCatalog.qIntervalJoin
+    "q_events_hourly" -> RelationalRows.qEventsHourly,
+    "q_sessionize" -> RelationalRows.qSessionize,
+    "q_asof_join" -> RelationalRows.qAsofJoin,
+    "q_interval_join" -> RelationalRows.qIntervalJoin
   )
 
   test("all four event-time queries return identical rows over all four ts encodings") {
@@ -163,7 +163,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   test("hourly buckets carry every event exactly once, at true epoch hours") {
-    val hourly = QueryCatalog.qEventsHourly(spark, dirs("us")).collect()
+    val hourly = RelationalRows.qEventsHourly(spark, dirs("us")).collect()
     assert(hourly.map(_.getAs[Long]("n_events")).sum == rows.size)
     // buckets are whole UTC hours within the fixture's span
     val hours = hourly.map(_.getAs[Long]("hour_epoch"))
@@ -171,7 +171,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   test("sessionize splits on the >30-min gaps the fixture plants") {
-    val sess = QueryCatalog.qSessionize(spark, dirs("us"))
+    val sess = RelationalRows.qSessionize(spark, dirs("us"))
       .filter(col("user_id") === 1).collect().sortBy(_.getAs[Long]("session_id"))
     assert(sess.map(_.getAs[Long]("session_id")).toSeq == Seq(1L, 2L, 3L))
     assert(sess.map(_.getAs[Long]("n_events")).toSeq == Seq(3L, 3L, 1L))
@@ -181,7 +181,7 @@ class EventTimeEncodingSpec extends SparkTestBase {
   }
 
   test("asof join picks the latest click at-or-before each purchase, null when none") {
-    val asof = QueryCatalog.qAsofJoin(spark, dirs("us")).collect()
+    val asof = RelationalRows.qAsofJoin(spark, dirs("us")).collect()
       .map(r => r.getAs[Long]("event_id") -> r).toMap
     // user 1, purchase at +75:59.999999 -> click at +50:00.123456 (not the later one)
     assert(asof(102L).getAs[Long]("asof_click_ts") == Base + 1 * Min + 50 * Min + 123456L)
@@ -196,15 +196,15 @@ class EventTimeEncodingSpec extends SparkTestBase {
     // fresh session state: the flag off, as in a driver-spawned session
     val ns: SparkSession = spark.newSession()
     ns.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val out = sorted(QueryCatalog.qAsofJoin(ns, dirs("ns")))
-    assert(out == sorted(QueryCatalog.qAsofJoin(spark, dirs("us"))))
+    val out = sorted(RelationalRows.qAsofJoin(ns, dirs("ns")))
+    assert(out == sorted(RelationalRows.qAsofJoin(spark, dirs("us"))))
     assert(ns.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
   test("NTZ micros normalize TZ-independently (no session-offset shift)") {
     val seoul: SparkSession = spark.newSession()
     seoul.conf.set("spark.sql.session.timeZone", "Asia/Kolkata") // non-whole-hour offset
-    val out = sorted(QueryCatalog.qSessionize(seoul, dirs("us")))
-    assert(out == sorted(QueryCatalog.qSessionize(spark, dirs("us"))))
+    val out = sorted(RelationalRows.qSessionize(seoul, dirs("us")))
+    assert(out == sorted(RelationalRows.qSessionize(spark, dirs("us"))))
   }
 }

@@ -1,8 +1,31 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkTestBase}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, LessThan, Literal}
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 
-class QueryCatalogSpec extends SparkTestBase {
+class QueryCatalogSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+
+  private def plan(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan
+
+  /** Plan nodes `pf` matches, as the plan text shows them: subquery
+    * plans included, and a cached relation's plan under its in-memory
+    * scan (another suite may have cached a table this row reads).
+    */
+  private def nodes[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
+    collectWithSubqueries(p)(pf) ++
+      collectWithSubqueries(p) { case m: InMemoryTableScanExec => m.relation.cachedPlan }.flatMap(nodes(_)(pf))
+
+  private def cap(name: String): Long =
+    QueryCatalog.rows.find(_.name == name).flatMap(_.cap)
+      .getOrElse(fail(s"$name is not a capped row"))
 
   test("every oracle key names a real query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -12,25 +35,33 @@ class QueryCatalogSpec extends SparkTestBase {
   test("every query carries an oracle (rows-only grading needs an explicit exemption)") {
     // The SparkEntry contract allows omitting oracleSql for
     // non-SQL-expressible ops, but the driver then records only a
-    // weaker rows>0 check — a silent downgrade if the omission is an
-    // oversight rather than a decision (the cappedQueries-drift class,
-    // r18). Every catalog row is currently DuckDB-oracled; a genuinely
-    // non-expressible future query goes in this exemption set WITH its
-    // reason, so the downgrade is a reviewed decision.
-    val rowsOnlyExempt: Set[String] = Set.empty
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnlyExempt
-    assert(unoracled.isEmpty,
-      s"queries graded rows-only without an exemption entry: $unoracled")
-    val stale = rowsOnlyExempt & SparkEntry.oracleSql.keySet
-    assert(stale.isEmpty, s"exempted queries that now HAVE oracles: $stale")
+    // weaker rows>0 check. A row can only lose its oracle through
+    // CatalogRow.rowsOnly, which takes the reason; today every row is
+    // DuckDB-oracled, and SparkEntry's oracle map matches the rows.
+    val rowsOnly = QueryCatalog.rows.collect { case r if r.oracle.isLeft => r.name }
+    assert(rowsOnly.isEmpty, s"rows graded rows-only: ${rowsOnly.mkString(", ")}")
+    assert(SparkEntry.oracleSql == QueryCatalog.rows.map(r => r.name -> r.oracle.toOption.get).toMap)
+    assert(CatalogRow.rowsOnly("q_x", "not SQL-expressible")((s, d) => s.emptyDataFrame).oracle ==
+      Left("not SQL-expressible"))
+    intercept[IllegalArgumentException](CatalogRow.rowsOnly("q_x", " ")((s, d) => s.emptyDataFrame))
   }
 
   test("catalog names are unique and stable-format") {
-    SparkEntry.queries.keys.foreach { k =>
-      assert(k.matches("[a-z0-9_]+"), s"query name $k not snake_case")
-    }
-    assert(SparkEntry.queries.size >= 42)
-    assert(SparkEntry.oracleSql.size >= 33)
+    val names = QueryCatalog.rows.map(_.name)
+    names.foreach(k => assert(k.matches("[a-z0-9_]+"), s"query name $k not snake_case"))
+    assert(names.size == 103 && names.distinct.size == 103, s"${names.size} rows, ${names.distinct.size} names")
+    assert(SparkEntry.queries.size == 103 && SparkEntry.oracleSql.size == 103)
+    // a duplicated name fails the registry instead of shadowing a row
+    val e = intercept[IllegalArgumentException](
+      QueryCatalog.registry(QueryCatalog.rows :+ QueryCatalog.rows.head))
+    assert(e.getMessage.contains(QueryCatalog.rows.head.name))
+  }
+
+  test("select returns the named rows in order and fails on an unknown name") {
+    assert(QueryCatalog.select(Nil).map(_.name) == QueryCatalog.rows.map(_.name))
+    assert(QueryCatalog.select(Seq("q_rollup", " q1_agg", "", "q_rollup")).map(_.name) == Seq("q_rollup", "q1_agg"))
+    val e = intercept[IllegalArgumentException](QueryCatalog.select(Seq("q1_agg", "q1_agg_typo")))
+    assert(e.getMessage.endsWith(": q1_agg_typo"), e.getMessage)
   }
 
   test("flagship entry returns rows on sf0.001 (driver smoke contract)") {
@@ -68,21 +99,22 @@ class QueryCatalogSpec extends SparkTestBase {
     // come from keyed equi-joins (band bucket / gram / cluster), never
     // a cartesian or same-block nested-loop product over data rows
     for (name <- Seq("q_ngram_jaccard", "q_minhash_lsh", "q_decontaminate", "q_simhash")) {
-      val plan = SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian product:\n$plan")
-      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name plans a nested-loop join:\n$plan")
+      val p = plan(name)
+      assert(nodes(p) { case c: CartesianProductExec => c }.isEmpty,
+        s"$name plans a cartesian product:\n$p")
+      assert(nodes(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
+        s"$name plans a nested-loop join:\n$p")
     }
     // q_ivf_knn_join: the query×centroid crossJoin(broadcast) IS a
     // nested-loop by design — O(queries · nlist), nlist is tiny — but a
     // cartesian over DATA rows must still never appear
-    val ivf = SparkEntry.queries("q_ivf_knn_join")(spark, sf()).queryExecution.executedPlan.toString
-    assert(!ivf.contains("CartesianProduct"), s"q_ivf_knn_join plans a cartesian product:\n$ivf")
+    val ivf = plan("q_ivf_knn_join")
+    assert(nodes(ivf) { case c: CartesianProductExec => c }.isEmpty,
+      s"q_ivf_knn_join plans a cartesian product:\n$ivf")
   }
 
   test("retrieval-family plan shapes (round-7 scale contracts)") {
-    def plan(name: String) =
-      SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
-    def scans(p: String) = "Scan parquet".r.findAllIn(p).size
+    def scans(p: SparkPlan) = nodes(p) { case f: FileSourceScanExec => f }.size
 
     // BM25: corpus stats ride ONE 1-row aggregate (broadcast back),
     // top-k is a heap, and since r20 the per-doc counter table is
@@ -92,22 +124,27 @@ class QueryCatalogSpec extends SparkTestBase {
     // reappearing here means the checkpoint was dropped and the
     // corpus is tokenized once per consumer again).
     val bm25 = plan("q_bm25_topk")
-    assert(bm25.contains("TakeOrderedAndProject"), s"bm25 lost its top-k heap:\n$bm25")
+    assert(nodes(bm25) { case t: TakeOrderedAndProjectExec => t }.nonEmpty,
+      s"bm25 lost its top-k heap:\n$bm25")
     assert(scans(bm25) == 0, s"bm25 should read the checkpointed per-doc counters, not re-scan the corpus:\n$bm25")
-    val rddScans = "Scan ExistingRDD".r.findAllIn(bm25).size
+    val rddScans = nodes(bm25) { case r: RDDScanExec => r }.size
     assert(rddScans == 2, s"bm25 should read the per-doc checkpoint exactly twice (stats + scoring):\n$bm25")
 
     // range search: scan + scalar filter, nothing else — no shuffle,
     // no sort, no heap.
     val range = plan("q_range_search")
-    assert(!range.contains("Exchange"), s"range search gained a shuffle:\n$range")
-    assert(!range.contains("TakeOrdered") && !range.contains("Sort"), s"range search gained an ordering step:\n$range")
+    assert(nodes(range) { case e: Exchange => e }.isEmpty, s"range search gained a shuffle:\n$range")
+    val ordering = nodes(range) {
+      case o @ (_: TakeOrderedAndProjectExec | _: SortExec | _: SortMergeJoinExec | _: SortAggregateExec) => o
+    }
+    assert(ordering.isEmpty, s"range search gained an ordering step:\n$range")
 
     // grouping search: the rank-1 filter must be rewritten to
     // WindowGroupLimit (map-side one-row-per-group pruning before the
     // group-key shuffle) — the property that makes it skew-safe.
     val grouped = plan("q_group_search")
-    assert(grouped.contains("WindowGroupLimit"), s"grouping search lost WindowGroupLimit pruning:\n$grouped")
+    assert(nodes(grouped) { case w: WindowGroupLimitExec => w }.nonEmpty,
+      s"grouping search lost WindowGroupLimit pruning:\n$grouped")
 
     // SQ8 one-shot search: fit must be instantiated ONCE — the
     // fit+encode+searchTopK composition planned THREE scans (two full
@@ -118,7 +155,8 @@ class QueryCatalogSpec extends SparkTestBase {
     // hybrid RRF: fusion joins k-row rankings — no cartesian over data
     // rows anywhere in the plan.
     val rrf = plan("q_hybrid_rrf")
-    assert(!rrf.contains("CartesianProduct"), s"hybrid fusion plans a cartesian product:\n$rrf")
+    assert(nodes(rrf) { case c: CartesianProductExec => c }.isEmpty,
+      s"hybrid fusion plans a cartesian product:\n$rrf")
   }
 
   test("salted join/agg are semantically invisible (round-7 skew evidence)") {
@@ -179,9 +217,13 @@ class QueryCatalogSpec extends SparkTestBase {
       "q_ngram_jaccard", "q_minhash_lsh", "q_pipeline_e2e",
       "q_chunk_recursive", "q_chunk_semantic",
       "q_repetition", "q_gopher_full", "q_media_features")) {
-      val plan = SparkEntry.queries(name)(spark, sf()).queryExecution.executedPlan.toString
-      assert(plan.contains(s"LessThan(doc_id,${QueryCatalog.Replica0Cap})"),
-        s"$name must push the replica-0 cap to the scan (PushedFilters):\n$plan")
+      val p = plan(name)
+      val pushed = nodes(p) { case f: FileSourceScanExec => f }.flatMap(_.dataFilters).exists {
+        case LessThan(a: Attribute, Literal(v, _)) => a.name == "doc_id" && v == cap(name)
+        case _ => false
+      }
+      assert(pushed,
+        s"$name must push the replica-0 cap to the scan (PushedFilters):\n$p")
     }
   }
 
@@ -189,30 +231,31 @@ class QueryCatalogSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.max
     // cap < stride: the filter must select exactly the replica-0 family
     // at every ScaleUp decade (replicas live at key >= replica * stride)
-    assert(QueryCatalog.Replica0Cap < graft.tools.ScaleUp.DefaultKeyStride)
-    assert(QueryCatalog.Replica0CapSmall < graft.tools.ScaleUp.DefaultKeyStride)
+    val capped = QueryCatalog.rows.filter(_.cap.isDefined)
+    assert(capped.map(_.name).toSet == QueryCatalog.cappedQueries && capped.size == 19)
+    capped.foreach(r => assert(r.cap.get < graft.tools.ScaleUp.DefaultKeyStride, r.name))
     // cap > max driver-sf key: the no-op-at-gate property — the driver
     // compares the FULL corpus at the sfs it grades, the big sweeps a
     // fixed-density slice. sf0.1 is the largest driver corpus (5000
-    // docs / 2000 vecs); sf0.01 is the correctness gate.
-    def maxKey(table: String, key: String): Long =
-      spark.read.parquet(s"/root/testdata/sf0.1/$table.parquet")
-        .agg(max(key)).head().getLong(0)
-    assert(QueryCatalog.Replica0Cap > maxKey("documents", "doc_id"))
-    assert(QueryCatalog.Replica0CapSmall > maxKey("embeddings", "vec_id"))
-    // single definition site: the catalog source carries no bare cap
-    // literal that could drift from the constants on one side of an
-    // oracle pair (VERDICT r14 #1)
-    val src = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("src/main/scala/graft/queries/QueryCatalog.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // "< 500" also covers "< 5000", and guards the Replica0CapTiny
-    // value (r18 review): a reintroduced bare literal would evade
-    // CapAuditSpec's idiom scan, recreating the q_semantic_dedup
-    // labeling-drift class the named-constant family exists to prevent
-    assert(!src.contains("< 500") && !src.contains("< 2000"),
-      "bare replica-0 cap literal in QueryCatalog.scala — use " +
-        "Replica0Cap/Replica0CapSmall/Replica0CapTiny")
+    // docs / 2000 vecs / 100000 events); sf0.01 is the correctness gate.
+    val sf01 = "/root/testdata/sf0.1"
+    def maxKey(df: org.apache.spark.sql.DataFrame, key: String): Long =
+      df.agg(max(key)).head().getLong(0)
+    val maxDoc = maxKey(spark.read.parquet(s"$sf01/documents.parquet"), "doc_id")
+    Seq("q_scrub_spans", "q_pipeline_e2e", "q_chunk_recursive", "q_gopher_full", "q_media_features")
+      .foreach(n => assert(cap(n) > maxDoc, n))
+    val maxVec = maxKey(spark.read.parquet(s"$sf01/embeddings.parquet"), "vec_id")
+    Seq("q_embed_neardup", "q_embed_neardup_banded", "q_semantic_dedup").foreach(n => assert(cap(n) > maxVec, n))
+    assert(cap("q_stream_neardup") > maxKey(CatalogSupport.eventsRaw(spark, sf01), "event_id"))
+    // the cap values are private to CatalogRow, so a row slices on one
+    // only by declaring it; a bare literal would slip past that — no
+    // file in the catalog carries one ("< 500" also covers "< 5000")
+    val dir = new java.io.File("src/main/scala/graft/queries")
+    assert(dir.isDirectory, s"must run from the repo root (cwd=${new java.io.File(".").getCanonicalPath})")
+    for (f <- dir.listFiles.toSeq if f.getName.endsWith(".scala")) {
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), java.nio.charset.StandardCharsets.UTF_8)
+      assert(!src.contains("< 500") && !src.contains("< 2000") && !src.contains("< 100000"),
+        s"bare replica-0 cap literal in ${f.getName} — declare the row with CatalogRow.capped")
+    }
   }
 }
