@@ -75,6 +75,124 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
+/** Cosine similarity over two numeric arrays in ONE pass with three
+  * left-to-right double accumulators: a·b over the common prefix (as
+  * [[DotProduct]]), a·a over all of `a`, b·b over all of `b`. Returns
+  * (a·b) / (sqrt(a·a) * sqrt(b·b)), null when that denominator is 0.0
+  * — bit-identical to the three-[[DotProduct]] Column form kept as
+  * `VectorFunctions.cosineSimilarityHof`.
+  *
+  * Why one expression rather than that Column form: there `sqrt(dot(q,
+  * q))` of a literal query vector is a foldable subtree, ConstantFolding
+  * turns it into a double, and codegen inlines that double into the Java
+  * source — every new query norm compiled new classes. Here neither
+  * operand is folded on its own, and an array literal reaches generated
+  * code only through `references[]`, so one plan shape compiles once.
+  */
+case class CosineSimilarity(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def ok(t: DataType) = t match {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+      case _ => false
+    }
+    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"cosine_sim needs array<float|double> inputs, got ${left.dataType} / ${right.dataType}")
+  }
+
+  private def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val nx = x.numElements()
+    val ny = y.numElements()
+    val n = math.min(nx, ny)
+    val lf = isFloat(left)
+    val rf = isFloat(right)
+    var ab = 0.0
+    var aa = 0.0
+    var bb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
+      ab += xv * yv
+      aa += xv * xv
+      bb += yv * yv
+      i += 1
+    }
+    while (i < nx) {
+      val xv = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
+      aa += xv * xv
+      i += 1
+    }
+    i = n
+    while (i < ny) {
+      val yv = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
+      bb += yv * yv
+      i += 1
+    }
+    val denom = math.sqrt(aa) * math.sqrt(bb)
+    if (denom == 0.0) null else ab / denom
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lGet = if (isFloat(left)) "getFloat" else "getDouble"
+    val rGet = if (isFloat(right)) "getFloat" else "getDouble"
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val nx = ctx.freshName("nx")
+      val ny = ctx.freshName("ny")
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      val ab = ctx.freshName("ab")
+      val aa = ctx.freshName("aa")
+      val bb = ctx.freshName("bb")
+      val xv = ctx.freshName("xv")
+      val yv = ctx.freshName("yv")
+      val denom = ctx.freshName("denom")
+      s"""
+         |int $nx = $x.numElements();
+         |int $ny = $y.numElements();
+         |int $n = Math.min($nx, $ny);
+         |double $ab = 0.0;
+         |double $aa = 0.0;
+         |double $bb = 0.0;
+         |int $i = 0;
+         |for (; $i < $n; $i++) {
+         |  double $xv = (double) $x.$lGet($i);
+         |  double $yv = (double) $y.$rGet($i);
+         |  $ab += $xv * $yv;
+         |  $aa += $xv * $xv;
+         |  $bb += $yv * $yv;
+         |}
+         |for (; $i < $nx; $i++) {
+         |  double $xv = (double) $x.$lGet($i);
+         |  $aa += $xv * $xv;
+         |}
+         |for ($i = $n; $i < $ny; $i++) {
+         |  double $yv = (double) $y.$rGet($i);
+         |  $bb += $yv * $yv;
+         |}
+         |double $denom = Math.sqrt($aa) * Math.sqrt($bb);
+         |if ($denom == 0.0) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = $ab / $denom;
+         |}
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Squared L2 distance over two numeric arrays — same tight-loop
   * contract as [[DotProduct]]: left-to-right double accumulation of
   * (x−y)², identical bits to the `aggregate(zip_with(...))` HOF form
@@ -998,6 +1116,10 @@ object VectorExpressions {
     */
   def dotFast(a: Column, b: Column): Column =
     GraftBridge.column(DotProduct(GraftBridge.expression(a), GraftBridge.expression(b)))
+
+  /** Column wrapper for [[CosineSimilarity]]. */
+  def cosineFast(a: Column, b: Column): Column =
+    GraftBridge.column(CosineSimilarity(GraftBridge.expression(a), GraftBridge.expression(b)))
 
   /** Column wrapper for [[L2DistanceSq]]. */
   def l2DistanceSqFast(a: Column, b: Column): Column =

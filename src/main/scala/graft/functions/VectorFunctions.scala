@@ -34,8 +34,22 @@ object VectorFunctions {
   /** Euclidean (L2) norm. */
   def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
 
-  /** Cosine similarity; null-safe on zero vectors (returns null). */
-  def cosineSimilarity(a: Column, b: Column): Column = {
+  /** Cosine similarity; null on a zero vector or a null input — the
+    * one-pass codegen'd [[CosineSimilarity]] Expression. One plan shape
+    * compiles once: a literal query vector reaches the generated code as
+    * a referenced object, so a new query (and its norm) reuses the
+    * compiled classes. Bit-identical to [[cosineSimilarityHof]].
+    */
+  def cosineSimilarity(a: Column, b: Column): Column =
+    VectorExpressions.cosineFast(a, b)
+
+  /** Reference three-sum formulation of cosine similarity,
+    * dot(a,b) / (l2Norm(a) * l2Norm(b)) (kept for tests to pin the fast
+    * path bit-for-bit; not for query plans — with a literal operand its
+    * norm constant-folds into the generated source, so each new value
+    * compiles new classes).
+    */
+  def cosineSimilarityHof(a: Column, b: Column): Column = {
     val denom = l2Norm(a) * l2Norm(b)
     when(denom === 0.0, lit(null)).otherwise(dotProduct(a, b) / denom)
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.DotProduct
+import graft.functions.{CosineSimilarity, DotProduct}
 import graft.search.IvfIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
@@ -65,9 +65,15 @@ object IvfTopKPrune extends Rule[LogicalPlan] {
       case _ => false
     }
 
+  private def literalVec(l: Literal): Option[Array[Float]] = l match {
+    case Literal(arr: ArrayData, ArrayType(FloatType, _)) => Some(arr.toFloatArray())
+    case Literal(arr: ArrayData, ArrayType(DoubleType, _)) => Some(arr.toDoubleArray().map(_.toFloat))
+    case _ => None
+  }
+
   private def prune(scoreRef: Expression, child: LogicalPlan): Option[LogicalPlan] = {
     // 1. the sort key must be (or alias) an expression containing a
-    //    DotProduct against a literal query vector
+    //    DotProduct or CosineSimilarity against a literal query vector
     val scoreExpr: Option[Expression] = scoreRef match {
       case a: AttributeReference =>
         child.collectFirst {
@@ -80,19 +86,11 @@ object IvfTopKPrune extends Rule[LogicalPlan] {
     }
     val queryVec: Option[Array[Float]] = scoreExpr.flatMap { e =>
       e.collectFirst {
-        case DotProduct(x, Literal(arr: ArrayData, ArrayType(et, _))) if !x.isInstanceOf[Literal] =>
-          et match {
-            case FloatType => arr.toFloatArray()
-            case DoubleType => arr.toDoubleArray().map(_.toFloat)
-            case _ => null
-          }
-        case DotProduct(Literal(arr: ArrayData, ArrayType(et, _)), x) if !x.isInstanceOf[Literal] =>
-          et match {
-            case FloatType => arr.toFloatArray()
-            case DoubleType => arr.toDoubleArray().map(_.toFloat)
-            case _ => null
-          }
-      }.filter(_ != null)
+        case DotProduct(x, l @ Literal(_: ArrayData, _)) if !x.isInstanceOf[Literal] => literalVec(l)
+        case DotProduct(l @ Literal(_: ArrayData, _), x) if !x.isInstanceOf[Literal] => literalVec(l)
+        case CosineSimilarity(x, l @ Literal(_: ArrayData, _)) if !x.isInstanceOf[Literal] => literalVec(l)
+        case CosineSimilarity(l @ Literal(_: ArrayData, _), x) if !x.isInstanceOf[Literal] => literalVec(l)
+      }.flatten
     }
     if (queryVec.isEmpty) return None
 

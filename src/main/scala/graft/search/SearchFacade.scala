@@ -74,6 +74,9 @@ object SearchFacade {
     }
   }
 
+  private val VietChars: Set[Char] =
+    "àáạảãâầấậẩẫăằắặẳẵèéẹẻẽêềếệểễìíịỉĩòóọỏõôồốộổỗơờớợởỡùúụủũưừứựửữỳýỵỷỹđ".toSet
+
   /** Driver-side C15 (the query is a single driver-side string). Same
     * thresholds as the Column variant: korean > 10%, viet > 5% on the
     * lowercased text, default english.
@@ -82,8 +85,7 @@ object SearchFacade {
     if (text == null || text.isEmpty) return "english"
     val total = text.length.toDouble
     val kr = text.count(c => c >= '가' && c <= '힣')
-    val vietSet = "àáạảãâầấậẩẫăằắặẳẵèéẹẻẽêềếệểễìíịỉĩòóọỏõôồốộổỗơờớợởỡùúụủũưừứựửữỳýỵỷỹđ".toSet
-    val vi = text.toLowerCase(java.util.Locale.ROOT).count(vietSet.contains)
+    val vi = text.toLowerCase(java.util.Locale.ROOT).count(VietChars.contains)
     if (kr / total > 0.1) "korean"
     else if (vi / total > 0.05) "vietnamese"
     else "english"

@@ -153,7 +153,12 @@ object HtmlLoader {
   }
 
   /** Folder immediately under the root ('root' for top-level files) —
-    * config.py:37-43 collection routing key.
+    * config.py:37-43 collection routing key. The root reaches the
+    * generated code only inside the pattern, a string literal held as a
+    * referenced object, so a new input directory reuses the compiled
+    * pass; a value derived from it as an Int (a prefix length) would be
+    * inlined into the Java source and recompile it (SourcesSpec pins
+    * this).
     */
   private def folderName(path: Column, root: String): Column = {
     val rel = regexp_replace(path, s"^file:${java.util.regex.Pattern.quote(root)}/?", "")

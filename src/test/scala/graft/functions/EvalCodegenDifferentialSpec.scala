@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Whole-catalog interpreted-vs-codegen differential for the custom
@@ -82,24 +82,63 @@ class EvalCodegenDifferentialSpec extends SparkTestBase {
   private def render(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(r => bits(r))
 
-  test("interpreted eval is bit-identical to codegen across the expression catalog") {
-    val codegen = render(projected(frame))
-    assert(codegen.nonEmpty && codegen.exists(_.contains("(")), "collect broke")
+  /** `body` evaluated with codegen off (interpreted expressions only). */
+  private def interpreted[T](body: => T): T = {
     val priorFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
     val priorWhole = spark.conf.getOption("spark.sql.codegen.wholeStage")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
-      val interpreted = render(projected(frame))
-      assert(interpreted == codegen,
-        "eval/codegen divergence:\n" + interpreted.zip(codegen).zipWithIndex
-          .collect { case ((i, c), n) if i != c => s"  row $n:\n    interp=$i\n    gen   =$c" }
-          .mkString("\n"))
-    } finally {
+    try body
+    finally {
       priorFactory.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
         spark.conf.set("spark.sql.codegen.factoryMode", _))
       priorWhole.fold(spark.conf.unset("spark.sql.codegen.wholeStage"))(
         spark.conf.set("spark.sql.codegen.wholeStage", _))
     }
+  }
+
+  private def divergence(left: Seq[String], right: Seq[String]): String =
+    left.zip(right).zipWithIndex
+      .collect { case ((l, r), n) if l != r => s"  row $n:\n    $l\n    $r" }
+      .mkString("\n")
+
+  test("interpreted eval is bit-identical to codegen across the expression catalog") {
+    val codegen = render(projected(frame))
+    assert(codegen.nonEmpty && codegen.exists(_.contains("(")), "collect broke")
+    val interp = interpreted(render(projected(frame)))
+    assert(interp == codegen, "eval/codegen divergence (interpreted, then codegen):\n" +
+      divergence(interp, codegen))
+  }
+
+  test("one-pass cosine is bit-identical to the three-sum form in both engine modes") {
+    import spark.implicits._
+    val q = Seq(0.25f, -1f, 3f, 0.5f, 2f, -0.75f)
+    val df = Seq[(Array[Float], Array[Float], Array[Double], Array[Double])](
+      (Array(1f, 2f, 3f, 4f, 5f, 6f), Array(6f, 5f, 4f, 3f, 2f, 1f),
+        Array(0.1, -0.2, 0.3, 1e-300, 7.0, 0.5), Array(3.0, 1.0, -2.0, 4.0, 0.0, 9.0)),
+      // mismatched lengths: dot over the common prefix, norms over each full side
+      (Array(1f, -2f, 3f, 4f, 5f, 6f, 7f), Array(0.5f, 0.5f, 0.5f),
+        Array(2.0, 3.0), Array(1.5, -2.5, 3.5, 4.5, 5.5)),
+      // zero vectors: null
+      (Array(0f, 0f, 0f, 0f, 0f, 0f), Array(1f, 2f, 3f, 4f, 5f, 6f),
+        Array(0.0, 0.0, 0.0), Array(1.0, 2.0, 3.0)),
+      // null inputs: null
+      (null, Array(1f, 2f, 3f, 4f, 5f, 6f), Array(1.0, 2.0, 3.0), null),
+      (Array(1e-40f, -1e-40f, 1e38f, -1e38f, 0.5f, Float.NaN), Array(2f, 2f, 2f, 2f, 2f, 2f),
+        Array(1e-320, 1e300, -1e300), Array(1e-320, 3.0, 4.0))
+    ).toDF("f1", "f2", "d1", "d2")
+    val pairs = Seq("f1" -> "f2", "f1" -> "d1", "d2" -> "f2", "d1" -> "d2", "f2" -> "f2")
+    def cosines(f: (Column, Column) => Column) =
+      render(df.select(pairs.map { case (a, b) => f(col(a), col(b)) } :+
+        f(col("f1"), typedLit(q)) :+ f(typedLit(q), col("d1")): _*))
+    val fused = cosines(VectorFunctions.cosineSimilarity)
+    val threeSum = cosines(VectorFunctions.cosineSimilarityHof)
+    assert(fused == threeSum, "codegen (fused, then three-sum):\n" + divergence(fused, threeSum))
+    assert(fused(2).startsWith("(null,") && fused(3).startsWith("(null,"),
+      s"a zero vector and a null input must score null: $fused")
+    val (fusedI, threeSumI) = interpreted((cosines(VectorFunctions.cosineSimilarity),
+      cosines(VectorFunctions.cosineSimilarityHof)))
+    assert(fusedI == threeSumI, "interpreted (fused, then three-sum):\n" + divergence(fusedI, threeSumI))
+    assert(fusedI == fused, "fused (interpreted, then codegen):\n" + divergence(fusedI, fused))
   }
 }

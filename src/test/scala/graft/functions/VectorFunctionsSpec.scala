@@ -16,6 +16,24 @@ class VectorFunctionsSpec extends SparkTestBase {
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1), s"fast=${r.getDouble(0)} hof=${r.getDouble(1)}"))
   }
 
+  test("one-pass cosine matches the three-sum formulation bit-for-bit on real vectors") {
+    val e = spark.read.parquet(s"${sf()}/embeddings.parquet").limit(200)
+    val q = e.filter(col("vec_id") === 0).head().getSeq[Float](1)
+    val other = e.select(col("embedding").as("other")).limit(1)
+    val rows = e.crossJoin(other).select(
+      VectorFunctions.cosineSimilarity(col("embedding"), typedLit(q)).as("lit"),
+      VectorFunctions.cosineSimilarityHof(col("embedding"), typedLit(q)).as("litRef"),
+      VectorFunctions.cosineSimilarity(col("embedding"), col("other")).as("cols"),
+      VectorFunctions.cosineSimilarityHof(col("embedding"), col("other")).as("colsRef")
+    ).collect()
+    assert(rows.nonEmpty)
+    def bits(d: Any) = if (d == null) null else java.lang.Double.doubleToLongBits(d.asInstanceOf[Double])
+    rows.foreach { r =>
+      assert(bits(r.get(0)) == bits(r.get(1)), s"literal query: ${r.get(0)} vs ${r.get(1)}")
+      assert(bits(r.get(2)) == bits(r.get(3)), s"column pair: ${r.get(2)} vs ${r.get(3)}")
+    }
+  }
+
   test("dot product known values, null propagation, cosine bounds") {
     import spark.implicits._
     val df = Seq(

@@ -12,6 +12,11 @@ class ProductQuantSpec extends SparkTestBase {
 
   private lazy val emb = spark.read.parquet(sf() + "/embeddings.parquet").cache()
 
+  // the cache is this suite's own: later suites' plans over
+  // embeddings.parquet must scan the file, not this InMemoryRelation
+  override def afterAll(): Unit =
+    try emb.unpersist(blocking = true) finally super.afterAll()
+
   test("fit yields m codebooks of ksub centroids with dim/m dims each") {
     val cbs = ProductQuant.fit(emb, m = 8, ksub = 16)
     assert(cbs.length == 8)

@@ -38,6 +38,35 @@ class SearchFacadeSpec extends SparkTestBase {
     assert(SearchFacade.detectQueryLanguageScala("") == "english")
     assert(SearchFacade.detectQueryLanguageScala("한국어 질의입니다") == "korean")
     assert(SearchFacade.detectQueryLanguageScala("hello world") == "english")
+    assert(SearchFacade.detectQueryLanguageScala("Xin chào, tôi là người Việt") == "vietnamese")
+  }
+
+  test("a session of 200 fresh queries compiles once: no query value reaches the generated code") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-search").resolve("store").toString
+    corpus.write.parquet(dir)
+    val store = spark.read.parquet(dir)
+    val english = Seq("spark", "joins", "engine", "window", "query", "plan", "shuffle")
+    val korean = Seq("스파크", "조인", "검색", "문서", "품질", "분산")
+    val queries = (0 until 200).map { i =>
+      val ws = if (i % 2 == 0) english else korean
+      (i.toString +: (0 to i % 4).map(j => ws((i + 3 * j) % ws.size))).mkString(" ")
+    }
+    // the hash embedder's unit vectors share few distinct norms; scaling
+    // by the leading query number gives every query its own norm, the
+    // value the three-sum cosine folded into the Java source
+    val scaled = new graft.embed.Embedder {
+      val dim: Int = embedder.dim
+      def embed(q: String): Array[Float] =
+        embedder.embed(q).map(_ * (1f + q.takeWhile(_.isDigit).toInt / 256f))
+    }
+    def norm(q: String): Double =
+      math.sqrt(scaled.embed(q).foldLeft(0.0)((s, x) => s + x.toDouble * x))
+    assert(queries.map(norm).distinct.size == 200)
+    def run(q: String): Unit =
+      assert(SearchFacade.search(store, q, scaled, k = 2).collect().nonEmpty, q)
+    run(queries.head)
+    val (_, compiles) = graft.CodegenCount.compilesOf(queries.tail.foreach(run))
+    assert(compiles == 0, s"199 queries after the first compiled $compiles classes")
   }
 
   test("Q7: RAG prompt numbers the top-k context docs") {

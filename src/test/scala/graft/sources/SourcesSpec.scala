@@ -45,6 +45,30 @@ class SourcesSpec extends SparkTestBase {
     assert(top.getAs[String]("language") == "english")
   }
 
+  test("HTML loader compiles once per plan shape: a second input directory compiles nothing") {
+    val page = "<html><body><p>A page with plenty of textual content for the loader.</p></body></html>"
+    def tree(root: String): String = {
+      Files.createDirectories(Paths.get(s"$root/lms"))
+      Files.write(Paths.get(s"$root/lms/a.html"), page.getBytes("UTF-8"))
+      Files.write(Paths.get(s"$root/top.html"), page.getBytes("UTF-8"))
+      root
+    }
+    def folders(root: String): (Seq[(String, String)], Long) = {
+      val (rows, compiles) = graft.CodegenCount.compilesOf(HtmlLoader.load(spark, root).collect())
+      (rows.map(r => r.getAs[String]("filename") -> r.getAs[String]("folder_name")).toSeq.sorted, compiles)
+    }
+    val expected = Seq("a.html" -> "lms", "top.html" -> "root")
+    assert(folders(tree(tmpDir()))._1 == expected)
+    // another root, of another length too
+    val (second, compiles) = folders(tree(s"${tmpDir()}/second"))
+    assert(second == expected)
+    assert(compiles == 0, s"a new input directory compiled $compiles classes: the root reached the generated code")
+    // the root as given: a trailing slash; regex metacharacters (not
+    // Hadoop glob ones, which the binaryFile source would expand)
+    assert(folders(tree(tmpDir()) + "/")._1 == expected)
+    assert(folders(tree(s"${tmpDir()}/a+b(c)$$^.d|e"))._1 == expected)
+  }
+
   test("HWP section decode: UTF-16LE whitelist keeps Hangul/ASCII, drops NULs and garbage (S5)") {
     val content = "한글 text 123\n"
     val garbage = "ЁЂ" // Cyrillic — outside whitelist
