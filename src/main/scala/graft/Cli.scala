@@ -19,6 +19,12 @@ import org.apache.spark.sql.functions._
   * (S9). A reference user's `python main.py --stage all` becomes
   * `runMain graft.Cli all --input <docs dir> --work <dir>`.
   *
+  * Each stage has one body that takes its input frame and returns its
+  * checkpoint read back with the schema it was written with. `all`
+  * hands each checkpoint straight to the next body, so no stage infers
+  * a parquet schema; a standalone `transform`, `load` or `validate`
+  * reads its input from the work dir and infers that one schema.
+  *
   * Usage:
   *   graft.Cli <stage> [--input DIR] [--work DIR] [--query TEXT]
   *             [--collection NAME] [--k N] [--source html|hwp|hwpx]
@@ -70,6 +76,15 @@ object Cli {
   private def chunksPath(a: Args) = s"${a.work}/chunks"
   private def storePath(a: Args) = s"${a.work}/store"
 
+  /** Writes `df` to `path` and reads it back with the schema it was
+    * written with: the read lists the files and runs no schema-inference
+    * job.
+    */
+  private def checkpoint(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
   def extract(spark: SparkSession, a: Args): DataFrame = {
     val docs = a.source match {
       case "html" => HtmlLoader.load(spark, a.input)
@@ -77,28 +92,30 @@ object Cli {
       case "hwpx" => HwpLoader.loadHwpx(spark, a.input)
       case other => throw new IllegalArgumentException(s"unknown source $other")
     }
-    docs.write.mode("overwrite").parquet(documentsPath(a))
-    spark.read.parquet(documentsPath(a))
+    checkpoint(docs, documentsPath(a))
   }
 
-  def transform(spark: SparkSession, a: Args): DataFrame = {
-    val docs = spark.read.parquet(documentsPath(a))
+  def transform(spark: SparkSession, a: Args): DataFrame =
+    transformFrom(spark.read.parquet(documentsPath(a)), a)
+
+  private def transformFrom(docs: DataFrame, a: Args): DataFrame = {
     val chunks = Chunker.explodeChunks(docs, "text", "source", ChunkerConfig.default)
-    val deduped = Dedup.exactDedup(chunks, "text", Seq("source", "chunk_index"))
-    deduped.write.mode("overwrite").parquet(chunksPath(a))
-    spark.read.parquet(chunksPath(a))
+    checkpoint(Dedup.exactDedup(chunks, "text", Seq("source", "chunk_index")), chunksPath(a))
   }
 
-  def load(spark: SparkSession, a: Args): DataFrame = {
-    val chunks = spark.read.parquet(chunksPath(a))
+  def load(spark: SparkSession, a: Args): DataFrame =
+    loadFrom(spark.read.parquet(chunksPath(a)), a)
+
+  private def loadFrom(chunks: DataFrame, a: Args): DataFrame = {
     val embedded = Embedders.withEmbedding(chunks, "text", "embedding", Embedders.default)
     val folderCol = if (embedded.columns.contains("folder_name")) "folder_name" else "language"
     new VectorStore(storePath(a)).writePartitioned(TextCleaner.capForStore(embedded), folderCol, "docs_")
-    spark.read.parquet(storePath(a))
   }
 
-  def validate(spark: SparkSession, a: Args): DataFrame = {
-    val store = spark.read.parquet(storePath(a))
+  def validate(spark: SparkSession, a: Args): DataFrame =
+    validateFrom(spark.read.parquet(storePath(a)))
+
+  private def validateFrom(store: DataFrame): DataFrame = {
     val report = QualityMonitor.report(store, "chunk_size_tokens")
     report.show(truncate = false)
     report
@@ -126,8 +143,7 @@ object Cli {
     case "validate" => validate(spark, a)
     case "search" => search(spark, a)
     case "reset" => reset(a)
-    case "all" =>
-      extract(spark, a); transform(spark, a); load(spark, a); validate(spark, a)
+    case "all" => validateFrom(loadFrom(transformFrom(extract(spark, a), a), a))
     case other => throw new IllegalArgumentException(s"unknown stage $other")
   }
 

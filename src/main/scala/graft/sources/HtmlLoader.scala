@@ -4,6 +4,8 @@ import graft.clean.TextCleaner
 import graft.lang.LanguageDetect
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.regex.Pattern
+import scala.util.matching.Regex
 
 /** HTML/JSP directory source (reference html_loader.py, SURVEY.md §2.1
   * S1-S3 + C13). Spark-first shape: the built-in `binaryFile` source
@@ -20,22 +22,26 @@ import org.apache.spark.sql.functions._
   */
 object HtmlLoader {
 
+  private val Comment = Pattern.compile("(?s)<!--.*?-->")
+  private val BoilerplateBlocks = Seq("script", "style", "nav", "footer", "header", "aside")
+    .map(tag => Pattern.compile(s"(?is)<$tag\\b[^>]*>.*?</$tag>"))
+  private val BlockCloser = Pattern.compile("(?i)</(p|div|h[1-6]|li|tr|table|ul|ol|section|article|br)>")
+  private val LineBreak = Pattern.compile("(?i)<br\\s*/?>")
+  private val Tag = Pattern.compile("<[^>]+>")
+
   /** Drop &lt;script&gt;/&lt;style&gt;/nav/footer/header/aside blocks, then strip
     * tags; block-level closers become newlines so paragraph structure
     * survives for the chunker.
     */
   private[sources] def htmlToText(html: String): String = {
     if (html == null) return null
-    var t = html
     // strip comments first so commented-out markup doesn't leak
-    t = t.replaceAll("(?s)<!--.*?-->", " ")
-    for (tag <- Seq("script", "style", "nav", "footer", "header", "aside")) {
-      t = t.replaceAll(s"(?is)<$tag\\b[^>]*>.*?</$tag>", " ")
-    }
+    var t = Comment.matcher(html).replaceAll(" ")
+    for (block <- BoilerplateBlocks) t = block.matcher(t).replaceAll(" ")
     // block-level boundaries → newline (get_text('\n') analog)
-    t = t.replaceAll("(?i)</(p|div|h[1-6]|li|tr|table|ul|ol|section|article|br)>", "\n")
-    t = t.replaceAll("(?i)<br\\s*/?>", "\n")
-    t = t.replaceAll("<[^>]+>", " ")
+    t = BlockCloser.matcher(t).replaceAll("\n")
+    t = LineBreak.matcher(t).replaceAll("\n")
+    t = Tag.matcher(t).replaceAll(" ")
     unescapeEntities(t)
   }
 
@@ -47,10 +53,16 @@ object HtmlLoader {
       .replace("&quot;", "\"")
       .replace("&#39;", "'")
 
-  private def firstGroup(s: String, regex: scala.util.matching.Regex): String =
+  private val Title = "(?is)<title[^>]*>(.*?)</title>".r
+  private val Headings = (1 to 6).map(lvl => lvl -> s"(?is)<h$lvl[^>]*>(.*?)</h$lvl>".r)
+  private val ListOpen = "(?i)<(ul|ol)\\b".r
+  private val TableOpen = "(?i)<table\\b".r
+  private val ParagraphOpen = "(?i)<p\\b".r
+
+  private def firstGroup(s: String, regex: Regex): String =
     regex.findFirstMatchIn(s).map(_.group(1).trim).orNull
 
-  private def countOf(s: String, regex: scala.util.matching.Regex): Int =
+  private def countOf(s: String, regex: Regex): Int =
     regex.findAllMatchIn(s).length
 
   /** C13 — structure record: title, headings (level+text), list/table/
@@ -58,19 +70,18 @@ object HtmlLoader {
     */
   private[sources] def extractStructure(html: String): HtmlStructure = {
     if (html == null) return HtmlStructure(null, Seq.empty, 0, 0, 0)
-    val title = firstGroup(html, "(?is)<title[^>]*>(.*?)</title>".r)
-    val headings = (1 to 6).flatMap { lvl =>
-      s"(?is)<h$lvl[^>]*>(.*?)</h$lvl>".r
+    val headings = Headings.flatMap { case (lvl, heading) =>
+      heading
         .findAllMatchIn(html)
-        .map(m => Heading(lvl, m.group(1).replaceAll("<[^>]+>", " ").trim))
+        .map(m => Heading(lvl, Tag.matcher(m.group(1)).replaceAll(" ").trim))
         .filter(_.text.nonEmpty)
     }
     HtmlStructure(
-      title,
+      firstGroup(html, Title),
       headings,
-      countOf(html, "(?i)<(ul|ol)\\b".r),
-      countOf(html, "(?i)<table\\b".r),
-      countOf(html, "(?i)<p\\b".r)
+      countOf(html, ListOpen),
+      countOf(html, TableOpen),
+      countOf(html, ParagraphOpen)
     )
   }
 

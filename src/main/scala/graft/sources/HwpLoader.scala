@@ -5,8 +5,10 @@ import graft.lang.LanguageDetect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.io.ByteArrayInputStream
+import java.util.regex.Pattern
 import java.util.zip.{Inflater, ZipInputStream}
 import scala.collection.mutable.ArrayBuffer
+import scala.util.matching.Regex
 
 /** HWP / HWPX binary sources (reference hwp_loader.py, SURVEY.md §2.1
   * S4/S5/S7). The reference's primary path shells out to hwp5txt (S6);
@@ -17,9 +19,8 @@ import scala.collection.mutable.ArrayBuffer
   *    bodies, title/author from `*meta*.xml` (hwp_loader.py:417-460).
   *  - HWP v5 BodyText sections (S4/S5): raw zlib deflate streams
   *    (`Inflater(nowrap=true)` ≡ zlib -15) decoded as UTF-16LE with
-  *    the reference's codepoint whitelist (hwp_loader.py:180-239).
-  *    (Full OLE2/CFB container walking is deferred; the section
-  *    decoder accepts pre-extracted stream bytes.)
+  *    the reference's codepoint whitelist (hwp_loader.py:180-239),
+  *    read out of the OLE2/CFB container by [[CfbReader]].
   *
   * All decoders are pure bytes→string functions running inside UDFs at
   * file granularity with per-file error isolation (O9).
@@ -81,47 +82,56 @@ object HwpLoader {
     decodeSectionText(if (inflated != null) inflated else streamBytes)
   }
 
+  private val SectionName = "BodyText/Section(\\d+)".r
+
   /** S4 complete — HWP v5 (CFB container) extract: FileHeader flags
     * bit 0 selects per-section zlib compression; BodyText/Section{i}
     * streams (≤ 100, matching hwp_loader.py:139) are inflated and
     * UTF-16LE-decoded. Returns null text on malformed containers.
     */
-  def extractHwp(bytes: Array[Byte]): String = {
-    try {
-      val all = CfbReader.streams(bytes)
-      val compressed = all.get("FileHeader").exists { fh =>
-        fh.length > 39 && (fh(36) & 0x01) == 1
+  def extractHwp(bytes: Array[Byte]): String =
+    try bodyText(CfbReader.streams(bytes))
+    catch { case _: Throwable => null }
+
+  /** The BodyText of a parsed container; null when it has no section. */
+  private def bodyText(all: Map[String, Array[Byte]]): String = {
+    val compressed = all.get("FileHeader").exists { fh =>
+      fh.length > 39 && (fh(36) & 0x01) == 1
+    }
+    val sections = all.toSeq
+      .flatMap {
+        case (SectionName(idx), data) if idx.toInt < 100 => Some(idx.toInt -> data)
+        case _ => None
       }
-      val SectionName = "BodyText/Section(\\d+)".r
-      val sections = all.toSeq
-        .flatMap {
-          case (SectionName(idx), data) if idx.toInt < 100 => Some(idx.toInt -> data)
-          case _ => None
+      .sortBy(_._1)
+    if (sections.isEmpty) null
+    else
+      sections
+        .map { case (_, data) =>
+          if (compressed) {
+            val inflated = inflateRaw(data)
+            decodeSectionText(if (inflated != null) inflated else data)
+          } else decodeSectionText(data)
         }
-        .sortBy(_._1)
-      if (sections.isEmpty) null
-      else
-        sections
-          .map { case (_, data) =>
-            if (compressed) {
-              val inflated = inflateRaw(data)
-              decodeSectionText(if (inflated != null) inflated else data)
-            } else decodeSectionText(data)
-          }
-          .mkString("\n")
-    } catch { case _: Throwable => null }
+        .mkString("\n")
   }
 
   /** Text + document metadata from the HwpSummaryInformation property
-    * set (title/subject/author/keywords — hwp_loader.py:358-371 parity).
+    * set (title/subject/author/keywords — hwp_loader.py:358-371 parity),
+    * from one parse of the container.
     */
   def extractHwpDoc(bytes: Array[Byte]): (String, String, String, String, String) = {
-    val text = extractHwp(bytes)
-    if (text == null) return (null, null, null, null, null)
+    val none = (null, null, null, null, null)
+    val streams =
+      try CfbReader.streams(bytes)
+      catch { case _: Throwable => return none }
+    val text =
+      try bodyText(streams)
+      catch { case _: Throwable => null }
+    if (text == null) return none
     val meta =
       try {
-        CfbReader
-          .streams(bytes)
+        streams
           .collectFirst { case (name, data) if name.endsWith("HwpSummaryInformation") => data }
           .map(OlePropertySet.stringProperties)
           .getOrElse(Map.empty)
@@ -175,15 +185,18 @@ object HwpLoader {
       .filter(length(col("text")) >= minChars)
   }
 
-  private def xmlElementText(xml: String): String =
-    xml
-      .replaceAll("(?s)<!--.*?-->", " ")
-      .replaceAll("<[^>]+>", " ")
-      .replaceAll("&lt;", "<")
-      .replaceAll("&gt;", ">")
-      .replaceAll("&amp;", "&")
-      .replaceAll("&quot;", "\"")
-      .replaceAll("[ \\t]+", " ")
+  private val XmlComment = Pattern.compile("(?s)<!--.*?-->")
+  private val XmlTag = Pattern.compile("<[^>]+>")
+  private val Blanks = Pattern.compile("[ \\t]+")
+
+  private def xmlElementText(xml: String): String = {
+    val t = XmlTag.matcher(XmlComment.matcher(xml).replaceAll(" ")).replaceAll(" ")
+      .replace("&lt;", "<")
+      .replace("&gt;", ">")
+      .replace("&amp;", "&")
+      .replace("&quot;", "\"")
+    Blanks.matcher(t).replaceAll(" ")
+  }
 
   case class HwpxDoc(text: String, title: String, author: String)
 
@@ -204,8 +217,8 @@ object HwpLoader {
           val content = new String(zis.readAllBytes(), "UTF-8")
           if (name.contains("section")) sections += name -> xmlElementText(content)
           else {
-            title = firstTag(content, "title").orElse(firstTag(content, "dc:title")).orNull
-            author = firstTag(content, "creator").orElse(firstTag(content, "dc:creator")).orNull
+            title = firstTag(content, TitleTags)
+            author = firstTag(content, CreatorTags)
           }
         }
         e = zis.getNextEntry
@@ -216,10 +229,13 @@ object HwpLoader {
     } catch { case _: Throwable => HwpxDoc(null, null, null) }
   }
 
-  private def firstTag(xml: String, tag: String): Option[String] =
-    s"(?is)<(?:\\w+:)?$tag[^>]*>(.*?)</(?:\\w+:)?$tag>".r
-      .findFirstMatchIn(xml)
-      .map(_.group(1).trim)
+  private def tagPattern(tag: String): Regex = s"(?is)<(?:\\w+:)?$tag[^>]*>(.*?)</(?:\\w+:)?$tag>".r
+  private val TitleTags = Seq(tagPattern("title"), tagPattern("dc:title"))
+  private val CreatorTags = Seq(tagPattern("creator"), tagPattern("dc:creator"))
+
+  /** The trimmed body of the first tag pattern that matches, else null. */
+  private def firstTag(xml: String, tags: Seq[Regex]): String =
+    tags.iterator.flatMap(_.findFirstMatchIn(xml)).nextOption().map(_.group(1).trim).orNull
 
   // nondeterministic (r19): same duplicate-evaluation guard as hwpUdf
   private val hwpxUdf = udf { (bytes: Array[Byte]) =>

@@ -35,18 +35,25 @@ final class VectorStore(root: String) {
     * one collection reads `collection=X/language=korean/` and nothing
     * else. Keep extra levels low-cardinality (language ~5 values) —
     * every level multiplies directory count.
+    *
+    * Returns the written store read back with the schema it was written
+    * with, without a schema-inference job: Spark lays it out as a plain
+    * [[readAll]] does, data columns first, then the partition columns
+    * in directory order.
     */
   def writePartitioned(
       df: DataFrame,
       collectionCol: String,
       prefix: String,
       extraPartitionCols: Seq[String] = Nil
-  ): Unit =
-    df.withColumn("collection", TextCleaner.collectionName(col(collectionCol), prefix))
-      .write
+  ): DataFrame = {
+    val out = df.withColumn("collection", TextCleaner.collectionName(col(collectionCol), prefix))
+    out.write
       .mode(SaveMode.Overwrite)
       .partitionBy("collection" +: extraPartitionCols: _*)
       .parquet(root)
+    out.sparkSession.read.schema(out.schema).parquet(root)
+  }
 
   def readCollection(spark: SparkSession, collection: String): DataFrame =
     spark.read.parquet(dir(collection))

@@ -1,11 +1,96 @@
 package graft
 
+import graft.sources.HwpPayloads
+import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
 /** End-to-end stage runner over a real HTML directory — the reference
   * user's `--stage all` path (main.py:466-559 parity).
   */
 class CliSpec extends SparkTestBase {
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  private def write(path: String, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(Paths.get(path).getParent)
+    Files.write(Paths.get(path), bytes)
+  }
+
+  /** Two folders (two store collections), long pages (several chunks
+    * each) and one page planted twice (exact-dedup work).
+    */
+  private lazy val htmlCorpus: String = {
+    val input = tmp("graft-cli-all-html")
+    def page(i: Int) = {
+      val body = (1 to 30).map(j => s"<p>Guide $i paragraph $j about spark joins and aggregation pipelines.</p>").mkString
+      s"<html><head><title>Guide $i</title></head><body><h1>Guide $i</h1>$body</body></html>".getBytes("UTF-8")
+    }
+    (1 to 3).foreach(i => write(s"$input/guides/g$i.html", page(i)))
+    write(s"$input/notes/n1.jsp", page(4))
+    write(s"$input/notes/copy.html", page(1))
+    input
+  }
+
+  private lazy val hwpxCorpus: String = {
+    val input = tmp("graft-cli-all-hwpx")
+    def doc(i: Int) = HwpPayloads.buildHwpxZip(
+      (0 to 1).map(s => (1 to 15).map(j => s"<hp:p>공지 $i 섹션 $s 문단 $j 스파크 조인과 집계 파이프라인 설명입니다.</hp:p>").mkString),
+      s"<opf:metadata><dc:title>공지 $i</dc:title><dc:creator>작성자 $i</dc:creator></opf:metadata>")
+    (1 to 2).foreach(i => write(s"$input/notices/n$i.hwpx", doc(i)))
+    write(s"$input/forms/f1.hwpx", doc(3))
+    input
+  }
+
+  /** Runs a stage and returns what it printed. */
+  private def runCli(argv: String*): String = {
+    val out = new ByteArrayOutputStream()
+    Console.withOut(new PrintStream(out, true, "UTF-8"))(Cli.run(spark, Cli.parse(argv.toArray)))
+    out.toString("UTF-8")
+  }
+
+  private def rows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  test("all ≡ the four stages run one at a time: same rows, schemas and report") {
+    // html collections come from folders, hwpx ones from the language
+    Seq(("html", htmlCorpus, 2), ("hwpx", hwpxCorpus, 1)).foreach { case (kind, input, collections) =>
+      val all = tmp(s"graft-cli-all-$kind")
+      val staged = tmp(s"graft-cli-staged-$kind")
+      val allReport = runCli("all", "--input", input, "--work", all, "--source", kind)
+      runCli("extract", "--input", input, "--work", staged, "--source", kind)
+      runCli("transform", "--work", staged)
+      runCli("load", "--work", staged)
+      val stagedReport = runCli("validate", "--work", staged)
+
+      Seq("documents", "chunks", "store").foreach { d =>
+        val (a, s) = (spark.read.parquet(s"$all/$d"), spark.read.parquet(s"$staged/$d"))
+        assert(a.schema == s.schema, s"$kind $d: schema")
+        assert(rows(s"$all/$d") == rows(s"$staged/$d"), s"$kind $d: rows")
+      }
+      val store = spark.read.parquet(s"$all/store")
+      assert(store.columns.last == "collection", s"$kind: ${store.columns.mkString(",")}")
+      assert(store.select("collection").distinct().count() == collections, kind)
+      assert(allReport.contains("recommendation") && allReport == stagedReport, s"$kind:\n$allReport\n$stagedReport")
+
+      // the frames a stage hands forward carry the schema a plain read of
+      // its checkpoint gives
+      val a = Cli.parse(Array("extract", "--input", input, "--work", all, "--source", kind))
+      assert(Cli.extract(spark, a).schema == spark.read.parquet(s"$all/documents").schema, kind)
+      assert(Cli.transform(spark, a).schema == spark.read.parquet(s"$all/chunks").schema, kind)
+      assert(Cli.load(spark, a).schema == spark.read.parquet(s"$all/store").schema, kind)
+    }
+  }
+
+  test("all runs 6 Spark jobs per source kind: no stage infers the schema of a checkpoint") {
+    Seq("html" -> htmlCorpus, "hwpx" -> hwpxCorpus).foreach { case (kind, input) =>
+      val (_, jobs) = JobCount.jobsOf(spark)(
+        runCli("all", "--input", input, "--work", tmp(s"graft-cli-jobs-$kind"), "--source", kind))
+      // three checkpoint writes, one map-stage job per exchange under AQE
+      // (the dedup and the report aggregate) and the report's show; each
+      // parquet read without a schema would add an inference job
+      assert(jobs == 6, s"$kind: Cli all ran $jobs Spark jobs")
+    }
+  }
 
   test("extract → transform → load → validate → search → reset over an HTML corpus") {
     val input = Files.createTempDirectory("graft-cli-in").toString

@@ -56,6 +56,21 @@ class VectorStoreSpec extends SparkTestBase {
     )
   }
 
+  test("writePartitioned hands back the store as a plain read sees it, from its one write job") {
+    import spark.implicits._
+    val store = new VectorStore(Files.createTempDirectory("graft-store-back").toString)
+    val df = Seq(("a", "guides", "korean", 3), ("b", "notices", "english", 4))
+      .toDF("id", "folder", "language", "tokens")
+    // `language` sits between data columns: the partition columns still come last
+    val (written, jobs) = graft.JobCount.jobsOf(spark)(
+      store.writePartitioned(df, "folder", "docs_", extraPartitionCols = Seq("language")))
+    assert(jobs == 1, s"$jobs jobs: the read-back inferred the schema")
+    val plain = store.readAll(spark)
+    assert(written.schema == plain.schema)
+    assert(written.columns.toSeq == Seq("id", "folder", "tokens", "collection", "language"))
+    assert(written.collect().map(_.toString).sorted.toSeq == plain.collect().map(_.toString).sorted.toSeq)
+  }
+
   test("IVF labeled store: cluster filter prunes partitions; stored search == in-memory search") {
     val store = new VectorStore(Files.createTempDirectory("graft-ivf").toString)
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet")
