@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.functions.{VectorExpressions, VectorFunctions}
+import graft.functions.{PivotSet, VectorExpressions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -11,35 +11,25 @@ import org.apache.spark.sql.functions._
   * 8-gram but sits next to its source in embedding space).
   *
   * Scale shape: the benchmark set is SMALL by nature (eval suites are
-  * thousands of items, the corpus is billions), so it rides into every
-  * task as a plan literal — the [[graft.functions.NearestPivotCosine]]
-  * codegen expression computes the argmax-cosine benchmark per corpus
-  * row in one pass: NO join, NO shuffle, cost = n·|bench| multiply-adds
-  * exactly like IVF centroid assignment. The matched benchmark id and
-  * the cosine are then a literal-array lookup + one [[VectorFunctions
-  * .cosineSimilarity]] against the matched vector only (not |bench|
-  * of them). Ties in the argmax go to the LOWEST benchmark index
-  * (NearestPivotCosine's contract) = the lowest benchmark id when the
-  * caller passes the set id-sorted.
+  * thousands of items, the corpus is billions), so it is one
+  * [[graft.functions.PivotSet]] read by two expressions per corpus row:
+  * [[graft.functions.NearestPivotCosine]] finds the argmax-cosine
+  * benchmark in one pass (NO join, NO shuffle, cost = n·|bench|
+  * multiply-adds exactly like IVF centroid assignment), and
+  * [[graft.functions.PivotCosine]] scores the matched vector only (not
+  * |bench| of them). The set is inline up to `maxLiteralBytes` and
+  * broadcast above it, so a real eval suite never rides in task
+  * closures; both forms give identical rows. Ties in the argmax go to
+  * the LOWEST benchmark index = the lowest benchmark id when the caller
+  * passes the set id-sorted.
   */
 object SemanticDecon {
-
-  /** Above this matrix size (k × dim × 4 bytes) the benchmark set
-    * ships as a broadcast variable instead of a plan literal: a
-    * literal is serialized into EVERY task closure and the codegen
-    * references array, so a 50k-item × 1024-dim eval suite would cost
-    * ~200 MB per task binary; a broadcast ships once per executor and
-    * the plan stays flat (the bloomContainmentPairs precedent). Below
-    * the threshold the literal is cheaper — no block-manager fetch,
-    * and the graded rows pin it.
-    */
-  val MaxLiteralBytes: Long = 1L << 20
 
   /** Corpus rows with max-cosine ≥ tau: (idCol, bench_id, cosine).
     * `bench` must be id-sorted for the lowest-id tie contract. Zero
     * corpus vectors (cosine undefined) are never flagged. Output is
-    * IDENTICAL on both routes (SemanticDeconSpec pins literal ≡
-    * broadcast bit-for-bit).
+    * IDENTICAL whichever form the set takes (SemanticDeconSpec pins
+    * inline ≡ broadcast bit-for-bit).
     */
   def flag(
       corpus: DataFrame,
@@ -47,29 +37,15 @@ object SemanticDecon {
       vecCol: String,
       bench: Seq[(Long, Array[Float])],
       tau: Double,
-      maxLiteralBytes: Long = MaxLiteralBytes
+      maxLiteralBytes: Long = PivotSet.MaxLiteralBytes
   ): DataFrame = {
     require(bench.nonEmpty, "benchmark set is empty")
     require(bench.map(_._1) == bench.map(_._1).sorted, "bench must be id-sorted")
-    val pivots = bench.map(_._2)
-    val benchIds = typedLit(bench.map(_._1))
-    val matBytes = pivots.iterator.map(_.length.toLong * 4L).sum
-    val scored =
-      if (matBytes <= maxLiteralBytes) {
-        val mat = typedLit(pivots.map(_.toSeq))
-        corpus
-          .withColumn("__bi", VectorExpressions.nearestPivotCosine(col(vecCol), pivots))
-          .withColumn("cosine",
-            VectorFunctions.cosineSimilarity(col(vecCol), element_at(mat, col("__bi") + 1)))
-      } else {
-        val bc = VectorExpressions.broadcastPivots(corpus.sparkSession, pivots)
-        corpus
-          .withColumn("__bi", VectorExpressions.bcastNearestPivotCosine(col(vecCol), bc))
-          .withColumn("cosine",
-            VectorExpressions.bcastPivotCosine(col(vecCol), col("__bi"), bc))
-      }
-    scored
-      .withColumn("bench_id", element_at(benchIds, col("__bi") + 1))
+    val pivots = PivotSet.of(corpus.sparkSession, Seq(bench.map(_._2)), maxLiteralBytes)
+    corpus
+      .withColumn("__bi", VectorExpressions.nearestPivotCosine(col(vecCol), pivots))
+      .withColumn("cosine", VectorExpressions.pivotCosine(col(vecCol), col("__bi"), pivots))
+      .withColumn("bench_id", element_at(typedLit(bench.map(_._1)), col("__bi") + 1))
       .filter(col("cosine") >= tau)
       .select(col(idCol), col("bench_id"), col("cosine"))
   }

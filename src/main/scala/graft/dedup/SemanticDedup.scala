@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.functions.VectorFunctions
+import graft.functions.{PivotSet, VectorExpressions, VectorFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   * Two variants:
   *
   *  - [[semanticDedup]] — FIXED pivot vectors supplied by the caller.
-  *    Assignment is a single shuffle-free projection (pivots ride
-  *    into codegen as array literals, the same broadcast-centroid
-  *    idiom as [[graft.search.IvfIndex]] transform), so the only
+  *    Assignment is a single shuffle-free projection over one
+  *    [[graft.functions.PivotSet]] (inline in the plan, broadcast above
+  *    1 MiB — the broadcast-centroid idiom of
+  *    [[graft.search.IvfIndex]] transform), so the only
   *    shuffle in the whole operator is the within-cluster self-join.
   *    Deterministic and engine-portable — the driver's DuckDB oracle
   *    replays assignment, pairing, and the keep rule exactly.
@@ -54,23 +55,20 @@ import org.apache.spark.sql.functions._
 object SemanticDedup {
 
   /** Label every row with its nearest pivot (cosine) via the
-    * [[graft.functions.NearestPivotCosine]] codegen expression — one
-    * generated loop per row over the bound k × dim pivot matrix
-    * (argmax ties → the earliest pivot, matching the oracle's ORDER BY
-    * cos DESC, pid ASC). `pivots` must be in cluster-id order
-    * (cluster i = pivots(i)). Shuffle-free. An expression-tree
-    * formulation (k cosines under `greatest` + a `when` chain, or
-    * array_max/array_position) was measured ~8× slower per row: the
-    * former duplicates every cosine subtree into a method too large to
-    * JIT at test scale, the latter is CodegenFallback.
+    * [[graft.functions.NearestPivotCosine]] expression — one pass per
+    * row over the k × dim pivot matrix (argmax ties → the earliest
+    * pivot, matching the oracle's ORDER BY cos DESC, pid ASC). `pivots`
+    * must be in cluster-id order (cluster i = pivots(i)). Shuffle-free.
+    * An expression-tree formulation (k cosines under `greatest` + a
+    * `when` chain, or array_max/array_position) was measured ~8× slower
+    * per row: the former duplicates every cosine subtree into a method
+    * too large to JIT at test scale, the latter is CodegenFallback.
     */
   def assignClusters(
       df: DataFrame, vecCol: String, pivots: Seq[Array[Float]],
-      clusterCol: String = "cluster"): DataFrame = {
-    require(pivots.nonEmpty, "pivots must be non-empty")
-    df.withColumn(clusterCol,
-      graft.functions.VectorExpressions.nearestPivotCosine(col(vecCol), pivots))
-  }
+      clusterCol: String = "cluster"): DataFrame =
+    df.withColumn(clusterCol, VectorExpressions.nearestPivotCosine(
+      col(vecCol), PivotSet.of(df.sparkSession, Seq(pivots))))
 
   /** Within-cluster dominance filter: drop a row of `keep` iff a
     * smaller-id row shares a bucket with it in `asg` and is ≥
@@ -143,14 +141,12 @@ object SemanticDedup {
     */
   def lloydStep(
       df: DataFrame, vecCol: String, pivots: Seq[Array[Float]]): DataFrame = {
-    val asg = assignClusters(df, vecCol, pivots)
-    val cosToOwn = {
-      // cosine to the row's own pivot: element_at over the pivot matrix
-      val pivMat = array(pivots.map(p => typedLit(p.toSeq)): _*)
-      VectorFunctions.cosineSimilarity(col(vecCol), element_at(pivMat, col("cluster") + 1))
-    }
-    asg
-      .withColumn("__cos", cosToOwn)
+    // one set for the assignment and the cosine to the row's own pivot,
+    // so the plan carries the matrix once
+    val set = PivotSet.of(df.sparkSession, Seq(pivots))
+    df
+      .withColumn("cluster", VectorExpressions.nearestPivotCosine(col(vecCol), set))
+      .withColumn("__cos", VectorExpressions.pivotCosine(col(vecCol), col("cluster"), set))
       .groupBy(col("cluster"))
       .agg(
         count(lit(1)).as("n"),

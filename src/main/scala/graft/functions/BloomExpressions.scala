@@ -27,8 +27,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * `mightContainBinary(s.getBytes(UTF_8))`, with no intermediate
   * java.lang.String materialized here).
   *
-  * The filter rides a broadcast HANDLE (the
-  * [[BroadcastNearestPivotCosine]] pattern): tasks carry only the
+  * The filter rides a broadcast HANDLE (as a broadcast
+  * [[PivotSet]] does): tasks carry only the
   * reference, the bits ship once per executor through the block
   * manager, and the codegen reference object is `this` so both
   * interpreted eval and generated code share one probe body.

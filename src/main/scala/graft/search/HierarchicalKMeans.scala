@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.functions.{VectorAggregates, VectorExpressions}
+import graft.functions.{PivotSet, VectorAggregates, VectorExpressions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,61 +17,16 @@ import org.apache.spark.sql.functions._
   *
   * Level 1 trains with MLlib on a bounded sample
   * ([[IvfIndex.build]]); level 2 is a grouped Lloyd loop run on a
-  * bounded sample: per-row assignment via the codegen'd
-  * [[graft.functions.GroupedNearestPivotCosine]] (each cell owns its
-  * own sub-pivot matrix, selected per row), update via ONE
+  * bounded sample: per-row assignment via
+  * [[graft.functions.NearestPivotCosine]] over a stacked
+  * [[graft.functions.PivotSet]] (each cell owns its own sub-pivot
+  * matrix, selected per row by the cell id; the set is broadcast once
+  * it outgrows a plan literal), update via ONE
   * map-side-combinable aggregate over (cell, sub). The driver only
   * ever holds the k × dim centroid matrix — the same broadcast-scale
   * object flat training produces.
   */
 object HierarchicalKMeans {
-
-  /** Above this sub-pivot stack size (total floats × 4 bytes), grouped
-    * assignment routes through the broadcast-variable expression
-    * instead of a plan literal: with k ∝ n the stack grows without
-    * bound (1 GB at k = 4 M, dim 64) and a literal ships in every task
-    * closure. Identical output either route (spec-pinned).
-    */
-  val MaxLiteralBytes: Long = 1L << 20
-
-  // one broadcast per (SparkContext, matrix stack) — keyed weakly on
-  // the stack so a model assigned repeatedly in one session ships its
-  // stack once. The owning context is validated on every hit: a
-  // Broadcast created under a stopped session is dead (executors of a
-  // NEW context cannot fetch its blocks), and destroyed broadcasts are
-  // invalid — either condition evicts the entry and re-broadcasts
-  // under the caller's context (ADVICE r13).
-  private val bcCache = new java.util.WeakHashMap[
-    Seq[Seq[Array[Float]]],
-    (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[(Array[Array[Array[Float]]], Array[Array[Double]])])]()
-
-  /** Grouped nearest-sub-pivot column with the literal/broadcast route
-    * chosen by stack size — the single entry every assignment site
-    * (train's Lloyd loop, assign, assignMulti) goes through.
-    */
-  private def groupedAssignCol(
-      df: DataFrame,
-      vec: org.apache.spark.sql.Column,
-      cell: org.apache.spark.sql.Column,
-      mats: Seq[Seq[Array[Float]]]): org.apache.spark.sql.Column = {
-    val bytes = mats.iterator.flatten.map(_.length.toLong * 4L).sum
-    if (bytes <= MaxLiteralBytes)
-      VectorExpressions.groupedNearestPivotCosine(vec, cell, mats)
-    else {
-      val sc = df.sparkSession.sparkContext
-      val bc = bcCache.synchronized {
-        val got = bcCache.get(mats)
-        if (got != null && (got._1 eq sc) && !got._1.isStopped) got._2
-        else {
-          val b = VectorExpressions.broadcastGroupedPivots(df.sparkSession, mats)
-          bcCache.put(mats, (sc, b))
-          b
-        }
-      }
-      VectorExpressions.bcastGroupedNearestPivotCosine(vec, cell, bc)
-    }
-  }
 
   /** Trained model: level-1 cell centroids + per-cell sub-centroid
     * matrices. `clusterId = cell * stride + sub` (stride = max
@@ -118,9 +73,11 @@ object HierarchicalKMeans {
     // level 1: coarse cells (MLlib, its own bounded sample inside)
     val cfg = graft.model.IndexConfig.default.copy(nlist = k1)
     val (_, cells) = IvfIndex.build(sample, vecCol, cfg, seed)
+    val spark = df.sparkSession
     val celled = sample
       .select(col(vecCol).as("__v"))
-      .withColumn("__cell", VectorExpressions.nearestPivotCosine(col("__v"), cells.toSeq))
+      .withColumn("__cell",
+        VectorExpressions.nearestPivotCosine(col("__v"), PivotSet.of(spark, Seq(cells.toSeq))))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // deterministic init: first k2 rows per cell by vector hash
@@ -141,7 +98,7 @@ object HierarchicalKMeans {
       for (_ <- 1 to iters) {
         val assigned = celled.withColumn(
           "__sub",
-          groupedAssignCol(celled, col("__v"), col("__cell"), mats))
+          VectorExpressions.nearestPivotCosine(col("__v"), PivotSet.of(spark, mats), col("__cell")))
         val updated = assigned
           .groupBy("__cell", "__sub")
           .agg(VectorAggregates.vectorMean(col("__v")).as("__m"))
@@ -162,11 +119,15 @@ object HierarchicalKMeans {
     */
   def assign(df: DataFrame, vecCol: String, model: Model, clusterCol: String = "cluster"): DataFrame =
     df
-      .withColumn("__cell", VectorExpressions.nearestPivotCosine(col(vecCol), model.cells))
-      .withColumn(clusterCol,
-        col("__cell") * model.stride +
-          groupedAssignCol(df, col(vecCol), col("__cell"), model.subs))
+      .withColumn("__cell", VectorExpressions.nearestPivotCosine(
+        col(vecCol), PivotSet.of(df.sparkSession, Seq(model.cells))))
+      .withColumn(clusterCol, col("__cell") * model.stride + subCol(df, vecCol, model))
       .drop("__cell")
+
+  /** The row's sub-pivot within its level-1 cell `__cell`. */
+  private def subCol(df: DataFrame, vecCol: String, model: Model): org.apache.spark.sql.Column =
+    VectorExpressions.nearestPivotCosine(
+      col(vecCol), PivotSet.of(df.sparkSession, model.subs), col("__cell"))
 
   /** MULTI-PROBE labeling: each row is exploded over its top-`probes`
     * level-1 cells (sub-pivot resolved within each probed cell), so
@@ -182,11 +143,9 @@ object HierarchicalKMeans {
     require(probes >= 1 && probes <= model.cells.size,
       s"probes must be in [1, ${model.cells.size}], got $probes")
     df
-      .withColumn("__cell",
-        explode(VectorExpressions.topPivotsCosine(col(vecCol), model.cells, probes)))
-      .withColumn(clusterCol,
-        col("__cell") * model.stride +
-          groupedAssignCol(df, col(vecCol), col("__cell"), model.subs))
+      .withColumn("__cell", explode(VectorExpressions.topPivotsCosine(
+        col(vecCol), PivotSet.of(df.sparkSession, Seq(model.cells)), probes)))
+      .withColumn(clusterCol, col("__cell") * model.stride + subCol(df, vecCol, model))
       .drop("__cell")
   }
 }

@@ -57,9 +57,9 @@ class SemanticDeconSpec extends SparkTestBase {
       SemanticDecon.flag(corpus, "vec_id", "embedding", bench, 0.2, maxLiteralBytes = maxLit)
         .orderBy("vec_id").collect().map(_.toSeq).toSeq
     val literal = rows(Long.MaxValue)
-    val bcast = rows(0L) // force the broadcast route
+    val shared = rows(0L) // force the broadcast route
     assert(literal.nonEmpty, "degenerate fixture: nothing flagged")
-    assert(bcast == literal) // includes the cosine DOUBLES, bit-for-bit
+    assert(shared == literal) // includes the cosine DOUBLES, bit-for-bit
     // the broadcast route must stay join/shuffle-free too
     val plan = SemanticDecon.flag(corpus, "vec_id", "embedding", bench, 0.2, 0L)
       .queryExecution.executedPlan.toString
@@ -75,27 +75,49 @@ class SemanticDeconSpec extends SparkTestBase {
     assert(out == Seq((1L, 5L))) // tie → lowest id; zero vector never flagged
   }
 
+  private def serSize(o: AnyRef): Int = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(o)
+    oos.close()
+    bos.size
+  }
+
+  private def pivotsOf(k: Int): Seq[Array[Float]] =
+    (0 until k).map(i => Array.tabulate(64)(j => (i * 64 + j).toFloat))
+
   test("plan size stays flat in |bench| on the broadcast route, grows on the literal route") {
     import org.apache.spark.sql.GraftBridge
-    def serSize(c: org.apache.spark.sql.Column): Int = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val oos = new java.io.ObjectOutputStream(bos)
-      oos.writeObject(GraftBridge.expression(c))
-      oos.close()
-      bos.size
-    }
-    def pivotsOf(k: Int): Seq[Array[Float]] =
-      (0 until k).map(i => Array.tabulate(64)(j => (i * 64 + j).toFloat))
+    import graft.functions.PivotSet
     import graft.functions.VectorExpressions._
-    val smallLit = serSize(nearestPivotCosine(col("v"), pivotsOf(8)))
-    val bigLit = serSize(nearestPivotCosine(col("v"), pivotsOf(512)))
+    def sizeOf(k: Int, maxLiteralBytes: Long): Int = serSize(GraftBridge.expression(
+      nearestPivotCosine(col("v"), PivotSet.of(spark, Seq(pivotsOf(k)), maxLiteralBytes))))
+    val smallLit = sizeOf(8, Long.MaxValue)
+    val bigLit = sizeOf(512, Long.MaxValue)
     assert(bigLit > smallLit + 512 * 64, // literal grows with the matrix (4B/float)
       s"literal route should grow: $smallLit → $bigLit")
-    val smallBc = serSize(bcastNearestPivotCosine(col("v"), broadcastPivots(spark, pivotsOf(8))))
-    val bigBc = serSize(bcastNearestPivotCosine(col("v"), broadcastPivots(spark, pivotsOf(512))))
+    val smallBc = sizeOf(8, 0L)
+    val bigBc = sizeOf(512, 0L)
     assert(math.abs(bigBc - smallBc) < 256,
       s"broadcast route must stay flat: $smallBc → $bigBc")
     assert(bigBc < bigLit / 10, s"broadcast ($bigBc) must be far below literal ($bigLit)")
+  }
+
+  test("the inline route's projection carries the benchmark matrix once") {
+    val corpus = spark.read.parquet(s"${sf()}/embeddings.parquet") // 64-dim
+    // every expression of the optimized plan, in one stream: an object
+    // both the argmax and the cosine reference is written once
+    def planBytes(k: Int): Int = {
+      val bench = pivotsOf(k).zipWithIndex.map { case (p, i) => (i.toLong, p) }
+      val flagged = SemanticDecon.flag(corpus, "vec_id", "embedding", bench, 0.5, Long.MaxValue)
+      serSize(flagged.queryExecution.optimizedPlan.flatMap(_.expressions).toList)
+    }
+    val floats = (512 - 8) * 64
+    val growth = planBytes(512) - planBytes(8)
+    info(f"+$growth B for $floats more floats (${growth.toDouble / floats}%.2f B/float)")
+    assert(growth >= 4 * floats, s"the matrix must be in the plan: +$growth B for $floats floats")
+    assert(growth < 5 * floats, // a second copy would add another ≥ 4 B/float
+      s"+$growth B for $floats more floats: the matrix ships more than once")
   }
 
   test("real embeddings: no join or shuffle in the plan, flags are deterministic") {

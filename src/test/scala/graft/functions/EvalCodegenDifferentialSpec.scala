@@ -59,24 +59,27 @@ class EvalCodegenDifferentialSpec extends SparkTestBase {
   private def projected(df: DataFrame): DataFrame = {
     val mns = array((0 until 6).map(_ => lit(-6.0)): _*)
     val mxs = array((0 until 6).map(_ => lit(6.0)): _*)
-    val bc = VectorExpressions.broadcastPivots(spark, pivots)
-    val gbc = VectorExpressions.broadcastGroupedPivots(spark, matrices)
-    df.select(
+    // each pivot expression over both forms of its set
+    val forms = Seq("lit" -> Long.MaxValue, "bc" -> 0L)
+    val pivotCols = forms.flatMap { case (form, maxBytes) =>
+      val flat = PivotSet.of(spark, Seq(pivots), maxBytes)
+      val grouped = PivotSet.of(spark, matrices, maxBytes)
+      Seq(
+        VectorExpressions.nearestPivotCosine(col("a"), flat).as(s"np_$form"),
+        VectorExpressions.topPivotsCosine(col("a"), flat, 3).as(s"top3_$form"),
+        VectorExpressions.nearestPivotCosine(col("a"), grouped, col("cell")).as(s"gnp_$form"),
+        VectorExpressions.pivotCosine(col("a"), col("cell"), flat).as(s"pc_$form"))
+    }
+    df.select(Seq(
       VectorFunctions.dotProduct(col("a"), col("b")).as("dot"),
       VectorFunctions.l2DistanceSq(col("a"), col("b")).as("l2sq"),
       VectorFunctions.normalize(col("a")).as("norm"),
-      VectorFunctions.cosineSimilarity(col("a"), col("b")).as("cos"),
-      VectorExpressions.nearestPivotCosine(col("a"), pivots).as("np"),
-      VectorExpressions.topPivotsCosine(col("a"), pivots, 3).as("top3"),
-      VectorExpressions.groupedNearestPivotCosine(col("a"), col("cell"), matrices).as("gnp"),
-      VectorExpressions.bcastNearestPivotCosine(col("a"), bc).as("bnp"),
-      VectorExpressions.bcastPivotCosine(col("a"), col("cell"), bc).as("bpc"),
-      VectorExpressions.bcastGroupedNearestPivotCosine(col("a"), col("cell"), gbc).as("bgnp"),
+      VectorFunctions.cosineSimilarity(col("a"), col("b")).as("cos")) ++ pivotCols ++ Seq(
       VectorExpressions.sq8Encode(col("a"), mns, mxs).as("sq8"),
       VectorExpressions.sq8Decode(
         VectorExpressions.sq8Encode(col("a"), mns, mxs), mns, mxs).as("sq8rt"),
       RegexChain(col("a").cast("string"), graft.clean.TextCleaner.BatteryStages).as("chain")
-    )
+    ): _*)
   }
 
   private def render(df: DataFrame): Seq[String] =

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 class VectorFunctionsSpec extends SparkTestBase {
 
+  private def flat(pivots: Seq[Array[Float]]): PivotSet = PivotSet.of(spark, Seq(pivots))
+
   test("codegen dot product matches HOF formulation bit-for-bit on real vectors") {
     val e = spark.read.parquet(s"${sf()}/embeddings.parquet").limit(200)
     val q = e.filter(col("vec_id") === 0).head().getSeq[Float](1)
@@ -109,20 +111,20 @@ class VectorFunctionsSpec extends SparkTestBase {
       case ((c, i), rest) => when(c === g, lit(i)).otherwise(rest)
     }
     val both = e.select(
-      VectorExpressions.nearestPivotCosine(col("embedding"), pivots).as("fast"),
+      VectorExpressions.nearestPivotCosine(col("embedding"), flat(pivots)).as("fast"),
       ref.as("ref"))
     both.collect().foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
     // exact-duplicate pivot forces a tie: must pick the lower index
     import spark.implicits._
     val dupPivots = Seq(pivots.head, pivots(1), pivots.head)
     val tied = Seq(Tuple1(pivots.head.toSeq)).toDF("embedding")
-      .select(VectorExpressions.nearestPivotCosine(col("embedding"), dupPivots).as("c"))
+      .select(VectorExpressions.nearestPivotCosine(col("embedding"), flat(dupPivots)).as("c"))
       .head().getInt(0)
     assert(tied == 0, s"tie must resolve to the lowest pivot index, got $tied")
     // zero vector: deterministic last cluster
     val z = Seq(Tuple1(Seq(0f, 0f))).toDF("embedding")
       .select(VectorExpressions.nearestPivotCosine(col("embedding"),
-        Seq(Array(1f, 0f), Array(0f, 1f))).as("c"))
+        flat(Seq(Array(1f, 0f), Array(0f, 1f)))).as("c"))
       .head().getInt(0)
     assert(z == 1)
   }
@@ -133,8 +135,8 @@ class VectorFunctionsSpec extends SparkTestBase {
       .select("embedding").collect().map(_.getSeq[Float](0).toArray).toSeq
     val rows = e.select(
       col("vec_id"), col("embedding"),
-      VectorExpressions.topPivotsCosine(col("embedding"), pivots, 3).as("top3"),
-      VectorExpressions.nearestPivotCosine(col("embedding"), pivots).as("best")).collect()
+      VectorExpressions.topPivotsCosine(col("embedding"), flat(pivots), 3).as("top3"),
+      VectorExpressions.nearestPivotCosine(col("embedding"), flat(pivots)).as("best")).collect()
     def cos(a: Seq[Float], b: Array[Float]): Double = {
       def dot(x: Seq[Float], y: Seq[Float]) = x.zip(y).map { case (p, q) => p.toDouble * q.toDouble }.sum
       dot(a, b.toSeq) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b.toSeq, b.toSeq)))
@@ -159,14 +161,15 @@ class VectorFunctionsSpec extends SparkTestBase {
     val withCell = e.withColumn("cell", (col("vec_id") % 3).cast("int"))
     val got = withCell.select(
       col("vec_id"), col("cell"),
-      VectorExpressions.groupedNearestPivotCosine(col("embedding"), col("cell"), mats).as("sub"),
+      VectorExpressions.nearestPivotCosine(
+        col("embedding"), PivotSet.of(spark, mats), col("cell")).as("sub"),
       col("embedding")).collect()
     got.foreach { r =>
       val cell = r.getInt(1)
       val single = spark.createDataFrame(java.util.List.of(r), r.schema)
       // per-cell reference: run NearestPivotCosine with just that cell's matrix
       val ref = single.select(
-        VectorExpressions.nearestPivotCosine(col("embedding"), mats(cell)).as("s"))
+        VectorExpressions.nearestPivotCosine(col("embedding"), flat(mats(cell))).as("s"))
         .head().getInt(0)
       assert(r.getInt(2) == ref, s"vec ${r.getLong(0)} cell $cell")
     }
@@ -181,11 +184,13 @@ class VectorFunctionsSpec extends SparkTestBase {
     val withCell = e.withColumn("cell", (col("vec_id") % 3).cast("int"))
       // cell ids outside [0, #cells) must clamp identically on both routes
       .withColumn("cell", when(col("vec_id") === 0, lit(99)).otherwise(col("cell")))
-    val bc = VectorExpressions.broadcastGroupedPivots(spark, mats)
+    val inline = PivotSet.of(spark, mats, maxLiteralBytes = Long.MaxValue)
+    val bc = PivotSet.of(spark, mats, maxLiteralBytes = 0L)
+    assert(inline.isInstanceOf[PivotSet.Inline] && bc.isInstanceOf[PivotSet.Broadcasted])
     val rows = withCell.select(
       col("vec_id"),
-      VectorExpressions.groupedNearestPivotCosine(col("embedding"), col("cell"), mats).as("lit"),
-      VectorExpressions.bcastGroupedNearestPivotCosine(col("embedding"), col("cell"), bc).as("bc"))
+      VectorExpressions.nearestPivotCosine(col("embedding"), inline, col("cell")).as("lit"),
+      VectorExpressions.nearestPivotCosine(col("embedding"), bc, col("cell")).as("bc"))
       .collect()
     rows.foreach(r => assert(r.getInt(1) == r.getInt(2), s"vec ${r.getLong(0)}"))
   }
