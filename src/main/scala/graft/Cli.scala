@@ -1,14 +1,10 @@
 package graft
 
-import graft.chunk.Chunker
 import graft.clean.TextCleaner
-import graft.dedup.Dedup
-import graft.embed.{Embedders, HashEmbedder}
-import graft.lang.LanguageDetect
-import graft.model.ChunkerConfig
+import graft.embed.Embedders
 import graft.quality.QualityMonitor
 import graft.search.SearchFacade
-import graft.sources.{HtmlLoader, HwpLoader}
+import graft.sources.DocumentSource
 import graft.store.VectorStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,11 +15,14 @@ import org.apache.spark.sql.functions._
   * (S9). A reference user's `python main.py --stage all` becomes
   * `runMain graft.Cli all --input <docs dir> --work <dir>`.
   *
-  * Each stage has one body that takes its input frame and returns its
-  * checkpoint read back with the schema it was written with. `all`
-  * hands each checkpoint straight to the next body, so no stage infers
-  * a parquet schema; a standalone `transform`, `load` or `validate`
-  * reads its input from the work dir and infers that one schema.
+  * The stages run the spine's definitions ([[Pipeline]]): extract loads
+  * the `--source` kind through [[DocumentSource]], and load writes one
+  * collection per folder for every kind. Each stage has one body that
+  * takes its input frame and returns its checkpoint read back with the
+  * schema it was written with. `all` hands each checkpoint straight to
+  * the next body, so no stage infers a parquet schema; a standalone
+  * `transform`, `load` or `validate` reads its input from the work dir
+  * and infers that one schema.
   *
   * Usage:
   *   graft.Cli <stage> [--input DIR] [--work DIR] [--query TEXT]
@@ -64,7 +63,12 @@ object Cli {
           val v = value
           a.copy(k = v.toIntOption.filter(_ >= 1).getOrElse(
             throw new IllegalArgumentException(s"flag --k needs an integer >= 1, got '$v'")))
-        case "--source" => a.copy(source = value)
+        case "--source" =>
+          val v = value
+          if (!DocumentSource.kinds.contains(v))
+            throw new IllegalArgumentException(
+              s"flag --source needs one of ${DocumentSource.kinds.keys.mkString("|")}, got '$v'")
+          a.copy(source = v)
         case other => throw new IllegalArgumentException(s"unknown flag $other")
       }
       i += 2
@@ -85,32 +89,21 @@ object Cli {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
-  def extract(spark: SparkSession, a: Args): DataFrame = {
-    val docs = a.source match {
-      case "html" => HtmlLoader.load(spark, a.input)
-      case "hwp" => HwpLoader.loadHwp(spark, a.input)
-      case "hwpx" => HwpLoader.loadHwpx(spark, a.input)
-      case other => throw new IllegalArgumentException(s"unknown source $other")
-    }
-    checkpoint(docs, documentsPath(a))
-  }
+  def extract(spark: SparkSession, a: Args): DataFrame =
+    checkpoint(DocumentSource.load(spark, a.input, DocumentSource.kinds(a.source)), documentsPath(a))
 
   def transform(spark: SparkSession, a: Args): DataFrame =
     transformFrom(spark.read.parquet(documentsPath(a)), a)
 
-  private def transformFrom(docs: DataFrame, a: Args): DataFrame = {
-    val chunks = Chunker.explodeChunks(docs, "text", "source", ChunkerConfig.default)
-    checkpoint(Dedup.exactDedup(chunks, "text", Seq("source", "chunk_index")), chunksPath(a))
-  }
+  private def transformFrom(docs: DataFrame, a: Args): DataFrame =
+    checkpoint(Pipeline.chunks(docs), chunksPath(a))
 
   def load(spark: SparkSession, a: Args): DataFrame =
     loadFrom(spark.read.parquet(chunksPath(a)), a)
 
-  private def loadFrom(chunks: DataFrame, a: Args): DataFrame = {
-    val embedded = Embedders.withEmbedding(chunks, "text", "embedding", Embedders.default)
-    val folderCol = if (embedded.columns.contains("folder_name")) "folder_name" else "language"
-    new VectorStore(storePath(a)).writePartitioned(TextCleaner.capForStore(embedded), folderCol, "docs_")
-  }
+  private def loadFrom(chunks: DataFrame, a: Args): DataFrame =
+    new VectorStore(storePath(a))
+      .writePartitioned(TextCleaner.capForStore(Pipeline.embedded(chunks)), "folder_name", Pipeline.CollectionPrefix)
 
   def validate(spark: SparkSession, a: Args): DataFrame =
     validateFrom(spark.read.parquet(storePath(a)))

@@ -69,4 +69,9 @@ object GraftBridge {
     */
   def applyInjectedFunctions(spark: SparkSession, ext: SparkSessionExtensions): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (the listener bus is private[spark]).
+    */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 }

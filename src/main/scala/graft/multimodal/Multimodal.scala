@@ -586,12 +586,8 @@ object Multimodal {
   }
 
   /** Read a directory of media files as (path, modificationTime,
-    * length, content) via the built-in binaryFile source (S3/S4 shape).
+    * length, content) through the documents' file read (S3/S4 shape).
     */
   def readBinaryDir(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read
-      .format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(dir)
+    graft.sources.DocumentSource.files(spark, dir, glob)
 }

@@ -485,7 +485,7 @@ object MultimodalRows extends CatalogFamily {
     * tab/space collapse, and meta tag capture.
     */
   val qHwpxExtract: Q = (s, dir) => {
-    import graft.sources.{HwpLoader, HwpPayloads}
+    import graft.sources.{DocumentSource, HwpPayloads}
     val gen = udf { (id: Long) =>
       val meta = s"""<?xml version="1.0"?><opf:metadata><dc:title>문서 $id</dc:title>""" +
         s"""<dc:creator>작성자 ${id % 7}</dc:creator></opf:metadata>"""
@@ -505,17 +505,13 @@ object MultimodalRows extends CatalogFamily {
         HwpPayloads.buildHwpxZip(Seq(s0, s1), meta)
       }
     }
-    // nondeterministic (r19): the isNotNull filter otherwise gets
-    // inferred below the projection AND below the rebalance exchange —
-    // every container was built+parsed twice, the first time in ONE
-    // task (plan-verified; the hwp twin profiled an 812 ms single-task
-    // filter stage ahead of the 32-task projection).
-    val parse = udf { (bytes: Array[Byte]) =>
-      val d = HwpLoader.extractHwpx(bytes)
-      if (d.text == null) null else (d.text, d.title, d.author)
-    }.asNondeterministic()
+    // the source's parse, nondeterministic: the isNotNull filter
+    // otherwise gets inferred below the projection AND below the
+    // rebalance exchange — every container was built+parsed twice, the
+    // first time in ONE task (plan-verified; the hwp twin profiled an
+    // 812 ms single-task filter stage ahead of the 32-task projection).
     rebalanced(tbl(s, dir, "documents").select(col("doc_id")))
-      .withColumn("p", parse(gen(col("doc_id"))))
+      .withColumn("p", DocumentSource.Hwpx.parse(gen(col("doc_id"))))
       .filter(col("p").isNotNull)
       .select(
         col("doc_id"),
@@ -548,7 +544,7 @@ object MultimodalRows extends CatalogFamily {
     * header / flipped magic) that must yield null, not throw (O9).
     */
   val qHwpExtract: Q = (s, dir) => {
-    import graft.sources.{HwpLoader, HwpPayloads}
+    import graft.sources.{DocumentSource, HwpPayloads}
     val gen = udf { (id: Long) =>
       // O9: corrupt containers — even ids: a valid container truncated
       // below the 512-byte CFB header (read must fail, not garbage-
@@ -568,15 +564,9 @@ object MultimodalRows extends CatalogFamily {
           title = s"제목 $id",
           author = s"필자 ${id % 5}")
     }
-    // nondeterministic (r19): see qHwpxExtract — stops the inferred
-    // isNotNull filter from re-evaluating build+parse below the
-    // rebalance exchange (812 ms single-task stage, plan-verified).
-    val parse = udf { (bytes: Array[Byte]) =>
-      val d = HwpLoader.extractHwpDoc(bytes)
-      if (d._1 == null) null else (d._1, d._2, d._3)
-    }.asNondeterministic()
+    // the source's parse, nondeterministic: see qHwpxExtract
     rebalanced(tbl(s, dir, "documents").select(col("doc_id")))
-      .withColumn("p", parse(gen(col("doc_id"))))
+      .withColumn("p", DocumentSource.Hwp.parse(gen(col("doc_id"))))
       .filter(col("p").isNotNull)
       .select(
         col("doc_id"),

@@ -1,9 +1,6 @@
 package graft.sources
 
-import graft.clean.TextCleaner
-import graft.lang.LanguageDetect
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.io.ByteArrayInputStream
 import java.util.regex.Pattern
 import java.util.zip.{Inflater, ZipInputStream}
@@ -22,8 +19,9 @@ import scala.util.matching.Regex
   *    the reference's codepoint whitelist (hwp_loader.py:180-239),
   *    read out of the OLE2/CFB container by [[CfbReader]].
   *
-  * All decoders are pure bytes→string functions running inside UDFs at
-  * file granularity with per-file error isolation (O9).
+  * All decoders are pure bytes→string functions; [[DocumentSource]]
+  * reads the files and runs them at file granularity with per-file
+  * error isolation (O9), as its hwp and hwpx kinds.
   */
 object HwpLoader {
 
@@ -89,9 +87,7 @@ object HwpLoader {
     * streams (≤ 100, matching hwp_loader.py:139) are inflated and
     * UTF-16LE-decoded. Returns null text on malformed containers.
     */
-  def extractHwp(bytes: Array[Byte]): String =
-    try bodyText(CfbReader.streams(bytes))
-    catch { case _: Throwable => null }
+  def extractHwp(bytes: Array[Byte]): String = extractHwpDoc(bytes)._1
 
   /** The BodyText of a parsed container; null when it has no section. */
   private def bodyText(all: Map[String, Array[Byte]]): String = {
@@ -107,12 +103,7 @@ object HwpLoader {
     if (sections.isEmpty) null
     else
       sections
-        .map { case (_, data) =>
-          if (compressed) {
-            val inflated = inflateRaw(data)
-            decodeSectionText(if (inflated != null) inflated else data)
-          } else decodeSectionText(data)
-        }
+        .map { case (_, data) => if (compressed) decodeSection(data) else decodeSectionText(data) }
         .mkString("\n")
   }
 
@@ -145,56 +136,18 @@ object HwpLoader {
     )
   }
 
-  // nondeterministic (r19, guide-on-UDF-duplication): the isNotNull
-  // filter above this UDF otherwise gets pushed/copied below the
-  // projection and the CFB parse runs TWICE per row (plan-verified).
-  private val hwpUdf = udf { (bytes: Array[Byte]) =>
-    val d = extractHwpDoc(bytes)
-    if (d._1 == null) null else d
-  }.asNondeterministic()
-
   /** Load a directory of binary .hwp (CFB) files into the document
     * schema with HWP-strict cleaning.
     */
-  def loadHwp(spark: SparkSession, dir: String, minChars: Int = 10): DataFrame = {
-    val raw = spark.read
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.hwp")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-
-    raw
-      .withColumn("parsed", hwpUdf(col("content")))
-      .filter(col("parsed").isNotNull) // O9
-      .select(
-        col("path").as("source"),
-        element_at(split(col("path"), "/"), -1).as("filename"),
-        lit("hwp").as("file_type"),
-        col("length").as("file_size"),
-        col("modificationTime").as("modified_time"),
-        col("parsed._1").as("raw_text"),
-        col("parsed._2").as("title"),
-        col("parsed._3").as("author"),
-        col("parsed._4").as("subject"),
-        col("parsed._5").as("keywords")
-      )
-      .withColumn("text", TextCleaner.cleanHwpText(col("raw_text")))
-      .drop("raw_text")
-      .withColumn("char_count", length(col("text")))
-      .withColumn("language", LanguageDetect.detectContentLanguage(col("text")))
-      .filter(length(col("text")) >= minChars)
-  }
+  def loadHwp(spark: SparkSession, dir: String): DataFrame =
+    DocumentSource.load(spark, dir, DocumentSource.Hwp)
 
   private val XmlComment = Pattern.compile("(?s)<!--.*?-->")
   private val XmlTag = Pattern.compile("<[^>]+>")
   private val Blanks = Pattern.compile("[ \\t]+")
 
   private def xmlElementText(xml: String): String = {
-    val t = XmlTag.matcher(XmlComment.matcher(xml).replaceAll(" ")).replaceAll(" ")
-      .replace("&lt;", "<")
-      .replace("&gt;", ">")
-      .replace("&amp;", "&")
-      .replace("&quot;", "\"")
+    val t = HtmlLoader.unescapeEntities(XmlTag.matcher(XmlComment.matcher(xml).replaceAll(" ")).replaceAll(" "))
     Blanks.matcher(t).replaceAll(" ")
   }
 
@@ -237,40 +190,10 @@ object HwpLoader {
   private def firstTag(xml: String, tags: Seq[Regex]): String =
     tags.iterator.flatMap(_.findFirstMatchIn(xml)).nextOption().map(_.group(1).trim).orNull
 
-  // nondeterministic (r19): same duplicate-evaluation guard as hwpUdf
-  private val hwpxUdf = udf { (bytes: Array[Byte]) =>
-    val d = extractHwpx(bytes)
-    if (d.text == null) null else (d.text, d.title, d.author)
-  }.asNondeterministic()
-
   /** Load a directory of .hwpx files into the document schema with the
     * reference's HWP-strict cleaning (C12) and metadata
     * (hwp_loader.py:358-371).
     */
-  def loadHwpx(spark: SparkSession, dir: String, minChars: Int = 10): DataFrame = {
-    val raw = spark.read
-      .format("binaryFile")
-      .option("pathGlobFilter", "*.hwpx")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-
-    raw
-      .withColumn("parsed", hwpxUdf(col("content")))
-      .filter(col("parsed").isNotNull) // O9 + S8 empty drop
-      .select(
-        col("path").as("source"),
-        element_at(split(col("path"), "/"), -1).as("filename"),
-        lit("hwpx").as("file_type"),
-        col("length").as("file_size"),
-        col("modificationTime").as("modified_time"),
-        col("parsed._1").as("raw_text"),
-        col("parsed._2").as("title"),
-        col("parsed._3").as("author")
-      )
-      .withColumn("text", TextCleaner.cleanHwpText(col("raw_text")))
-      .drop("raw_text")
-      .withColumn("char_count", length(col("text")))
-      .withColumn("language", LanguageDetect.detectContentLanguage(col("text")))
-      .filter(length(col("text")) >= minChars)
-  }
+  def loadHwpx(spark: SparkSession, dir: String): DataFrame =
+    DocumentSource.load(spark, dir, DocumentSource.Hwpx)
 }

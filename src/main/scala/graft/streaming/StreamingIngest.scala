@@ -1,11 +1,7 @@
 package graft.streaming
 
-import graft.chunk.Chunker
+import graft.Pipeline
 import graft.clean.TextCleaner
-import graft.dedup.Dedup
-import graft.embed.{Embedder, Embedders}
-import graft.lang.LanguageDetect
-import graft.model.ChunkerConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -14,29 +10,21 @@ import org.apache.spark.sql.types.StructType
 /** Structured Streaming ingest — the incremental upgrade over the
   * reference's daily full-rebuild Airflow batch (SURVEY.md §2.7
   * "Streaming"): new document files land in a directory, each
-  * micro-batch runs the same clean → chunk → dedup → embed pipeline
-  * and appends to the partitioned collection store. Exactly-once via
-  * the checkpoint + parquet sink commit protocol.
+  * micro-batch runs the spine's clean → language → S8 → chunk → dedup
+  * → embed definitions ([[graft.Pipeline]], the same ones `Cli`'s
+  * batch stages run) and appends to the store partitioned by folder.
+  * Exactly-once via the checkpoint + parquet sink commit protocol. The
+  * micro-batches are written without the insert-time caps (C18): the
+  * input contract (source, folder_name, text) has no `filename`.
   */
 object StreamingIngest {
 
-  /** The batch transformation shared by streaming and batch paths —
-    * one definition, two execution modes (the Spark idiom the
-    * reference's per-DAG copies of the pipeline lack).
+  /** One micro-batch through the spine: the definitions the batch
+    * stages run — one definition, two execution modes (the Spark idiom
+    * the reference's per-DAG copies of the pipeline lack).
     */
-  def transformBatch(
-      docs: DataFrame,
-      cfg: ChunkerConfig = ChunkerConfig.default,
-      embedder: Embedder = Embedders.default
-  ): DataFrame = {
-    val cleaned = docs
-      .withColumn("text", TextCleaner.cleanText(col("text")))
-      .withColumn("language", LanguageDetect.detectContentLanguage(col("text")))
-      .filter(length(col("text")) >= 10)
-    val chunks = Chunker.explodeChunks(cleaned, "text", "source", cfg)
-    val deduped = Dedup.exactDedup(chunks, "text", Seq("source", "chunk_index"))
-    Embedders.withEmbedding(deduped, "text", "embedding", embedder)
-  }
+  def transformBatch(docs: DataFrame): DataFrame =
+    Pipeline.embedded(Pipeline.chunks(Pipeline.documents(docs, TextCleaner.cleanText)))
 
   /** Watch `inputDir` for parquet document files and pipe micro-batches
     * into the collection store at `storeDir`, partitioned by folder.
@@ -50,9 +38,6 @@ object StreamingIngest {
       storeDir: String,
       checkpointDir: String,
       schema: StructType,
-      folderCol: String = "folder_name",
-      cfg: ChunkerConfig = ChunkerConfig.default,
-      embedder: Embedder = Embedders.default,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
     val stream = spark.readStream
@@ -63,9 +48,9 @@ object StreamingIngest {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = transformBatch(batch, cfg, embedder)
-          .withColumn("collection", TextCleaner.collectionName(col(folderCol), "docs_"))
-        out.write
+        transformBatch(batch)
+          .withColumn("collection", TextCleaner.collectionName(col("folder_name"), Pipeline.CollectionPrefix))
+          .write
           .mode("append")
           .partitionBy("collection")
           .parquet(storeDir)

@@ -3,7 +3,7 @@ package graft.tools
 import graft.{Bench, Sessions}
 import graft.queries.{CatalogRow, CatalogSupport, QueryCatalog}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
@@ -14,7 +14,8 @@ import scala.collection.mutable.ArrayBuffer
   *  - `profile <sfDir> <iters> [query…]`: per-stage profile (stage
   *    wall, task time, executor CPU, shuffle, input, spill). Each row is
   *    prepared and warmed once untimed, then run `iters` times through
-  *    Bench's noop sink; the stage table is that of the LAST run.
+  *    Bench's noop sink. Each run's executor CPU is printed with their
+  *    median; the stage table is that of the LAST run.
   *  - `scans <sfDir> [query…]`: the "pruning defeats exchange reuse"
   *    audit. With AQE off, classic ReuseExchange collapses canonically
   *    equal exchange subtrees, so a relation still scanned more than
@@ -90,18 +91,23 @@ object Inspect {
     rows.foreach { r =>
       val (n, fn) = (r.name, r.q)
       Bench.runNoop(fn(spark, sfDir)) // warm: JIT, codegen, footers
-      val walls = (1 to iters).map { i =>
+      val (walls, cpus) = (1 to iters).map { i =>
         stages.synchronized(stages.clear())
         val t0 = System.nanoTime()
         spark.sparkContext.setJobDescription(s"$n#$i")
         Bench.runNoop(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      }
+        val wall = (System.nanoTime() - t0) / 1e9
+        GraftBridge.drainListeners(spark)
+        (wall, stages.synchronized(stages.map(_.cpuMs).sum))
+      }.unzip
       // Bench's single-thread calibration leg labels the host state
       // each profile was measured under
       val cal = Bench.calibrate()._1
-      val totCpu = stages.synchronized(stages.map(_.cpuMs).sum)
-      println(f"\n===== $n  walls=${walls.map(w => f"$w%.3f").mkString(", ")}  cal=$cal%.3f  sumCpu=${totCpu}ms =====")
+      val sorted = cpus.sorted
+      val medianCpu = (sorted((sorted.size - 1) / 2) + sorted(sorted.size / 2)) / 2
+      println(f"\n===== $n  walls=${walls.map(w => f"$w%.3f").mkString(", ")}  cal=$cal%.3f  " +
+        f"cpuMs=${cpus.mkString(", ")}  medianCpu=${medianCpu}ms =====")
+      println(s"stages of run #$iters:")
       println(f"${"stage"}%-6s ${"wall_ms"}%8s ${"task_ms"}%9s ${"cpu_ms"}%8s ${"tasks"}%6s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"in_MB"}%8s ${"spill"}%6s  name")
       stages.synchronized(stages.sortBy(_.id)).foreach { r =>
         println(f"${r.id}%-6d ${r.wallMs}%8d ${r.taskTimeMs}%9d ${r.cpuMs}%8d ${r.tasks}%6d ${r.shuffleReadMB}%9.2f ${r.shuffleWriteMB}%9.2f ${r.inputMB}%8.2f ${r.spillMB}%6.1f  ${r.name}")

@@ -41,6 +41,16 @@ class CliSpec extends SparkTestBase {
     input
   }
 
+  private lazy val hwpCorpus: String = {
+    val input = tmp("graft-cli-all-hwp")
+    def doc(i: Int) = HwpPayloads.buildHwpCfb(
+      (0 to 1).map(s => (1 to 15).map(j => s"공지 $i 섹션 $s 문단 $j 스파크 조인과 집계 파이프라인 설명입니다.").mkString(" ")),
+      compressed = i % 2 == 0)
+    (1 to 2).foreach(i => write(s"$input/notices/n$i.hwp", doc(i)))
+    write(s"$input/d3.hwp", doc(3))
+    input
+  }
+
   /** Runs a stage and returns what it printed. */
   private def runCli(argv: String*): String = {
     val out = new ByteArrayOutputStream()
@@ -52,8 +62,9 @@ class CliSpec extends SparkTestBase {
     spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
 
   test("all ≡ the four stages run one at a time: same rows, schemas and report") {
-    // html collections come from folders, hwpx ones from the language
-    Seq(("html", htmlCorpus, 2), ("hwpx", hwpxCorpus, 1)).foreach { case (kind, input, collections) =>
+    // one collection per folder for every kind: guides/ and notes/,
+    // notices/ and forms/
+    Seq(("html", htmlCorpus, 2), ("hwpx", hwpxCorpus, 2)).foreach { case (kind, input, collections) =>
       val all = tmp(s"graft-cli-all-$kind")
       val staged = tmp(s"graft-cli-staged-$kind")
       val allReport = runCli("all", "--input", input, "--work", all, "--source", kind)
@@ -82,7 +93,7 @@ class CliSpec extends SparkTestBase {
   }
 
   test("all runs 6 Spark jobs per source kind: no stage infers the schema of a checkpoint") {
-    Seq("html" -> htmlCorpus, "hwpx" -> hwpxCorpus).foreach { case (kind, input) =>
+    Seq("html" -> htmlCorpus, "hwp" -> hwpCorpus, "hwpx" -> hwpxCorpus).foreach { case (kind, input) =>
       val (_, jobs) = JobCount.jobsOf(spark)(
         runCli("all", "--input", input, "--work", tmp(s"graft-cli-jobs-$kind"), "--source", kind))
       // three checkpoint writes, one map-stage job per exchange under AQE
@@ -196,6 +207,11 @@ class CliSpec extends SparkTestBase {
   test("parse: an unknown stage is rejected before any session starts") {
     val e = intercept[IllegalArgumentException](Cli.parse(Array("nope", "--work", "/w")))
     assert(e.getMessage.contains("nope"))
+  }
+
+  test("parse: an unknown --source names the flag before any session starts") {
+    val e = intercept[IllegalArgumentException](Cli.parse(Array("extract", "--source", "pdf")))
+    assert(e.getMessage.contains("--source") && e.getMessage.contains("pdf"))
   }
 
   test("unknown stage/flag rejected") {

@@ -24,17 +24,7 @@ class SessionsSpec extends AnyFunSuite {
   }
 
   test("SparkSession.builder appears in src/main only inside the factory") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory,
-      s"gate must run from the repo root (cwd=${new java.io.File(".").getCanonicalPath})")
-    def walk(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
-    val builder = raw"SparkSession\s*\.\s*builder".r
-    val sites = for {
-      f <- walk(root) if f.getName.endsWith(".scala")
-      src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      _ <- builder.findAllIn(src)
-    } yield f.getPath
+    val sites = MainSources.sitesOf(raw"SparkSession\s*\.\s*builder".r)
     assert(sites == Seq("src/main/scala/graft/Sessions.scala"),
       s"build sessions with graft.Sessions.start; found builders in: ${sites.mkString(", ")}")
   }

@@ -99,5 +99,6 @@ class CfbReaderSpec extends SparkTestBase {
     assert(rows.length == 1)
     assert(rows.head.getAs[String]("language") == "korean")
     assert(rows.head.getAs[String]("text").contains("한국어 문서"))
+    assert(rows.head.getAs[String]("folder_name") == "root")
   }
 }

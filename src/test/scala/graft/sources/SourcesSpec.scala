@@ -45,28 +45,63 @@ class SourcesSpec extends SparkTestBase {
     assert(top.getAs[String]("language") == "english")
   }
 
-  test("HTML loader compiles once per plan shape: a second input directory compiles nothing") {
-    val page = "<html><body><p>A page with plenty of textual content for the loader.</p></body></html>"
-    def tree(root: String): String = {
-      Files.createDirectories(Paths.get(s"$root/lms"))
-      Files.write(Paths.get(s"$root/lms/a.html"), page.getBytes("UTF-8"))
-      Files.write(Paths.get(s"$root/top.html"), page.getBytes("UTF-8"))
-      root
+  /** A source tree of `kind`: one file in `lms/`, one at the top. */
+  private def tree(kind: String, root: String): String = {
+    val body = "한국어 문서 본문이 충분히 길어서 필터를 통과합니다"
+    val bytes = kind match {
+      case "html" => s"<html><body><p>A page with plenty of textual content: $body</p></body></html>".getBytes("UTF-8")
+      case "hwp" => HwpPayloads.buildHwpCfb(Seq(body), compressed = true)
+      case "hwpx" => HwpPayloads.buildHwpxZip(Seq(s"<hp:p>$body</hp:p>"), "<opf:metadata/>")
     }
-    def folders(root: String): (Seq[(String, String)], Long) = {
-      val (rows, compiles) = graft.CodegenCount.compilesOf(HtmlLoader.load(spark, root).collect())
-      (rows.map(r => r.getAs[String]("filename") -> r.getAs[String]("folder_name")).toSeq.sorted, compiles)
+    Files.createDirectories(Paths.get(s"$root/lms"))
+    Files.write(Paths.get(s"$root/lms/a.$kind"), bytes)
+    Files.write(Paths.get(s"$root/top.$kind"), bytes)
+    root
+  }
+
+  test("source kinds compile once per plan shape: a new root compiles nothing") {
+    for ((kind, k) <- DocumentSource.kinds) {
+      def folders(root: String): (Seq[(String, String)], Long) = {
+        val (rows, compiles) = graft.CodegenCount.compilesOf(DocumentSource.load(spark, root, k).collect())
+        (rows.map(r => r.getAs[String]("filename") -> r.getAs[String]("folder_name")).toSeq.sorted, compiles)
+      }
+      val expected = Seq(s"a.$kind" -> "lms", s"top.$kind" -> "root")
+      assert(folders(tree(kind, tmpDir()))._1 == expected, kind)
+      // another root, of another length too
+      val (second, compiles) = folders(tree(kind, s"${tmpDir()}/second"))
+      assert(second == expected, kind)
+      assert(compiles == 0, s"$kind: a new input directory compiled $compiles classes: the root reached the generated code")
+      // the root as given: a trailing slash; regex metacharacters (not
+      // Hadoop glob ones, which the binaryFile source would expand)
+      assert(folders(tree(kind, tmpDir()) + "/")._1 == expected, kind)
+      assert(folders(tree(kind, s"${tmpDir()}/a+b(c)$$^.d|e"))._1 == expected, kind)
     }
-    val expected = Seq("a.html" -> "lms", "top.html" -> "root")
-    assert(folders(tree(tmpDir()))._1 == expected)
-    // another root, of another length too
-    val (second, compiles) = folders(tree(s"${tmpDir()}/second"))
-    assert(second == expected)
-    assert(compiles == 0, s"a new input directory compiled $compiles classes: the root reached the generated code")
-    // the root as given: a trailing slash; regex metacharacters (not
-    // Hadoop glob ones, which the binaryFile source would expand)
-    assert(folders(tree(tmpDir()) + "/")._1 == expected)
-    assert(folders(tree(s"${tmpDir()}/a+b(c)$$^.d|e"))._1 == expected)
+  }
+
+  test("every source kind emits the shared leading columns") {
+    for ((kind, k) <- DocumentSource.kinds) {
+      val root = tree(kind, tmpDir())
+      val df = DocumentSource.load(spark, root, k)
+      assert(df.columns.take(6).toSeq ==
+        Seq("source", "filename", "folder_name", "file_type", "file_size", "modified_time"), kind)
+      assert(df.columns.takeRight(3).toSeq == Seq("text", "char_count", "language"), kind)
+      val top = df.filter(df("filename") === s"top.$kind").head()
+      assert(top.getAs[String]("folder_name") == "root", kind)
+      assert(top.getAs[String]("file_type") == kind, kind)
+      assert(top.getAs[Long]("file_size") == Files.size(Paths.get(s"$root/top.$kind")), kind)
+    }
+  }
+
+  test("entities decode in one pass: a decoded & starts no other entity (HTML, HWPX)") {
+    assert(HtmlLoader.htmlToText("<p>&amp;lt; &amp;quot; &lt;b&gt; &#39;</p>").trim == "&lt; &quot; <b> '")
+    val hwpx = HwpPayloads.buildHwpxZip(Seq("<hp:t>&amp;quot; &amp;lt; &quot;q&quot; &amp;</hp:t>"), "<opf:metadata/>")
+    assert(HwpLoader.extractHwpx(hwpx).text.trim == "&quot; &lt; \"q\" &")
+  }
+
+  test("format(\"binaryFile\") appears in src/main only inside the document source") {
+    val sites = graft.MainSources.sitesOf(raw"""format\s*\(\s*"binaryFile"\s*\)""".r)
+    assert(sites == Seq("src/main/scala/graft/sources/DocumentSource.scala"),
+      s"read files with DocumentSource.files; found binaryFile reads in: ${sites.mkString(", ")}")
   }
 
   test("HWP section decode: UTF-16LE whitelist keeps Hangul/ASCII, drops NULs and garbage (S5)") {
