@@ -21,8 +21,10 @@ import org.apache.spark.sql.functions._
   * takes its input frame and returns its checkpoint read back with the
   * schema it was written with. `all` hands each checkpoint straight to
   * the next body, so no stage infers a parquet schema; a standalone
-  * `transform`, `load` or `validate` reads its input from the work dir
-  * and infers that one schema.
+  * `transform`, `load` or `validate` reads its input from the work dir,
+  * infers that one schema, and refuses a checkpoint that lacks a column
+  * its body reads (one written by an older build), naming the stage to
+  * rerun.
   *
   * Usage:
   *   graft.Cli <stage> [--input DIR] [--work DIR] [--query TEXT]
@@ -89,24 +91,41 @@ object Cli {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
+  /** The document columns `load` reads; `transform` carries them from
+    * documents into chunks, so it asks its input for them too.
+    */
+  private val LoadReads = Seq("text", "source", "filename", "language", "folder_name")
+
+  /** A standalone stage's input: the checkpoint at `path`, written by
+    * stage `writer`, which must hold every column in `reads`.
+    */
+  private def input(spark: SparkSession, stage: String, path: String, writer: String, reads: String*): DataFrame = {
+    val df = spark.read.parquet(path)
+    val missing = reads.filterNot(df.columns.contains)
+    if (missing.nonEmpty)
+      throw new IllegalArgumentException(
+        s"$stage: checkpoint $path lacks column(s) ${missing.mkString(", ")}; rerun $writer to rewrite it")
+    df
+  }
+
   def extract(spark: SparkSession, a: Args): DataFrame =
     checkpoint(DocumentSource.load(spark, a.input, DocumentSource.kinds(a.source)), documentsPath(a))
 
   def transform(spark: SparkSession, a: Args): DataFrame =
-    transformFrom(spark.read.parquet(documentsPath(a)), a)
+    transformFrom(input(spark, "transform", documentsPath(a), "extract", LoadReads: _*), a)
 
   private def transformFrom(docs: DataFrame, a: Args): DataFrame =
     checkpoint(Pipeline.chunks(docs), chunksPath(a))
 
   def load(spark: SparkSession, a: Args): DataFrame =
-    loadFrom(spark.read.parquet(chunksPath(a)), a)
+    loadFrom(input(spark, "load", chunksPath(a), "transform", LoadReads: _*), a)
 
   private def loadFrom(chunks: DataFrame, a: Args): DataFrame =
     new VectorStore(storePath(a))
       .writePartitioned(TextCleaner.capForStore(Pipeline.embedded(chunks)), "folder_name", Pipeline.CollectionPrefix)
 
   def validate(spark: SparkSession, a: Args): DataFrame =
-    validateFrom(spark.read.parquet(storePath(a)))
+    validateFrom(input(spark, "validate", storePath(a), "load", "chunk_size_tokens"))
 
   private def validateFrom(store: DataFrame): DataFrame = {
     val report = QualityMonitor.report(store, "chunk_size_tokens")

@@ -110,9 +110,6 @@ object TextCleaner {
   val SpecialCharPattern: String =
     "(?U)[^\\w\\s가-힣ㄱ-ㅎㅏ-ㅣa-zA-Z0-9.,!?;:'\"\\-()\\[\\]{}+@/·•]"
 
-  private def replaceAll(c: Column, patterns: Seq[String], to: String, flags: String = ""): Column =
-    patterns.foldLeft(c)((acc, p) => regexp_replace(acc, flags + p, to))
-
   /** The full battery as ordered (pattern, replacement) stages — one
     * flat list so it can run as a single [[graft.functions.RegexChain]]
     * expression (44 nested regexp_replace calls are one unsplittable
@@ -146,24 +143,6 @@ object TextCleaner {
     */
   def cleanText(text: Column): Column =
     coalesce(graft.functions.RegexChain(text, BatteryStages), lit("")) // empty input → "" (text_cleaner.py:169)
-
-  /** C10 — whitespace normalization (text_cleaner.py:203-207). */
-  def whitespaceNormalize(c: Column): Column = {
-    val a = regexp_replace(c, "[ \\t]+", " ")
-    val b = regexp_replace(a, "\\n\\s*\\n", "\n\n")
-    regexp_replace(b, "\\n{3,}", "\n\n")
-  }
-
-  /** C11 — per-line trim then collapse runs of blank lines to one,
-    * then trim (text_cleaner.py:210-224). Pure regex equivalent of the
-    * reference's line loop.
-    */
-  def lineTrimCollapse(c: Column): Column = {
-    val trimmedLines = regexp_replace(c, "(?m)^[ \\t\\x0B\\f\\r]+|[ \\t\\x0B\\f\\r]+$", "")
-    // Python strip() removes ALL whitespace at both ends (Spark's trim
-    // only removes spaces) — regex trim for parity
-    regexp_replace(regexp_replace(trimmedLines, "\\n{3,}", "\n\n"), "^\\s+|\\s+$", "")
-  }
 
   /** C12 — HWP-strict clean (text_cleaner.py:139-163): full battery, then
     * drop lines with fewer than 3 Hangul chars AND length < 10, then

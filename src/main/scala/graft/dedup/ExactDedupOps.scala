@@ -155,8 +155,7 @@ private[dedup] trait ExactDedupOps extends Serializable { this: TextNormalizatio
         // exact-integer HALF_UP at 6 dp (the RepetitionStats.ratio6
         // pattern; n_lines > 0 for every emitted doc): rounding the
         // double ratio diverges from a SQL replay at .5e-6 midpoints
-        (expr("(2 * n_kept * 1000000 + n_lines) div (2 * n_lines)").cast("double") / lit(1e6))
-          .as("kept_ratio")
+        graft.text.RepetitionStats.ratioCol("n_kept", "n_lines", 1000000L).as("kept_ratio")
       )
   }
 }

@@ -10,13 +10,6 @@ import org.apache.spark.sql.functions._
   */
 private[dedup] trait JaccardJoinOps extends Serializable { this: TextNormalization =>
 
-  /** Exact Jaccard over two (distinct-element) array columns. */
-  def jaccardExpr(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = size(array_union(a, b)).cast("double")
-    when(union === 0, lit(0.0)).otherwise(inter / union)
-  }
-
   /** N-gram (token) Jaccard near-dup pairs WITHOUT LSH — the exact
     * quadratic baseline, blocked by a cheap key (e.g. language) to
     * bound the cross product. Suitable as a correctness oracle for the

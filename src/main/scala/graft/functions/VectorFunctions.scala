@@ -54,11 +54,6 @@ object VectorFunctions {
     when(denom === 0.0, lit(null)).otherwise(dotProduct(a, b) / denom)
   }
 
-  /** Cosine for pre-normalized (unit) vectors — plain dot product, the
-    * identity the reference relies on (embeddings.py:36: COSINE ≡ dot).
-    */
-  def cosineUnit(a: Column, b: Column): Column = dotProduct(a, b)
-
   /** Squared L2 distance — the codegen'd [[L2DistanceSq]] Expression. */
   def l2DistanceSq(a: Column, b: Column): Column =
     VectorExpressions.l2DistanceSqFast(a, b)

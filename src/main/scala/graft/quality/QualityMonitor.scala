@@ -1,6 +1,7 @@
 package graft.quality
 
 import graft.model.QualityGates
+import graft.text.RepetitionStats.ratioCol
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -42,22 +43,14 @@ object QualityMonitor {
       max(col(tokensCol)).as("max_tokens"),
       sum(col(tokensCol).cast("long")).as("__sum_tokens"),
       round(expr(s"percentile($tokensCol, 0.5)"), 4).as("median_tokens")
-    ).withColumn(
-      "avg_chars",
-      when(col("total_chunks") === 0, lit(null).cast("double")).otherwise(
-        expr("(2 * __sum_chars * 10000 + total_chunks) div (2 * total_chunks)")
-          .cast("double") / lit(1e4))
-    ).withColumn(
-      "avg_tokens",
-      when(col("total_chunks") === 0, lit(null).cast("double")).otherwise(
-        expr("(2 * __sum_tokens * 10000 + total_chunks) div (2 * total_chunks)")
-          .cast("double") / lit(1e4))
-    ).select(
-      col("total_chunks"),
-      col("min_chars"), col("max_chars"), col("avg_chars"),
-      col("median_chars"), col("std_chars"),
-      col("min_tokens"), col("max_tokens"), col("avg_tokens"),
-      col("median_tokens"))
+    ).withColumn("avg_chars", ratioCol("__sum_chars", "total_chunks", 10000L))
+      .withColumn("avg_tokens", ratioCol("__sum_tokens", "total_chunks", 10000L))
+      .select(
+        col("total_chunks"),
+        col("min_chars"), col("max_chars"), col("avg_chars"),
+        col("median_chars"), col("std_chars"),
+        col("min_tokens"), col("max_tokens"), col("avg_tokens"),
+        col("median_tokens"))
 
   /** G4 — fixed-width histogram of a numeric column (30 bins by
     * default, quality_monitor.py:49-77). min/max resolved in the same
@@ -89,13 +82,12 @@ object QualityMonitor {
     counts
       .crossJoin(broadcast(total))
       // pct = count·100/__total rounded HALF_UP at 4 dp ENTIRELY in
-      // integer arithmetic (count·100 at 4 dp ≡ scale 10⁶ on the raw
-      // ratio — the RepetitionStats.ratio6 class): rounding the double
-      // ratio diverges from a SQL replay at .5·10⁻⁵ midpoints, which
-      // integer count ratios CAN hit exactly (r16 caught the 6-dp twin
-      // on q_repetition). __total > 0 whenever a row exists.
-      .withColumn("pct",
-        expr("(2 * `count` * 1000000 + __total) div (2 * __total)").cast("double") / lit(1e4))
+      // integer arithmetic (RepetitionStats.ratioCol, the ratio6 class):
+      // rounding the double ratio diverges from a SQL replay at .5·10⁻⁵
+      // midpoints, which integer count ratios CAN hit exactly (r16
+      // caught the 6-dp twin on q_repetition). __total > 0 whenever a
+      // row exists.
+      .withColumn("pct", ratioCol("`count` * 100", "__total", 10000L))
       .drop("__total")
       .orderBy(desc("count"), col(langCol))
   }
@@ -129,19 +121,10 @@ object QualityMonitor {
       sum(col(tokensCol).cast("long")).as("__sum_tokens"),
       round(coefficientOfVariation(col(tokensCol)), 4).as("cv_pct"),
       round(stddev_pop(col(tokensCol)), 4).as("std_tokens")
-    ).withColumn(
-      // integer-column average: exact-integer 4-dp HALF_UP (see
-      // sizeDistribution)
-      "avg_tokens",
-      when(col("total_chunks") === 0, lit(null).cast("double")).otherwise(
-        expr("(2 * __sum_tokens * 10000 + total_chunks) div (2 * total_chunks)")
-          .cast("double") / lit(1e4))
-    ).withColumn(
-      "in_range_pct",
-      when(col("total_chunks") === 0, lit(null).cast("double")).otherwise(
-        expr("(2 * __in_range * 1000000 + total_chunks) div (2 * total_chunks)")
-          .cast("double") / lit(1e4))
-    ).drop("__in_range")
+    ) // integer-column average and percentage: exact-integer 4-dp HALF_UP
+      .withColumn("avg_tokens", ratioCol("__sum_tokens", "total_chunks", 10000L))
+      .withColumn("in_range_pct", ratioCol("__in_range * 100", "total_chunks", 10000L))
+      .drop("__in_range")
       .select(col("total_chunks"), col("in_range_pct"), col("cv_pct"),
         col("avg_tokens"), col("std_tokens"))
       .withColumn(

@@ -253,14 +253,7 @@ object CatalogSupport {
     * by construction (group sizes).
     */
   private[queries] def ratio6Col(numer: String, denom: String): org.apache.spark.sql.Column =
-    ratioCol(numer, denom, 1000000L)
-
-  /** [[ratio6Col]] at an arbitrary decimal scale (10^dp) — r17 closed
-    * the same midpoint class for the 4-dp integer-ratio rows (LSH
-    * recall fractions) that r16 closed at 6 dp.
-    */
-  private[queries] def ratioCol(numer: String, denom: String, scale: Long): org.apache.spark.sql.Column =
-    expr(s"(2 * $numer * ${scale}L + $denom) div (2 * $denom)").cast("double") / lit(scale.toDouble)
+    graft.text.RepetitionStats.ratioCol(numer, denom, 1000000L)
 
   /** IVF index cache: index BUILD is a one-time load-side operation in
     * the reference (milvus_store.py:110-136); searches reuse it. Cache

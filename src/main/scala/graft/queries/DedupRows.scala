@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.dedup.{Dedup, SemanticDedup}
 import graft.queries.CatalogSupport._
+import graft.text.RepetitionStats.ratioCol
 import graft.queries.CleanChunkRows.{FixedSize, FixedStride, qChunkFixed}
 import graft.queries.QueryCatalog.Q
 import org.apache.spark.sql.SparkSession

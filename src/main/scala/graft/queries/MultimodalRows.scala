@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.dedup.Dedup
 import graft.queries.CatalogSupport._
+import graft.text.RepetitionStats.ratioCol
 import graft.queries.QueryCatalog.Q
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._

@@ -3,6 +3,7 @@ package graft.queries
 import graft.operators.SkewTools
 import graft.quality.QualityMonitor
 import graft.queries.CatalogSupport._
+import graft.text.RepetitionStats.ratioCol
 import graft.queries.QueryCatalog.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window

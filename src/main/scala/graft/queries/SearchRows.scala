@@ -3,15 +3,13 @@ package graft.queries
 import graft.clean.TextCleaner
 import graft.dedup.Dedup
 import graft.embed.{Embedders, HashEmbedder}
-import graft.functions.VectorFunctions._
 import graft.lang.LanguageDetect
 import graft.model.FieldCaps
 import graft.plans.{IvfCatalog, IvfPruning}
 import graft.queries.CatalogSupport._
 import graft.queries.QueryCatalog.Q
 import graft.search.{HybridSearch, IvfIndex, KeywordSearch, ProductQuant, Rerank, ScalarQuant, VectorSearch}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Search and index rows: exact and filtered vector top-k, IVF/PQ/SQ8
@@ -22,18 +20,20 @@ import org.apache.spark.sql.functions._
   */
 object SearchRows extends CatalogFamily {
 
+  /** The graded ranking of the search rows: [[VectorSearch.topK]] on
+    * the rounded score with `vec_id` ties, the order every oracle here
+    * replays (`ORDER BY score DESC, vec_id`).
+    */
+  private def gradedTopK(df: DataFrame, q: Array[Float], k: Int, predicate: Option[Column] = None): DataFrame =
+    VectorSearch.topK(df, q, k, predicate = predicate, rounded = true, tieBreak = Seq("vec_id"))
+
   /** Q1 — exact cosine top-10 against the vec_id=0 query vector.
     * Rounded score is the sort key on both sides so ties break
     * identically.
     */
-  val qAnnTopK: Q = (s, dir) => {
-    val q = vecOf(s, dir, 0L)
-    tbl(s, dir, "embeddings")
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(q.toSeq)), 4))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(10)
+  val qAnnTopK: Q = (s, dir) =>
+    gradedTopK(tbl(s, dir, "embeddings"), vecOf(s, dir, 0L), 10)
       .select("vec_id", "label", "score")
-  }
 
   val qAnnTopKSql: String =
     """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
@@ -48,15 +48,9 @@ object SearchRows extends CatalogFamily {
   /** Q1+Q2 — metadata predicate applied BEFORE top-k (pre-k filter
     * semantics, milvus_store.py:295).
     */
-  val qAnnTopKFiltered: Q = (s, dir) => {
-    val q = vecOf(s, dir, 0L)
-    tbl(s, dir, "embeddings")
-      .filter(col("label") === 3)
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(q.toSeq)), 4))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(10)
+  val qAnnTopKFiltered: Q = (s, dir) =>
+    gradedTopK(tbl(s, dir, "embeddings"), vecOf(s, dir, 0L), 10, Some(col("label") === 3))
       .select("vec_id", "label", "score")
-  }
 
   val qAnnTopKFilteredSql: String =
     """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
@@ -260,19 +254,14 @@ object SearchRows extends CatalogFamily {
           ORDER BY tag, score DESC, doc_id"""
   row(CatalogRow.capped("q_search_facade", _.Replica0Cap)(qSearchFacade, qSearchFacadeSql))
 
-  /** Q4 — multi-collection fan-out: per-label top-3, tag, merge,
-    * global top-5 by similarity.
+  /** Q4 — multi-collection fan-out over one table, the label as the
+    * collection: per-label top-3 ([[VectorSearch.bestKPerKey]]), merge,
+    * global top-5 by similarity ([[VectorSearch.bestK]]).
     */
   val qMultiCollection: Q = (s, dir) => {
-    val q = vecOf(s, dir, 0L)
-    val scored = tbl(s, dir, "embeddings")
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(q.toSeq)), 4))
-    val w = Window.partitionBy(col("label")).orderBy(desc("score"), col("vec_id"))
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(5)
+    val scored = VectorSearch.score(tbl(s, dir, "embeddings"), vecOf(s, dir, 0L), rounded = true)
+    VectorSearch
+      .bestK(VectorSearch.bestKPerKey(scored, "label", 3, Seq("vec_id")), 5, Seq("vec_id"))
       .select(col("vec_id"), col("label").as("collection"), col("score"))
   }
 
@@ -291,21 +280,14 @@ object SearchRows extends CatalogFamily {
        ORDER BY score DESC, vec_id LIMIT 5"""
   row(CatalogRow("q_multi_collection", qMultiCollection, qMultiCollectionSql))
 
-  /** kNN JOIN — top-3 corpus neighbors for each of the first 5 query
-    * vectors (self excluded), broadcast query side.
+  /** kNN JOIN ([[VectorSearch.knnJoin]]) — top-3 corpus neighbors for
+    * each of the first 5 query vectors (self excluded), ranked on the
+    * rounded score, broadcast query side.
     */
   val qKnnJoin: Q = (s, dir) => {
     val e = tbl(s, dir, "embeddings")
-    val q = e.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = e
-      .crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score", round(cosineSimilarity(col("embedding"), col("qv")), 4))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("score"), col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("score"), col("rank"))
+    VectorSearch
+      .knnJoin(e.filter(col("vec_id") < 5), e, "vec_id", "vec_id", 3, excludeSelf = true, rounded = true)
       .orderBy("query_id", "rank")
   }
 
@@ -334,7 +316,7 @@ object SearchRows extends CatalogFamily {
     * fixed-nprobe path stays available as IvfIndex.searchTopK, with
     * q_ivf_recall pinning its ≥0.9 recall independently. boundSlack
     * 2e-4 > the 1e-4 display-rounding grid, so round-into-tie rows are
-    * always probed — and scoreRounding/tieBreakCol make the FINAL
+    * always probed — and `rounded`/`tieBreak` make the FINAL
     * selection rank on (round(score,4) DESC, vec_id) exactly like the
     * oracle, so the k-boundary is deterministic too (ADVICE r4).
     */
@@ -343,7 +325,7 @@ object SearchRows extends CatalogFamily {
     val q = vecOf(s, dir, 0L)
     IvfIndex
       .searchTopKExact(labeled, centroids, radii, q, 10, scout = IvfQueryCfg.nprobe,
-        scoreRounding = Some(4), tieBreakCol = Some("vec_id"))
+        rounded = true, tieBreak = Seq("vec_id"))
       .select(col("vec_id"), col("label"), col("score"))
       .orderBy(desc("score"), col("vec_id"))
   }
@@ -364,11 +346,7 @@ object SearchRows extends CatalogFamily {
   val qIvfRecall: Q = (s, dir) => {
     val (labeled, centroids, _) = ivfIndexFor(s, dir)
     val q = vecOf(s, dir, 0L)
-    def top10(df: DataFrame) = df
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(q.toSeq)), 4))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(10)
-      .select("vec_id")
+    def top10(df: DataFrame) = gradedTopK(df, q, 10).select("vec_id")
     val exact = top10(labeled)
     val probes = IvfIndex.nearestClusters(q, centroids, IvfQueryCfg.nprobe)
     val ivf = top10(labeled.filter(col("cluster_id").isin(probes: _*)))
@@ -392,9 +370,9 @@ object SearchRows extends CatalogFamily {
     * equi-joins — no cross product — but exact at ANY scale factor by
     * construction (the round-3 sf0.001 tiny-scale recall property
     * cannot recur). Oracle = the exact kNN join recomputed in DuckDB.
-    * The fixed-nprobe approximate join stays available as
-    * IvfIndex.knnJoin. boundSlack 2e-4 > the 1e-4 rounding grid used
-    * for the graded ranking.
+    * Same arguments as q_knn_join (self excluded, rounded ranking),
+    * whose oracle it shares. boundSlack 2e-4 > the 1e-4 rounding grid
+    * used for the graded ranking.
     */
   val qIvfKnnJoin: Q = (s, dir) => {
     implicit val sp: SparkSession = s
@@ -404,7 +382,7 @@ object SearchRows extends CatalogFamily {
     IvfIndex
       .knnJoinExact(
         e.filter(col("vec_id") < 5), labeled, centroids, radii, "vec_id", "vec_id", 3,
-        scoutProbe = cfg.nprobe, scoreRounding = Some(4), excludeSelf = true)
+        scoutProbe = cfg.nprobe, rounded = true, excludeSelf = true)
       .orderBy("query_id", "rank")
   }
   row(CatalogRow("q_ivf_knn_join", qIvfKnnJoin, qKnnJoinSql, indexBacked = true))
@@ -583,11 +561,7 @@ object SearchRows extends CatalogFamily {
     * in only one list).
     */
   val qHybridRrf: Q = (s, dir) => {
-    val qv = vecOf(s, dir, 0L)
-    val vecTop = tbl(s, dir, "embeddings")
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(qv.toSeq)), 4))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(20)
+    val vecTop = gradedTopK(tbl(s, dir, "embeddings"), vecOf(s, dir, 0L), 20)
       .select(col("vec_id").as("doc_id"), col("score"))
     val vecRank = HybridSearch
       .withRank(vecTop, Seq(desc("score"), col("doc_id")))
@@ -695,13 +669,9 @@ object SearchRows extends CatalogFamily {
     * sides: the IEEE double `1 − 0.7` is not the literal `0.3`).
     */
   val qMmrRerank: Q = (s, dir) => {
-    val qv = vecOf(s, dir, 0L)
-    val cand = tbl(s, dir, "embeddings")
-      .withColumn("rel", round(cosineSimilarity(col("embedding"), typedLit(qv.toSeq)), 4))
-      .orderBy(desc("rel"), col("vec_id"))
-      .limit(20)
-      .select("vec_id", "rel", "embedding")
-    Rerank.mmr(cand, 5)
+    val cand = gradedTopK(tbl(s, dir, "embeddings"), vecOf(s, dir, 0L), 20)
+      .select("vec_id", "score", "embedding")
+    Rerank.mmr(cand, 5, relCol = "score")
   }
 
   val qMmrRerankSql: String =
@@ -750,11 +720,7 @@ object SearchRows extends CatalogFamily {
     // (ProductQuant.adaptiveShortlist's measured rationale).
     val sl = ProductQuant.adaptiveShortlist(encoded.count(), 10)
     val pq = ProductQuant.adcTopK(encoded, cbs, q, 10, shortlist = sl).select("vec_id")
-    val exact = encoded
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(q.toSeq)), 4))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(10)
-      .select("vec_id")
+    val exact = gradedTopK(encoded, q, 10).select("vec_id")
     pq.intersect(exact)
       .agg(count(lit(1)).cast("int").as("overlap"))
       .select(lit(10).as("k"), (col("overlap") >= 9).as("recall_ok"))
@@ -781,11 +747,7 @@ object SearchRows extends CatalogFamily {
     val composed = ProductQuant
       .ivfAdcTopK(enc, cbs, cents, q, 10, IvfQueryCfg.nprobe)
       .select("vec_id")
-    val exact = enc
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(q.toSeq)), 4))
-      .orderBy(desc("score"), col("vec_id"))
-      .limit(10)
-      .select("vec_id")
+    val exact = gradedTopK(enc, q, 10).select("vec_id")
     composed
       .intersect(exact)
       .agg(count(lit(1)).cast("int").as("overlap"))
@@ -844,10 +806,7 @@ object SearchRows extends CatalogFamily {
     IvfPruning.enable(s)
     try {
       val corpus = s.read.parquet(path)
-      def top10(df: DataFrame): DataFrame =
-        df.withColumn("score", cosineSimilarity(col("embedding"), typedLit(q.toSeq)))
-          .orderBy(desc("score"), col("vec_id"))
-          .limit(10)
+      def top10(df: DataFrame): DataFrame = VectorSearch.topK(df, q, 10, tieBreak = Seq("vec_id"))
       val naive = top10(corpus)
       val ruleFired = naive.queryExecution.optimizedPlan.exists {
         case LFilter(In(a: AttributeReference, _), _) => a.name == "cluster_id"

@@ -4,10 +4,10 @@ import graft.chunk.Chunker
 import graft.clean.TextCleaner
 import graft.dedup.Dedup
 import graft.embed.{Embedders, HashEmbedder}
-import graft.functions.VectorFunctions._
 import graft.lang.LanguageDetect
 import graft.queries.CatalogSupport._
 import graft.queries.QueryCatalog.Q
+import graft.search.VectorSearch
 import org.apache.spark.sql.functions._
 
 /** Streaming and pipeline rows: the streaming backfill, ingest window and
@@ -159,11 +159,9 @@ object StreamingRows extends CatalogFamily {
     // that AQE sizing already yields parallel reads and the extra
     // exchange stays proportionally negligible.
     val embedded = Embedders.withEmbedding(rebalanced(deduped), "text", "embedding", embedder)
-    val qv = embedder.embed("spark join order table")
-    embedded
-      .withColumn("score", round(cosineSimilarity(col("embedding"), typedLit(qv.toSeq)), 4))
-      .orderBy(desc("score"), col("doc_id"), col("chunk_index"))
-      .limit(5)
+    VectorSearch
+      .topK(embedded, embedder.embed("spark join order table"), 5,
+        rounded = true, tieBreak = Seq("doc_id", "chunk_index"))
       .select("doc_id", "chunk_index", "chunk_id", "language", "score")
   }
 

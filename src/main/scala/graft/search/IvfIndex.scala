@@ -6,7 +6,6 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) vector index (reference S13/O5:
@@ -16,7 +15,9 @@ import org.apache.spark.sql.functions._
   * written with `partitionBy("cluster_id")` so a search that probes
   * `nprobe` clusters reads only those partitions — ANN pruning becomes
   * partition pruning. HNSW is serving-infra shaped and intentionally
-  * out of scope (SURVEY.md O5); exact search is the fallback.
+  * out of scope (SURVEY.md O5); exact search is the fallback. The index
+  * only chooses which clusters to read: every ranking over them is
+  * [[VectorSearch]]'s (`topK`, `bestKPerKey`).
   */
 object IvfIndex {
 
@@ -126,17 +127,11 @@ object IvfIndex {
     * centroids are tiny).
     */
   def nearestClusters(queryVec: Array[Float], centroids: Array[Array[Float]], nprobe: Int): Seq[Int] = {
-    def dot(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
-    def norm(a: Array[Float]) = math.sqrt(dot(a, a))
-    val qn = norm(queryVec)
+    val qn = math.sqrt(dotD(queryVec, queryVec))
     centroids.zipWithIndex
       .map { case (c, i) =>
-        val d = norm(c) * qn
-        (if (d == 0) -1.0 else dot(c, queryVec) / d, i)
+        val d = math.sqrt(dotD(c, c)) * qn
+        (if (d == 0) -1.0 else dotD(c, queryVec) / d, i)
       }
       .sortBy(-_._1)
       .take(nprobe)
@@ -214,21 +209,21 @@ object IvfIndex {
     * costs one extra tiny top-k job over the scout clusters.
     *
     * `boundSlack` widens the cut to absorb downstream score rounding:
-    * callers that re-rank on round(score, d) must pass slack > 10^-d
-    * so a row just below the raw kth score that ROUNDS into a tie
-    * (id-tiebreak) is still probed. Clusters are data-dependently
-    * pruned: tight real-embedding clusters prune hard; the synthetic
-    * near-isotropic corpus prunes little — but never incorrectly.
+    * a caller that ranks on the rounded score must pass slack >
+    * 10^-[[VectorSearch.ScoreDigits]] so a row just below the raw kth
+    * score that ROUNDS into a tie (id-tiebreak) is still probed.
+    * Clusters are data-dependently pruned: tight real-embedding
+    * clusters prune hard; the synthetic near-isotropic corpus prunes
+    * little — but never incorrectly.
     *
     * FINAL SELECTION (ADVICE r4): probing the right clusters is only
     * half of exactness — truncating at k by RAW score would still
     * resolve raw-score ties nondeterministically and drop rows that
-    * round into a 4-dp tie an id-tiebroken oracle would keep. When
-    * `scoreRounding` is set, the final rank is therefore on
-    * (round(score, d) DESC, tieBreakCol ASC), mirroring
-    * [[knnJoinExact]]; `boundSlack` must exceed 10^-d so every
-    * round-into-tie candidate was probed. Without rounding, the raw
-    * ranking still tiebreaks on `tieBreakCol` when given one.
+    * round into a 4-dp tie an id-tiebroken oracle would keep. The final
+    * selection is [[VectorSearch.topK]] over the probed clusters, so
+    * with `rounded` it ranks on (rounded score DESC, `tieBreak` ASC),
+    * mirroring [[knnJoinExact]]. Without rounding, the raw ranking
+    * still tiebreaks on `tieBreak` when given one.
     */
   def searchTopKExact(
       labeledCorpus: DataFrame,
@@ -240,37 +235,25 @@ object IvfIndex {
       predicate: Option[Column] = None,
       scout: Int = IndexConfig.default.nprobe,
       boundSlack: Double = 2e-4,
-      // Rank the final k on scores rounded to this many decimals
-      // (requires tieBreakCol; boundSlack must be > 10^-d).
-      scoreRounding: Option[Int] = None,
-      // Deterministic ascending tiebreak column for equal (rounded)
-      // scores — the id column in every catalog use.
-      tieBreakCol: Option[String] = None
+      rounded: Boolean = false,
+      tieBreak: Seq[String] = Nil
   ): DataFrame = {
-    scoreRounding.foreach { dp =>
-      require(tieBreakCol.nonEmpty, "scoreRounding needs a tieBreakCol for determinism")
-      require(boundSlack > math.pow(10.0, -dp),
-        s"boundSlack $boundSlack must exceed the 10^-$dp rounding grid")
+    if (rounded) {
+      require(tieBreak.nonEmpty, "a rounded ranking needs a tieBreak for determinism")
+      require(boundSlack > math.pow(10.0, -VectorSearch.ScoreDigits),
+        s"boundSlack $boundSlack must exceed the 10^-${VectorSearch.ScoreDigits} rounding grid")
     }
     val ub = upperBounds(queryVec, centroids, radii)
     val scoutSet = ub.zipWithIndex.sortBy(-_._1).take(scout).map(_._2)
     val scoutScores = VectorSearch
-      .topK(labeledCorpus.filter(col("cluster_id").isin(scoutSet: _*)), queryVec, k, vecCol,
-        predicate = predicate)
+      .topK(labeledCorpus.filter(col("cluster_id").isin(scoutSet: _*)), queryVec, k, vecCol, predicate)
       .select(col("score"))
       .collect()
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     val sk = if (scoutScores.length == k) scoutScores.min else -2.0 // < any cosine
     val finalSet = (scoutSet ++ ub.indices.filter(j => ub(j) >= sk - boundSlack)).distinct
-    val pruned = labeledCorpus.filter(col("cluster_id").isin(finalSet: _*))
-    val filtered = predicate.fold(pruned)(pruned.filter)
-    val rawScore = cosineSimilarity(col(vecCol), typedLit(queryVec.toSeq))
-    val scored = filtered.withColumn(
-      "score", scoreRounding.fold(rawScore)(dp => round(rawScore, dp)))
-    // orderBy+limit still plans as TakeOrderedAndProject with the extra
-    // sort key — per-partition k-heaps, no global sort.
-    val ordering = desc("score") +: tieBreakCol.map(col(_).asc).toSeq
-    scored.orderBy(ordering: _*).limit(k)
+    VectorSearch.topK(labeledCorpus.filter(col("cluster_id").isin(finalSet: _*)), queryVec, k, vecCol,
+      predicate, rounded, tieBreak)
   }
 
   /** Q1 with IVF pruning: filter to the nprobe nearest clusters (an
@@ -288,67 +271,7 @@ object IvfIndex {
   ): DataFrame = {
     val probes = nearestClusters(queryVec, centroids, cfg.nprobe)
     val pruned = labeledCorpus.filter(col("cluster_id").isin(probes: _*))
-    VectorSearch.topK(pruned, queryVec, k, vecCol, predicate = predicate)
-  }
-
-  /** IVF-accelerated kNN JOIN: assign each query to its nprobe nearest
-    * centroids (small broadcast join against the centroid table), then
-    * equi-join queries to corpus on cluster_id — the cross product
-    * never forms; shuffle is keyed by cluster. Final per-query top-k by
-    * window.
-    */
-  def knnJoin(
-      queries: DataFrame,
-      labeledCorpus: DataFrame,
-      centroids: Array[Array[Float]],
-      queryIdCol: String,
-      corpusIdCol: String,
-      k: Int,
-      nprobe: Int = IndexConfig.default.nprobe,
-      queryVecCol: String = "embedding",
-      corpusVecCol: String = "embedding",
-      // Rank on scores rounded to this many decimals (with neighbor_id
-      // tiebreak) — gives engine-independent, reproducible rankings when
-      // raw cosines differ only past the rounding grid.
-      scoreRounding: Option[Int] = None,
-      // Drop corpus rows whose id equals the query id BEFORE ranking —
-      // the usual self-match exclusion when querying a corpus with
-      // itself (must happen pre-window or it eats a rank slot).
-      excludeSelf: Boolean = false
-  )(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val centDf = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toSeq
-      .toDF("cluster_id", "centroid")
-
-    val q = queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec"))
-    // query → nprobe candidate clusters (broadcast the tiny centroid table)
-    val qClusters = q
-      .crossJoin(broadcast(centDf))
-      .withColumn("__csim", cosineSimilarity(col("__qvec"), col("centroid")))
-      .withColumn(
-        "__crank",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("__csim"), col("cluster_id")))
-      )
-      .filter(col("__crank") <= nprobe)
-      .select(col("query_id"), col("__qvec"), col("cluster_id"))
-
-    val c = labeledCorpus.select(
-      col("cluster_id"),
-      col(corpusIdCol).as("neighbor_id"),
-      col(corpusVecCol).as("__cvec")
-    )
-    val w = Window.partitionBy("query_id").orderBy(desc("score"), col("neighbor_id"))
-    val joined = c.join(qClusters, Seq("cluster_id"))
-    val nonSelf = if (excludeSelf) joined.filter(col("neighbor_id") =!= col("query_id")) else joined
-    val scored = nonSelf
-      .withColumn("score", cosineSimilarity(col("__cvec"), col("__qvec")))
-    val graded = scoreRounding.fold(scored)(dp => scored.withColumn("score", round(col("score"), dp)))
-    graded
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "score", "rank")
+    VectorSearch.topK(pruned, queryVec, k, vecCol, predicate)
   }
 
   /** EXACT kNN join through the IVF layout (the join-shaped analog of
@@ -361,9 +284,13 @@ object IvfIndex {
     * additionally joins every cluster with ub_j ≥ s_k(q) − slack that
     * pass A did not probe (usually none on clustered corpora). The
     * final per-query top-k ranks the union of both candidate sets —
-    * on round(score, d) when `scoreRounding` is set, which is why the
-    * slack must exceed 10^-d (a just-below-s_k row can round into an
-    * id-tiebroken tie).
+    * on the rounded score when `rounded`, which is why the slack must
+    * exceed 10^-[[VectorSearch.ScoreDigits]] (a just-below-s_k row can
+    * round into an id-tiebroken tie). `excludeSelf` drops the corpus row
+    * whose id equals the query id before ranking (it would take a rank
+    * slot). Output (query_id, neighbor_id, score, rank), as
+    * [[VectorSearch.knnJoin]] gives; every ranking here is
+    * [[VectorSearch.bestKPerKey]].
     *
     * The pass-A candidate set feeds both the s_k window and the final
     * union, so its equi-join is recomputed once (same documented trade
@@ -381,7 +308,7 @@ object IvfIndex {
       scoutProbe: Int = IndexConfig.default.nprobe,
       queryVecCol: String = "embedding",
       corpusVecCol: String = "embedding",
-      scoreRounding: Option[Int] = None,
+      rounded: Boolean = false,
       excludeSelf: Boolean = false,
       boundSlack: Double = 2e-4
   )(implicit spark: SparkSession): DataFrame = {
@@ -408,12 +335,8 @@ object IvfIndex {
       )
       .select(col("query_id"), col("__qvec"), col("cluster_id"), col("__ub"))
 
-    val probed = qc
-      .withColumn(
-        "__crank",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("__ub"), col("cluster_id")))
-      )
-      .filter(col("__crank") <= scoutProbe)
+    val probed = VectorSearch
+      .bestKPerKey(qc, "query_id", scoutProbe, Seq("cluster_id"), by = "__ub")
       .select("query_id", "__qvec", "cluster_id")
 
     val c = labeledCorpus.select(
@@ -434,12 +357,9 @@ object IvfIndex {
     // Per-query kth-best raw score from the scout pass; a query with
     // fewer than k real-scored candidates gets −2 (below any cosine) so
     // every cluster passes the bound and the query degrades to exact.
-    val kth = candA
-      .withColumn(
-        "__rank",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("score"), col("neighbor_id")))
-      )
-      .filter(col("__rank") <= k && col("score").isNotNull)
+    val kth = VectorSearch
+      .bestKPerKey(candA, "query_id", k, Seq("neighbor_id"))
+      .filter(col("score").isNotNull)
       .groupBy("query_id")
       .agg(min(col("score")).as("__skmin"), count(lit(1)).as("__skcnt"))
       .select(
@@ -454,14 +374,9 @@ object IvfIndex {
       .join(probed.select("query_id", "cluster_id"), Seq("query_id", "cluster_id"), "left_anti")
 
     val all = candA.unionByName(candidates(expand))
-    val graded =
-      scoreRounding.fold(all)(dp => all.withColumn("score", round(col("score"), dp)))
-    graded
-      .withColumn(
-        "rank",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("score"), col("neighbor_id")))
-      )
-      .filter(col("rank") <= k)
+    val graded = all.withColumn("score", VectorSearch.graded(col("score"), rounded))
+    VectorSearch
+      .bestKPerKey(graded, "query_id", k, Seq("neighbor_id"))
       .select("query_id", "neighbor_id", "score", "rank")
   }
 }

@@ -131,8 +131,8 @@ object ProductQuant {
   /** ADC top-k with exact re-rank: score codes against the broadcast
     * m×ksub query table, shortlist the best `shortlist` rows
     * (default 5k), then exact-cosine rescore those rows to the final
-    * k (rounded to `scoreRounding` with `idCol` ties, matching the
-    * exact-search ranking contract). The raw vector column is only
+    * k by [[VectorSearch.bestK]] on the rounded score with `idCol` ties
+    * (the exact-search ranking contract). The raw vector column is only
     * touched for shortlist rows — the production "codes in memory,
     * floats fetched for re-rank" pattern.
     */
@@ -144,8 +144,7 @@ object ProductQuant {
       shortlist: Int = 0,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      codeCol: String = "pq_code",
-      scoreRounding: Int = 4
+      codeCol: String = "pq_code"
   ): DataFrame = {
     val m = codebooks.length
     val dsub = codebooks(0)(0).length
@@ -170,16 +169,12 @@ object ProductQuant {
       while (j < tb.length) { sum += tb(j)(code(j)); j += 1 }
       sum
     }
-    encoded
+    val shortlisted = encoded
       .withColumn("__adc", adc(col(codeCol)))
       .orderBy(desc("__adc"), col(idCol))
       .limit(s)
-      .withColumn(
-        "score",
-        round(cosineSimilarity(col(vecCol), typedLit(queryVec.toSeq)), scoreRounding)
-      )
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
+    VectorSearch
+      .bestK(VectorSearch.score(shortlisted, queryVec, rounded = true, vecCol), k, Seq(idCol))
       .drop("__adc")
   }
 
@@ -223,8 +218,7 @@ object ProductQuant {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       codeCol: String = "pq_code",
-      clusterCol: String = "cluster_id",
-      scoreRounding: Int = 4
+      clusterCol: String = "cluster_id"
   ): DataFrame = {
     val probes = IvfIndex.nearestClusters(queryVec, centroids, nprobe)
     val pruned = encodedLabeled.filter(col(clusterCol).isin(probes: _*))
@@ -235,7 +229,6 @@ object ProductQuant {
     adcTopK(
       pruned, codebooks, queryVec, k,
       shortlist = adaptiveShortlist(probed, k),
-      idCol = idCol, vecCol = vecCol, codeCol = codeCol,
-      scoreRounding = scoreRounding)
+      idCol = idCol, vecCol = vecCol, codeCol = codeCol)
   }
 }

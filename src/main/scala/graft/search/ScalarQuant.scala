@@ -1,6 +1,5 @@
 package graft.search
 
-import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -122,20 +121,13 @@ object ScalarQuant {
       queryVec: Array[Float],
       k: Int,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      scoreCol: String = "score",
-      roundDigits: Int = 4
+      vecCol: String = "embedding"
   ): DataFrame = {
-    val stats = fit(corpus, vecCol)
-    val q = typedLit(queryVec.map(_.toDouble).toSeq)
-    corpus
-      .crossJoin(broadcast(stats))
+    val decoded = corpus
+      .crossJoin(broadcast(fit(corpus, vecCol)))
       .withColumn("__code", encodeExpr(col(vecCol), col("mns"), col("mxs")))
       .withColumn("__dv", decodeExpr(col("__code"), col("mns"), col("mxs")))
-      .withColumn(scoreCol, round(cosineSimilarity(col("__dv"), q), roundDigits))
-      .drop("__code", "__dv", "mns", "mxs")
-      .orderBy(desc(scoreCol), col(idCol))
-      .limit(k)
+    rankDecoded(decoded, queryVec, k, idCol)
   }
 
   /** Asymmetric top-k: dequantized codes vs the full-precision query
@@ -147,17 +139,20 @@ object ScalarQuant {
       queryVec: Array[Float],
       k: Int,
       idCol: String = "vec_id",
-      codeCol: String = "code",
-      scoreCol: String = "score",
-      roundDigits: Int = 4
+      codeCol: String = "code"
   ): DataFrame = {
-    val q = typedLit(queryVec.map(_.toDouble).toSeq)
-    encoded
+    val decoded = encoded
       .crossJoin(broadcast(stats))
       .withColumn("__dv", decodeExpr(col(codeCol), col("mns"), col("mxs")))
-      .withColumn(scoreCol, round(cosineSimilarity(col("__dv"), q), roundDigits))
-      .drop("__dv", "mns", "mxs")
-      .orderBy(desc(scoreCol), col(idCol))
-      .limit(k)
+    rankDecoded(decoded, queryVec, k, idCol)
   }
+
+  /** The rounded score of the decoded vectors `__dv` against the query;
+    * the working columns (`__code` when present, `__dv`, the stats)
+    * dropped; the k best kept, ties by `idCol`.
+    */
+  private def rankDecoded(decoded: DataFrame, queryVec: Array[Float], k: Int, idCol: String): DataFrame =
+    VectorSearch.bestK(
+      VectorSearch.score(decoded, queryVec, rounded = true, vecCol = "__dv").drop("__code", "__dv", "mns", "mxs"),
+      k, Seq(idCol))
 }

@@ -69,6 +69,18 @@ object RepetitionStats {
     else
       ((BigInt(2) * numer * 1000000 + denom) / (BigInt(2) * denom)).toDouble / 1e6
 
+  /** [[ratio6]]'s Column twin at any decimal scale (10^dp): the ratio
+    * numer/denom of two integer SQL expressions, HALF_UP at `scale` in
+    * exact bigint arithmetic, then one int→double division — the form
+    * the DuckDB oracles mirror with `//`. Null on a zero denominator (an
+    * empty group or corpus has no ratio). A 4-dp percentage is the ratio
+    * of `n * 100` at scale 10⁴. Spark runs ANSI, so a bigint overflow
+    * throws rather than wraps.
+    */
+  def ratioCol(numer: String, denom: String, scale: Long): Column =
+    when(expr(denom) === 0, lit(null).cast("double")).otherwise(
+      expr(s"(2 * $numer * ${scale}L + $denom) div (2 * $denom)").cast("double") / lit(scale.toDouble))
+
   private[text] def ngramCounts(toks: Array[String], n: Int): scala.collection.mutable.Map[String, Int] = {
     val m = scala.collection.mutable.HashMap.empty[String, Int]
     var i = 0

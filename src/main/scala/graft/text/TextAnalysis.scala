@@ -231,8 +231,7 @@ object TextAnalysis {
       // resolve identically too. df > 0 by construction (every term
       // joined here appeared in >= 1 doc); 2·tf·N·10⁶ stays far under
       // Long.Max at any plausible corpus (ANSI would throw, not wrap).
-      .withColumn("score",
-        expr(s"(2 * tf * ${n}L * 1000000 + df) div (2 * df)").cast("double") / lit(1e6))
+      .withColumn("score", RepetitionStats.ratioCol(s"tf * ${n}L", "df", 1000000L))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("doc_id", "rank", "term", "tf", "df", "score")

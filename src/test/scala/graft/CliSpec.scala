@@ -189,6 +189,20 @@ class CliSpec extends SparkTestBase {
     assert(row.getString(1) == "")
   }
 
+  test("load names the stage, the checkpoint, its missing column and the stage to rerun") {
+    val work = tmp("graft-cli-fresh")
+    runCli("extract", "--input", htmlCorpus, "--work", work)
+    runCli("transform", "--work", work)
+    // a chunks checkpoint written by a build that had no folder_name
+    val stale = tmp("graft-cli-stale")
+    spark.read.parquet(s"$work/chunks").drop("folder_name").write.parquet(s"$stale/chunks")
+    val e = intercept[IllegalArgumentException](runCli("load", "--work", stale))
+    Seq("load:", s"$stale/chunks", "folder_name", "rerun transform").foreach { part =>
+      assert(e.getMessage.contains(part), s"'$part' missing from: ${e.getMessage}")
+    }
+    assert(!Files.exists(Paths.get(s"$stale/store")), "load wrote a store from a stale checkpoint")
+  }
+
   test("parse: a trailing flag with no value names the flag") {
     val e = intercept[IllegalArgumentException](Cli.parse(Array("search", "--work", "/w", "--k")))
     assert(e.getMessage.contains("--k"))

@@ -34,7 +34,7 @@ class RoundingAuditSpec extends AnyFunSuite {
   /** (bucket name, why it is safe, (line pattern, expected site count)).
     *
     * The counts are EXACT pins (ADVICE r17): several patterns are
-    * broad substrings (`* 100)`, `stddev_pop`, `cosineSimilarity`),
+    * broad substrings (`* 100)`, `stddev_pop`, `list_dot_product`),
     * so without a pin a future UNSAFE site that merely co-occurs on a
     * line with a safe idiom would be silently classified. With the
     * pin, any new line a pattern matches — safe or not — fails the
@@ -105,7 +105,9 @@ class RoundingAuditSpec extends AnyFunSuite {
         "such row is fixture-verified across four decades — the " +
         "round(9) vector-mean precedent documented in r13",
       Seq(
-        raw"cosineSimilarity" -> 15,
+        // the one vector-search score (VectorSearch.graded): every
+        // rounded cosine in the tree is this line
+        raw"round\(score, ScoreDigits\)" -> 1,
         raw"list_dot_product" -> 13,
         raw"round\(dot_product" -> 1,
         raw"stddev_pop" -> 5,
@@ -123,9 +125,7 @@ class RoundingAuditSpec extends AnyFunSuite {
         raw"round\(cos, 4\)" -> 1,
         raw"round\(col\(.score.\), 4\)" -> 2,
         raw"round\(col\(.cosine.\), 4\)" -> 2,
-        raw"round\(score, roundDigits\)" -> 1,
-        raw"round\(rawScore, dp\)" -> 1,
-        raw"round\(col\(.score.\), dp\)" -> 2
+        raw"round\(score, roundDigits\)" -> 1
       )
     ),
     (

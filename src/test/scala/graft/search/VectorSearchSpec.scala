@@ -97,18 +97,18 @@ class VectorSearchSpec extends SparkTestBase {
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
     val bounded = IvfIndex
       .searchTopKExact(labeled, centroids, radii, q, 10, scout = 1,
-        scoreRounding = Some(4), tieBreakCol = Some("vec_id"))
+        rounded = true, tieBreak = Seq("vec_id"))
       .orderBy(desc("score"), col("vec_id"))
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("score")))
     assert(bounded.toSeq == brute.toSeq)
     // guard rails: rounding without a tiebreak, or slack inside the
     // rounding grid, are caller bugs — fail fast.
     intercept[IllegalArgumentException] {
-      IvfIndex.searchTopKExact(labeled, centroids, radii, q, 10, scoreRounding = Some(4))
+      IvfIndex.searchTopKExact(labeled, centroids, radii, q, 10, rounded = true)
     }
     intercept[IllegalArgumentException] {
       IvfIndex.searchTopKExact(labeled, centroids, radii, q, 10,
-        scoreRounding = Some(4), tieBreakCol = Some("vec_id"), boundSlack = 1e-5)
+        rounded = true, tieBreak = Seq("vec_id"), boundSlack = 1e-5)
     }
     labeled.unpersist()
   }
@@ -121,13 +121,19 @@ class VectorSearchSpec extends SparkTestBase {
     val radii = IvfIndex.clusterRadii(labeled, centroids)
     val queries = embeddings.filter(col("vec_id") < 8)
     def key(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) -> r.getAs[Long]("neighbor_id")).toMap
-    val brute = key(
-      VectorSearch.knnJoin(queries, embeddings, "vec_id", "vec_id", 5).collect())
-    val exact = key(
-      IvfIndex.knnJoinExact(queries, labeled, centroids, radii, "vec_id", "vec_id", 5, scoutProbe = 1)
-        .collect())
-    assert(exact == brute)
+      rows.map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank")) ->
+        (r.getAs[Long]("neighbor_id"), r.getAs[Double]("score"))).toMap
+    // the defaults, and the arguments q_knn_join / q_ivf_knn_join grade
+    // (self excluded, ranked on the rounded score)
+    Seq(false -> false, true -> true).foreach { case (excludeSelf, rounded) =>
+      val brute = key(VectorSearch.knnJoin(queries, embeddings, "vec_id", "vec_id", 5,
+        excludeSelf = excludeSelf, rounded = rounded).collect())
+      val exact = key(
+        IvfIndex.knnJoinExact(queries, labeled, centroids, radii, "vec_id", "vec_id", 5, scoutProbe = 1,
+          rounded = rounded, excludeSelf = excludeSelf).collect())
+      assert(exact == brute, s"excludeSelf=$excludeSelf rounded=$rounded")
+      assert(brute.size == 8 * 5)
+    }
     labeled.unpersist()
   }
 
@@ -236,5 +242,19 @@ class VectorSearchSpec extends SparkTestBase {
         .collect().map(_.getAs[Long]("vec_id")).toSet
       assert(got == exact, s"bounded search must stay exact: $got vs $exact")
     } finally labeled.unpersist()
+  }
+
+  test("a query-vector literal reaches a plan only in VectorSearch.score") {
+    // query vectors are named q/qv/qvec/queryVec throughout src/main;
+    // the second form catches a literal fed straight into a cosine
+    val sites = graft.MainSources.sitesOf(
+      raw"typedLit\((?:q|qv|qvec|queryVec)\b|cosineSimilarity\([^\n]*typedLit\(".r)
+    assert(sites == Seq("src/main/scala/graft/search/VectorSearch.scala"), sites.mkString("\n"))
+  }
+
+  test("the score-ranked window is written in the search code only in VectorSearch.bestKPerKey") {
+    val sites = graft.MainSources.sitesOf(raw"Window\.partitionBy\([^\n]*?\)\s*\.orderBy\(desc\(".r)
+      .filter(p => p.contains("/graft/search/") || p.endsWith("/SearchRows.scala"))
+    assert(sites == Seq("src/main/scala/graft/search/VectorSearch.scala"), sites.mkString("\n"))
   }
 }
