@@ -1,6 +1,7 @@
 package graft.chunk
 
 import graft.embed.Embedder
+import graft.functions.VectorKernel
 import scala.collection.mutable.ArrayBuffer
 
 /** K1 — semantic split (reference chunker.py:45-62 delegating to
@@ -27,15 +28,10 @@ final class SemanticSplitter(
     parts.map(_.trim).filter(_.nonEmpty)
   }
 
+  /** 1 − cosine; 1.0 when either vector is zero. */
   private def cosineDistance(a: Array[Float], b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < a.length) {
-      dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-      i += 1
-    }
-    val d = math.sqrt(na) * math.sqrt(nb)
-    if (d == 0) 1.0 else 1.0 - dot / d
+    val d = VectorKernel.norm(a) * VectorKernel.norm(b)
+    if (d == 0) 1.0 else 1.0 - VectorKernel.dot(a, b) / d
   }
 
   /** Linear-interpolated percentile (numpy default), matching the

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.functions.VectorKernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,13 +42,16 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
       .map(i => when(element_at(v, startBit + i + 1) >= 0, lit(1L)).otherwise(lit(0L)) * lit(1L << i))
       .reduce(_ + _)
 
-  /** Exact-cosine verify of all index pairs within one bucket's member
-    * list — tight primitive-double loops, left-to-right accumulation so
-    * the result is bit-identical to the
+  /** Exact-cosine verify of vector pairs: every (A-vector, B-vector)
+    * pair whose cosine is at least `threshold`, as (i, j, cosine).
+    * `cosinePairs(vs, vs, t)` is a block against itself and visits only
+    * j > i, every unordered pair once. Norms and dots are [[VectorKernel]]'s,
+    * so a pair's cosine is bit-identical to the
     * [[graft.functions.VectorFunctions.cosineSimilarity]] Column
-    * formulation (dot and self-dot fold left over exact float→double
-    * promotions; zero-norm members pair with nothing, matching the
-    * Column form's null cosine being filtered).
+    * formulation and does not depend on which block each vector landed
+    * in (DedupSpec pins blocked-vs-naive equality). Zero-norm vectors
+    * pair with nothing, matching the Column form's null cosine being
+    * filtered; neither do vectors of unequal length.
     *
     * The pair enumeration is TILED (round-11 sf100 finding): the naive
     * i<j sweep re-streams every later vector per row, so once a bucket
@@ -58,48 +62,37 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
     * buckets, Σpairs only 1.12× the uniform expectation). Tiles of 128
     * rows (two ~1 MB tile sides, L2-resident) cut vector re-streaming
     * by the tile height; the visit order changes but the visited pair
-    * SET and each pair's arithmetic are identical, and the emitted
-    * pairs are (i, j)-sorted afterwards so downstream order matches
-    * the naive loop exactly.
+    * SET and each pair's arithmetic are identical, and
+    * [[cosinePairsWithin]] sorts its pairs by (i, j) so downstream order
+    * matches the naive loop exactly.
     */
   private val PairTileRows = 128
 
-  private def bucketPairLoop(
-      vecs: Array[Array[Double]],
+  private def cosinePairs(
+      vecsA: Array[Array[Double]],
+      vecsB: Array[Array[Double]],
       threshold: Double
   ): Seq[(Int, Int, Double)] = {
-    val n = vecs.length
-    val norms = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val v = vecs(i)
-      var s = 0.0
-      var d = 0
-      while (d < v.length) { s += v(d) * v(d); d += 1 }
-      norms(i) = math.sqrt(s)
-      i += 1
-    }
+    val self = vecsA eq vecsB
+    val na = vecsA.map(VectorKernel.norm)
+    val nb = if (self) na else vecsB.map(VectorKernel.norm)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
     val T = PairTileRows
     var ti = 0
-    while (ti < n) {
-      val tiEnd = math.min(ti + T, n)
-      var tj = ti
-      while (tj < n) {
-        val tjEnd = math.min(tj + T, n)
-        i = ti
+    while (ti < vecsA.length) {
+      val tiEnd = math.min(ti + T, vecsA.length)
+      var tj = if (self) ti else 0
+      while (tj < vecsB.length) {
+        val tjEnd = math.min(tj + T, vecsB.length)
+        var i = ti
         while (i < tiEnd) {
-          val a = vecs(i)
-          val na = norms(i)
-          var j = math.max(tj, i + 1)
+          val a = vecsA(i)
+          var j = if (self) math.max(tj, i + 1) else tj
           while (j < tjEnd) {
-            val denom = na * norms(j)
-            val b = vecs(j)
+            val denom = na(i) * nb(j)
+            val b = vecsB(j)
             if (denom != 0.0 && a.length == b.length) {
-              var s = 0.0
-              var d = 0
-              while (d < a.length) { s += a(d) * b(d); d += 1 }
-              val c = s / denom
+              val c = VectorKernel.dot(a, b) / denom
               if (c >= threshold) out += ((i, j, c))
             }
             j += 1
@@ -110,8 +103,13 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
       }
       ti += T
     }
-    out.sortInPlace()(Ordering.Tuple3(Ordering.Int, Ordering.Int, Ordering.Double.TotalOrdering)).toSeq
+    out.toSeq
   }
+
+  /** The pairs within one block, (i, j)-sorted. */
+  private def cosinePairsWithin(vecs: Array[Array[Double]], threshold: Double): Seq[(Int, Int, Double)] =
+    cosinePairs(vecs, vecs, threshold).sorted(
+      Ordering.Tuple3(Ordering.Int, Ordering.Int, Ordering.Double.TotalOrdering))
 
   /** Within-bucket verified cosine pairs for a (id, v, bkt) frame: one
     * shuffle groups each bucket's members onto one task, then the
@@ -148,7 +146,7 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
     val pairUdf =
       if (elemIsFloat)
         udf { (vs: Array[Array[Float]]) =>
-          bucketPairLoop(vs.map { v =>
+          cosinePairsWithin(vs.map { v =>
             val a = new Array[Double](v.length)
             var i = 0
             while (i < v.length) { a(i) = v(i).toDouble; i += 1 }
@@ -157,7 +155,7 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
         }
       else
         udf { (vs: Array[Array[Double]]) =>
-          bucketPairLoop(vs, threshold)
+          cosinePairsWithin(vs, threshold)
         }
     grouped
       .select(col("ids"), explode(pairUdf(col("vs"))).as("p"))
@@ -206,67 +204,6 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
     verifiedPairsWithinBuckets(t, cosineThreshold)
   }
 
-  /** Cross-block twin of [[bucketPairLoop]]: every (A-vector,
-    * B-vector) pair, the SAME norm/dot/threshold arithmetic term for
-    * term — the dot accumulates over dimensions in the same order and
-    * each per-dimension multiply commutes, so a pair's cosine is
-    * bit-identical no matter which side of a block split each vector
-    * landed on (pinned by DedupSpec's blocked-vs-naive equality).
-    */
-  private def crossPairLoop(
-      vecsA: Array[Array[Double]],
-      vecsB: Array[Array[Double]],
-      threshold: Double
-  ): Seq[(Int, Int, Double)] = {
-    def norms(vecs: Array[Array[Double]]): Array[Double] = {
-      val out = new Array[Double](vecs.length)
-      var i = 0
-      while (i < vecs.length) {
-        val v = vecs(i)
-        var s = 0.0
-        var d = 0
-        while (d < v.length) { s += v(d) * v(d); d += 1 }
-        out(i) = math.sqrt(s)
-        i += 1
-      }
-      out
-    }
-    val na = norms(vecsA)
-    val nb = norms(vecsB)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)]
-    val T = PairTileRows
-    var ti = 0
-    while (ti < vecsA.length) {
-      val tiEnd = math.min(ti + T, vecsA.length)
-      var tj = 0
-      while (tj < vecsB.length) {
-        val tjEnd = math.min(tj + T, vecsB.length)
-        var i = ti
-        while (i < tiEnd) {
-          val a = vecsA(i)
-          val n1 = na(i)
-          var j = tj
-          while (j < tjEnd) {
-            val denom = n1 * nb(j)
-            val b = vecsB(j)
-            if (denom != 0.0 && a.length == b.length) {
-              var s = 0.0
-              var d = 0
-              while (d < a.length) { s += a(d) * b(d); d += 1 }
-              val c = s / denom
-              if (c >= threshold) out += ((i, j, c))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        tj += T
-      }
-      ti += T
-    }
-    out.toSeq
-  }
-
   /** Block count for [[bruteForceCosinePairs]]: B id-hash blocks turn
     * the one monolithic all-pairs loop into B within-block loops plus
     * B·(B−1)/2 cross-block loops (36 near-even tasks at 8) — the r19
@@ -295,7 +232,7 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
     * grouped primitive loop (the blocked path's scaffolding dominates
     * there — VERDICT r19); above it the loop is BLOCKED
     * ([[BruteForceBlocks]] id-hash blocks; within-block pairs through
-    * [[bucketPairLoop]], cross-block through [[crossPairLoop]] — same
+    * [[cosinePairsWithin]], cross-block through [[cosinePairs]] — same
     * arithmetic, bit-identical cosines, each unordered pair exactly
     * once; DedupSpec pins blocked-vs-naive equality). The block join
     * broadcasts the slice B ways — acceptable only because this is the
@@ -351,9 +288,9 @@ private[dedup] trait EmbedNearDupOps extends Serializable {
       // co-locating blocks (ADVICE r19) — par partitions make
       // collisions harmless
       .repartition(par, col("bkt"))
-    val withinUdf = udf { (vs: Array[Array[Double]]) => bucketPairLoop(vs, cosineThreshold) }
+    val withinUdf = udf { (vs: Array[Array[Double]]) => cosinePairsWithin(vs, cosineThreshold) }
     val crossUdf = udf { (vsA: Array[Array[Double]], vsB: Array[Array[Double]]) =>
-      crossPairLoop(vsA, vsB, cosineThreshold)
+      cosinePairs(vsA, vsB, cosineThreshold)
     }
     val within = blocks
       .select(col("ids"), explode(withinUdf(col("vs"))).as("p"))

@@ -7,23 +7,20 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import VectorKernel.{call, checkVec, isFloat}
 
 /** A stack of k×dim float pivot matrices (IVF centroids, SemDeDup
   * pivots, an eval suite's vectors) with every pivot's L2 norm,
-  * computed once here by the same left-to-right double accumulation as
-  * [[DotProduct]], so a cosine against a pivot is bit-identical to
-  * [[CosineSimilarity]] against the same vector. A flat set is a stack
-  * of one matrix; hierarchical k-means stacks one sub-pivot matrix per
-  * level-1 cell. Equality is by value (bit patterns), so two plans
-  * built from equal matrices canonicalize equal.
+  * computed once here by [[VectorKernel.norm]], so a cosine against a
+  * pivot is bit-identical to [[CosineSimilarity]] against the same
+  * vector. A flat set is a stack of one matrix; hierarchical k-means
+  * stacks one sub-pivot matrix per level-1 cell. Equality is by value
+  * (bit patterns), so two plans built from equal matrices canonicalize
+  * equal.
   */
 final class PivotStack private (val mats: Array[Array[Array[Float]]]) extends Serializable {
-  val norms: Array[Array[Double]] = mats.map(_.map { p =>
-    var s = 0.0; var i = 0
-    while (i < p.length) { s += p(i).toDouble * p(i).toDouble; i += 1 }
-    math.sqrt(s)
-  })
+  val norms: Array[Array[Double]] = mats.map(_.map(VectorKernel.norm))
 
   @transient private lazy val hash = java.util.Arrays.deepHashCode(mats.asInstanceOf[Array[AnyRef]])
   override def hashCode: Int = hash
@@ -205,26 +202,14 @@ object PivotKernel {
     }
   }
 
-  private[functions] def isFloat(vec: Expression): Boolean =
-    vec.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  private[functions] def checkVec(vec: Expression, name: String): TypeCheckResult = vec.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"$name needs array<float|double>, got $t")
-  }
-
   private[functions] def checkVecInt(vec: Expression, idx: Expression, name: String): TypeCheckResult =
     if (idx.dataType != IntegerType)
       TypeCheckResult.TypeCheckFailure(s"$name needs an int index, got ${idx.dataType}")
-    else checkVec(vec, name)
+    else checkVec(name, vec)
 
   /** `pivots` as a reference in generated code; one Java type for both forms. */
   private[functions] def ref(ctx: CodegenContext, pivots: PivotSet): String =
     ctx.addReferenceObj("pivots", pivots, classOf[PivotSet].getName)
-
-  private val Name = "graft.functions.PivotKernel"
-  private[functions] def call(method: String, args: String*): String =
-    s"$Name.$method(${args.mkString(", ")})"
 }
 
 /** Nearest pivot by cosine within matrix `cell` of `pivots` (IVF and
@@ -243,12 +228,12 @@ case class NearestPivotCosine(left: Expression, right: Expression, pivots: Pivot
     PivotKernel.checkVecInt(left, right, "nearest_pivot")
 
   override def nullSafeEval(v: Any, cell: Any): Any =
-    PivotKernel.nearest(v.asInstanceOf[ArrayData], PivotKernel.isFloat(left), pivots, cell.asInstanceOf[Int])
+    PivotKernel.nearest(v.asInstanceOf[ArrayData], isFloat(left), pivots, cell.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = PivotKernel.ref(ctx, pivots)
     defineCodeGen(ctx, ev, (v, c) =>
-      PivotKernel.call("nearest", v, PivotKernel.isFloat(left).toString, ref, c))
+      call(PivotKernel, "nearest", v, isFloat(left).toString, ref, c))
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
@@ -269,15 +254,15 @@ case class TopPivotsCosine(child: Expression, pivots: PivotSet, n: Int) extends 
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = PivotKernel.checkVec(child, "top_pivots")
+  override def checkInputDataTypes(): TypeCheckResult = checkVec("top_pivots", child)
 
   override def nullSafeEval(v: Any): Any =
-    PivotKernel.topN(v.asInstanceOf[ArrayData], PivotKernel.isFloat(child), pivots, n)
+    PivotKernel.topN(v.asInstanceOf[ArrayData], isFloat(child), pivots, n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = PivotKernel.ref(ctx, pivots)
     defineCodeGen(ctx, ev, v =>
-      PivotKernel.call("topN", v, PivotKernel.isFloat(child).toString, ref, n.toString))
+      call(PivotKernel, "topN", v, isFloat(child).toString, ref, n.toString))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -302,7 +287,7 @@ case class PivotCosine(left: Expression, right: Expression, pivots: PivotSet)
     PivotKernel.checkVecInt(left, right, "pivot_cosine")
 
   override def nullSafeEval(v: Any, idx: Any): Any = {
-    val r = PivotKernel.cosineAt(v.asInstanceOf[ArrayData], PivotKernel.isFloat(left), pivots, idx.asInstanceOf[Int])
+    val r = PivotKernel.cosineAt(v.asInstanceOf[ArrayData], isFloat(left), pivots, idx.asInstanceOf[Int])
     if (r == null) null else r.doubleValue()
   }
 
@@ -311,7 +296,7 @@ case class PivotCosine(left: Expression, right: Expression, pivots: PivotSet)
     nullSafeCodeGen(ctx, ev, (v, i) => {
       val r = ctx.freshName("cos")
       s"""
-         |java.lang.Double $r = ${PivotKernel.call("cosineAt", v, PivotKernel.isFloat(left).toString, ref, i)};
+         |java.lang.Double $r = ${call(PivotKernel, "cosineAt", v, isFloat(left).toString, ref, i)};
          |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
        """.stripMargin
     })

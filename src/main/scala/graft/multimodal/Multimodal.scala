@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.functions.VectorKernel
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -302,7 +303,7 @@ object Multimodal {
         v(math.floorMod(h, dim)) += (if ((h & 1) == 0) 1f else -1f)
         i += step
       }
-      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+      val n = VectorKernel.norm(v)
       if (n > 0) v.map(x => (x / n).toFloat) else v
     }
 

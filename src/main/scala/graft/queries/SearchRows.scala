@@ -168,7 +168,7 @@ object SearchRows extends CatalogFamily {
               lit(SearchFacade.detectQueryLanguageScala(q)).as("query_lang"),
               col("doc_id"),
               col("language"),
-              round(col("score"), 4).as("score"))
+              round(col("score"), VectorSearch.ScoreDigits).as("score"))
           }
           .reduce(_.unionByName(_))
           .localCheckpoint()
@@ -846,7 +846,7 @@ object SearchRows extends CatalogFamily {
         e.filter(col("vec_id") < 10), e, "vec_id", "vec_id", "label", "label", k = 3)
       .select(
         col("query_id"), col("neighbor_id"),
-        round(col("score"), 4).as("score"), col("rank"))
+        round(col("score"), VectorSearch.ScoreDigits).as("score"), col("rank"))
   }
 
   val qHardNegativesSql: String =

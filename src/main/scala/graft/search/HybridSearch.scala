@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object HybridSearch {
 
+  /** A fused RRF score has this many decimals (Spark's HALF_UP `round`). */
+  val RrfDigits = 6
+
   /** Attach a dense 1-based `rank` to an already-top-k result, ordered
     * by `order`. The window intentionally spans ALL rows — the input
     * is a k-row ranking (post-`limit`), the same bounded-k altitude as
@@ -42,7 +45,7 @@ object HybridSearch {
   /** Fuse rankings (each `(idCol, rankCol)`-shaped, k rows) by RRF.
     * A document absent from a ranking contributes 0 for it. Output:
     * idCol, one `rank_<name>` column per input (null where absent),
-    * `rrf` rounded to `roundDigits`; top `k` by descending fused
+    * `rrf` rounded to [[RrfDigits]]; top `k` by descending fused
     * score, ties broken by ascending id.
     */
   def rrfFuse(
@@ -50,8 +53,7 @@ object HybridSearch {
       k: Int,
       idCol: String = "doc_id",
       rankCol: String = "rank",
-      kConst: Int = 60,
-      roundDigits: Int = 6
+      kConst: Int = 60
   ): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse needs at least one ranking")
     require(rankings.map(_._1).distinct.size == rankings.size, "duplicate ranking names")
@@ -68,7 +70,7 @@ object HybridSearch {
       }
       .reduce(_ + _)
     joined
-      .withColumn("rrf", round(rrf, roundDigits))
+      .withColumn("rrf", round(rrf, RrfDigits))
       .orderBy(desc("rrf"), col(idCol))
       .limit(k)
   }

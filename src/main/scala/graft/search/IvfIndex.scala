@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.functions.VectorFunctions._
+import graft.functions.VectorKernel.{dot, norm}
 import graft.model.IndexConfig
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.{Vector, Vectors}
@@ -127,11 +128,11 @@ object IvfIndex {
     * centroids are tiny).
     */
   def nearestClusters(queryVec: Array[Float], centroids: Array[Array[Float]], nprobe: Int): Seq[Int] = {
-    val qn = math.sqrt(dotD(queryVec, queryVec))
+    val qn = norm(queryVec)
     centroids.zipWithIndex
       .map { case (c, i) =>
-        val d = math.sqrt(dotD(c, c)) * qn
-        (if (d == 0) -1.0 else dotD(c, queryVec) / d, i)
+        val d = norm(c) * qn
+        (if (d == 0) -1.0 else dot(c, queryVec) / d, i)
       }
       .sortBy(-_._1)
       .take(nprobe)
@@ -176,12 +177,6 @@ object IvfIndex {
     centroids.indices.map(j => measured.getOrElse(j, 0.0)).toArray
   }
 
-  private def dotD(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-
   /** Driver-side ub_j for a single query (see [[clusterRadii]]). A
     * zero-norm query has no defined cosine — every bound degrades to
     * 1.0 (probe everything), which keeps the path correct.
@@ -191,11 +186,11 @@ object IvfIndex {
       centroids: Array[Array[Float]],
       radii: Array[Double]
   ): Array[Double] = {
-    val qn = math.sqrt(dotD(queryVec, queryVec))
+    val qn = norm(queryVec)
     if (qn == 0.0) return Array.fill(centroids.length)(1.0)
     centroids.zipWithIndex.map { case (c, j) =>
-      val dotQhatC = dotD(queryVec, c) / qn // dot(q̂, c_j)
-      val distSq = math.max(0.0, 1.0 - 2.0 * dotQhatC + dotD(c, c))
+      val dotQhatC = dot(queryVec, c) / qn // dot(q̂, c_j)
+      val distSq = math.max(0.0, 1.0 - 2.0 * dotQhatC + dot(c, c))
       val gap = math.max(0.0, math.sqrt(distSq) - radii(j))
       1.0 - gap * gap / 2.0
     }
@@ -314,7 +309,7 @@ object IvfIndex {
   )(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val centDf = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, dotD(c, c)) }
+      .map { case (c, i) => (i, c.toSeq, dot(c, c)) }
       .toSeq
       .toDF("cluster_id", "centroid", "__cnorm2")
       .withColumn("__radius", element_at(typedLit(radii.toSeq), col("cluster_id") + 1))

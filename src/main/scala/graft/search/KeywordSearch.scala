@@ -32,6 +32,9 @@ import org.apache.spark.sql.functions._
   */
 object KeywordSearch {
 
+  /** A BM25 score has this many decimals (Spark's HALF_UP `round`). */
+  val Bm25Digits = 6
+
   /** Whitespace tokenization, shared with TextAnalysis/TF-IDF so df
     * and tf agree with the rest of the text stack.
     */
@@ -42,7 +45,7 @@ object KeywordSearch {
     * score (ties broken by ascending id — required for a deterministic
     * k-set). Output: idCol, one `tf_<term>` column per query term
     * (ints; handy relevance diagnostics), and `score` rounded to
-    * `roundDigits`.
+    * [[Bm25Digits]].
     *
     * @param rationalIdf use (N - df + ½)/(df + ½) instead of
     *   ln(1 + that) — the cross-engine-reproducible variant the graded
@@ -56,8 +59,7 @@ object KeywordSearch {
       textCol: String = "text",
       k1: Double = 1.2,
       b: Double = 0.75,
-      rationalIdf: Boolean = false,
-      roundDigits: Int = 6
+      rationalIdf: Boolean = false
   ): DataFrame = {
     require(terms.nonEmpty, "bm25TopK needs at least one query term")
     require(terms.distinct.size == terms.size, "duplicate query terms")
@@ -96,7 +98,7 @@ object KeywordSearch {
 
     // Stage 4: shared scorer — both variants meet here.
     scoreAndSelect(perDoc.crossJoin(broadcast(stats)), terms, k, idCol,
-      k1, b, rationalIdf, roundDigits, nCol = "__n", dlsumCol = "__dlsum")
+      k1, b, rationalIdf, nCol = "__n", dlsumCol = "__dlsum")
   }
 
   /** The BM25 scoring tail both variants share: score =
@@ -115,7 +117,6 @@ object KeywordSearch {
       k1: Double,
       b: Double,
       rationalIdf: Boolean,
-      roundDigits: Int,
       nCol: String,
       dlsumCol: String
   ): DataFrame = {
@@ -134,7 +135,7 @@ object KeywordSearch {
     val outCols =
       Seq(col(idCol)) ++
         terms.zipWithIndex.map { case (t, i) => col(s"__tf$i").cast("int").as(s"tf_$t") } ++
-        Seq(round(score, roundDigits).as("score"))
+        Seq(round(score, Bm25Digits).as("score"))
     scored
       .filter(score > 0) // at least one query term present
       .select(outCols: _*)
@@ -199,8 +200,7 @@ object KeywordSearch {
       idCol: String = "doc_id",
       k1: Double = 1.2,
       b: Double = 0.75,
-      rationalIdf: Boolean = false,
-      roundDigits: Int = 6
+      rationalIdf: Boolean = false
   ): DataFrame = {
     require(terms.nonEmpty, "bm25TopKIndexed needs at least one query term")
     require(terms.distinct.size == terms.size, "duplicate query terms")
@@ -220,6 +220,6 @@ object KeywordSearch {
       .agg(tfAggs.head, tfAggs.tail: _*)
       .join(index.docLens.withColumnRenamed("dl", "__dl"), Seq(idCol))
     scoreAndSelect(perDoc.crossJoin(broadcast(statsRow)), terms, k, idCol,
-      k1, b, rationalIdf, roundDigits, nCol = "n", dlsumCol = "dlsum")
+      k1, b, rationalIdf, nCol = "n", dlsumCol = "dlsum")
   }
 }

@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.functions.VectorFunctions._
+import graft.functions.VectorKernel
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
@@ -150,7 +151,7 @@ object ProductQuant {
     val dsub = codebooks(0)(0).length
     val s = if (shortlist > 0) shortlist else 5 * k
     val qd = queryVec.map(_.toDouble)
-    val qNorm = math.sqrt(qd.map(x => x * x).sum)
+    val qNorm = VectorKernel.norm(queryVec)
     val qn = if (qNorm == 0) qd else qd.map(_ / qNorm)
     // ADC table: table(j)(c) = q̂_subj · codebook entry (driver-side, m·ksub doubles)
     val table = Array.tabulate(m) { j =>

@@ -1,5 +1,6 @@
 package graft.search
 
+import graft.functions.VectorKernel
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -21,12 +22,18 @@ import org.apache.spark.sql.types._
   *
   * Determinism (DuckDB-replayed in q_mmr_rerank): pairwise cosines are
   * computed left-to-right in doubles and rounded HALF_UP to
-  * `simRounding` (DuckDB's round-half-away-from-zero), the MMR
+  * [[SimDigits]] (DuckDB's round-half-away-from-zero), the MMR
   * objective uses λ and (1 − λ) — the oracle spells `(1 - λ)` the same
   * way, since the IEEE double `1 − 0.7` is NOT the literal `0.3` — and
   * ties fall to ascending id.
   */
 object Rerank {
+
+  /** Decimals of a pairwise cosine, rounded before it enters the objective. */
+  val SimDigits = 4
+
+  /** Decimals of an output `mmr_score`. */
+  val MmrDigits = 6
 
   /** MMR-select `k` rows from `candidates` (columns: idCol, relCol,
     * vecCol). Output: rank (1-based), id, mmr_score (the objective
@@ -38,9 +45,7 @@ object Rerank {
       lambda: Double = 0.7,
       idCol: String = "vec_id",
       relCol: String = "rel",
-      vecCol: String = "embedding",
-      simRounding: Int = 4,
-      outRounding: Int = 6
+      vecCol: String = "embedding"
   ): DataFrame = {
     val spark = candidates.sparkSession
     val rows = candidates.select(idCol, relCol, vecCol).collect()
@@ -53,11 +58,10 @@ object Rerank {
       if (x.isNaN || x.isInfinite) x
       else BigDecimal(x).setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble
 
+    // a zero vector is at sim 0.0 to everything
     def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dab = 0.0; var daa = 0.0; var dbb = 0.0; var i = 0
-      while (i < a.length) { dab += a(i) * b(i); daa += a(i) * a(i); dbb += b(i) * b(i); i += 1 }
-      val d = math.sqrt(daa) * math.sqrt(dbb)
-      if (d == 0) 0.0 else dab / d
+      val d = VectorKernel.norm(a) * VectorKernel.norm(b)
+      if (d == 0) 0.0 else VectorKernel.dot(a, b) / d
     }
 
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Double)] // (rank, idx, mmr)
@@ -68,7 +72,7 @@ object Rerank {
     def sim(i: Int, j: Int): Double =
       simCache.getOrElseUpdate(
         if (i < j) (i, j) else (j, i),
-        roundHalfUp(cos(vecs(i), vecs(j)), simRounding)
+        roundHalfUp(cos(vecs(i), vecs(j)), SimDigits)
       )
 
     var rank = 1
@@ -91,7 +95,7 @@ object Rerank {
     }
 
     val out = selected.map { case (r, idx, score) =>
-      Row(r, ids(idx), roundHalfUp(score, outRounding))
+      Row(r, ids(idx), roundHalfUp(score, MmrDigits))
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(out.toSeq, 1),

@@ -1,7 +1,7 @@
 package graft.chunk
 
 import graft.SparkTestBase
-import graft.embed.HashEmbedder
+import graft.embed.{Embedder, HashEmbedder}
 import graft.model.ChunkerConfig
 
 class SemanticSplitterSpec extends SparkTestBase {
@@ -40,5 +40,20 @@ class SemanticSplitterSpec extends SparkTestBase {
     val chunks = Chunker.chunkText(text, cfg, Some(splitter))
     assert(chunks.nonEmpty)
     chunks.foreach(c => assert(c.length <= cfg.maxChunkSize))
+  }
+
+  test("a zero embedding is at distance 1.0 from its neighbour") {
+    val table = Map(
+      "x." -> Array(1f, 0f), "w." -> Array(1f, 0f), "y." -> Array(0f, 1f), "z." -> Array(0f, 0f))
+    // percentile 0: the threshold is the smallest distance, so the text
+    // breaks exactly where a distance exceeds it
+    val bySentence = new SemanticSplitter(new Embedder {
+      val dim = 2
+      def embed(text: String): Array[Float] = table(text)
+    }, breakpointPercentile = 0.0)
+    // distances (x,y) = 1.0 (orthogonal) and (y,z): no break, so (y,z) = 1.0
+    assert(bySentence.split("x. y. z.") == Seq("x. y. z."))
+    // distances (x,w) = 0.0 and (w,z): one break, so (w,z) > 0.0 (not NaN)
+    assert(bySentence.split("x. w. z.") == Seq("x. w.", "z."))
   }
 }

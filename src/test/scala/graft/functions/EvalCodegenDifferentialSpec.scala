@@ -5,24 +5,26 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Whole-catalog interpreted-vs-codegen differential for the custom
-  * Catalyst expressions (r18): every expression ships BOTH a
-  * `nullSafeEval` (interpreted) and a `doGenCode` body, and only the
-  * codegen path runs under the default configuration — the
-  * interpreted twin executes on codegen fallback (compilation
-  * failure, 64KB method limits on wide plans) and inside the
-  * optimizer's constant folding, where a divergence would grade WRONG
-  * silently. BloomExpressionsSpec pinned this for the bloom probe;
-  * this spec pins the whole vector family plus RegexChain by running
-  * the SAME frame through both engine modes
+  * Catalyst expressions (r18). Each vector expression's `nullSafeEval`
+  * and `doGenCode` call the same kernel loop ([[VectorKernel]],
+  * [[PivotKernel]]), so what this spec guards is the WIRING of those
+  * calls: which child is read as float or double, the argument order,
+  * null/zero-denominator handling around the call, and the Java call
+  * string itself. Only the codegen path runs under the default
+  * configuration — the interpreted path executes on codegen fallback
+  * (compilation failure, 64KB method limits on wide plans) and inside
+  * the optimizer's constant folding, where a divergence would grade
+  * WRONG silently. RegexChain's call into its `run` is pinned the same
+  * way. The SAME frame runs through both engine modes
   * (`spark.sql.codegen.factoryMode=NO_CODEGEN` +
-  * `spark.sql.codegen.wholeStage=false`) and comparing BIT patterns
-  * (doubleToLongBits/floatToIntBits), not values — so a −0.0/0.0 or
-  * canonical-NaN difference also fails.
+  * `spark.sql.codegen.wholeStage=false`) and the BIT patterns
+  * (doubleToLongBits/floatToIntBits) are compared, not values — so a
+  * −0.0/0.0 or canonical-NaN difference also fails.
   *
   * The frame includes the adversarial corners: a zero vector (the
-  * normalize guard), negative components, subnormals, and a NaN
-  * component (argmax comparison semantics around NaN are exactly
-  * where an eval `>` vs codegen `>` asymmetry would hide).
+  * normalize guard), negative components, subnormals, a NaN component
+  * (argmax comparison semantics around NaN) and a ragged pair (b
+  * shorter than a: dot and squared L2 run over the common prefix).
   */
 class EvalCodegenDifferentialSpec extends SparkTestBase {
 
@@ -52,7 +54,8 @@ class EvalCodegenDifferentialSpec extends SparkTestBase {
       (Array(0f, 0f, 0f, 0f, 0f, 0f), Array(1f, 2f, 3f, 4f, 5f, 6f), 0), // zero vector
       (Array(1e-40f, -1e-40f, 1e38f, -1e38f, 0.5f, -0.5f),
         Array(2f, 2f, 2f, 2f, 2f, 2f), 1), // subnormals + near-overflow
-      (Array(Float.NaN, 1f, 2f, 3f, 4f, 5f), Array(1f, 0f, 0f, 0f, 0f, 0f), 0)
+      (Array(Float.NaN, 1f, 2f, 3f, 4f, 5f), Array(1f, 0f, 0f, 0f, 0f, 0f), 0),
+      (Array(1f, -2f, 3f, 0.5f, -4f, 2f), Array(2f, 0.25f, -1f), 1) // ragged: b shorter
     ).toDF("a", "b", "cell")
   }
 
@@ -111,6 +114,17 @@ class EvalCodegenDifferentialSpec extends SparkTestBase {
     val interp = interpreted(render(projected(frame)))
     assert(interp == codegen, "eval/codegen divergence (interpreted, then codegen):\n" +
       divergence(interp, codegen))
+  }
+
+  test("a ragged pair: dot and squared L2 sum over the common prefix in both engine modes") {
+    def ragged = render(frame.filter(size(col("b")) < size(col("a"))).select(
+      VectorFunctions.dotProduct(col("a"), col("b")),
+      VectorFunctions.l2DistanceSq(col("a"), col("b"))))
+    // over the first three components, every term exact:
+    // 1·2 + (−2)·0.25 + 3·(−1) = −1.5; (1−2)² + (−2−0.25)² + (3+1)² = 22.0625
+    val expected = Seq(bits(Row(-1.5, 22.0625)))
+    assert(ragged == expected, "codegen")
+    assert(interpreted(ragged) == expected, "interpreted")
   }
 
   test("one-pass cosine is bit-identical to the three-sum form in both engine modes") {

@@ -194,4 +194,23 @@ class VectorFunctionsSpec extends SparkTestBase {
       .collect()
     rows.foreach(r => assert(r.getInt(1) == r.getInt(2), s"vec ${r.getLong(0)}"))
   }
+
+  test("generated-code strings in src/main write no loop") {
+    // a loop in a doGenCode string is a second copy of a kernel loop
+    val sites = graft.MainSources.sitesOf("""for \((?:int |; )?\$""".r)
+    assert(sites.isEmpty, sites.mkString("\n"))
+  }
+
+  test("a dot/norm multiply-accumulate over vector elements is written only in the kernels and HashEmbedder") {
+    // x(i) * y(i) accumulated (optionally widened), or map(x => x * x).sum
+    val sites = graft.MainSources.sitesOf(
+      """\+= \w+\((\w+)\)(?:\.toDouble)? \* \w+\(\1\)|\.map\((\w+) => \2(?:\.toDouble)? \* \2\)\.sum""".r)
+    val perFile = sites.groupBy(identity).map { case (f, s) => f -> s.size }
+    // VectorKernel's two array dots, PivotKernel's pivot scan (|v|² and
+    // v·p) and HashEmbedder's 1/|v| (the oracle replays those bits)
+    assert(perFile == Map(
+      "src/main/scala/graft/functions/VectorKernel.scala" -> 2,
+      "src/main/scala/graft/functions/PivotExpressions.scala" -> 2,
+      "src/main/scala/graft/embed/Embedder.scala" -> 1), sites.mkString("\n"))
+  }
 }

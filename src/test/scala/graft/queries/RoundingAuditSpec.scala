@@ -123,9 +123,10 @@ class RoundingAuditSpec extends AnyFunSuite {
         raw"round\(s, [46]\)" -> 4,            // BM25 / hybrid keyword scores
         raw"round\(raw, 4\)" -> 1,
         raw"round\(cos, 4\)" -> 1,
-        raw"round\(col\(.score.\), 4\)" -> 2,
+        // the q_search_facade / q_hard_negatives projections of the same grid
+        raw"round\(col\(.score.\), VectorSearch\.ScoreDigits\)" -> 2,
         raw"round\(col\(.cosine.\), 4\)" -> 2,
-        raw"round\(score, roundDigits\)" -> 1
+        raw"round\(score, Bm25Digits\)" -> 1
       )
     ),
     (
@@ -134,7 +135,7 @@ class RoundingAuditSpec extends AnyFunSuite {
         "lcm of values in [61,80] whose 2-adic power is at most 2^6, " +
         "while a 7-digit terminating decimal ending in 5 (a 6-dp " +
         "midpoint) requires 2^7 — provably no true midpoint exists",
-      Seq(raw"\(60 \+ rank_" -> 1, raw"round\(rrf, roundDigits\)" -> 1)
+      Seq(raw"\(60 \+ rank_" -> 1, raw"round\(rrf, RrfDigits\)" -> 1)
     ),
     (
       "driver-side-halfup-mirror",

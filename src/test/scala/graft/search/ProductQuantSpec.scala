@@ -114,6 +114,15 @@ class ProductQuantSpec extends SparkTestBase {
     assert(scores.forall(s => math.abs(s * 1e4 - math.rint(s * 1e4)) < 1e-9))
   }
 
+  test("a zero query ranks the shortlist by id and scores it null") {
+    val cbs = ProductQuant.fit(emb, m = 8, ksub = 16)
+    val enc = ProductQuant.encode(emb, cbs)
+    val out = ProductQuant.adcTopK(enc, cbs, new Array[Float](64), 3, shortlist = 5).collect()
+    val firstIds = emb.select("vec_id").orderBy("vec_id").limit(3).collect().map(_.getLong(0))
+    assert(out.map(_.getAs[Long]("vec_id")).toSeq == firstIds.toSeq)
+    assert(out.forall(r => r.isNullAt(r.fieldIndex("score"))))
+  }
+
   test("ivfAdcTopK composes probe+ADC+rerank and stays inside the probed clusters") {
     import graft.model.IndexConfig
     val cfg = IndexConfig(nlist = 16, nprobe = 12)

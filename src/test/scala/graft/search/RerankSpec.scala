@@ -60,4 +60,15 @@ class RerankSpec extends SparkTestBase {
     assert(out.length == 3)
     assert(out.map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
   }
+
+  test("a zero-vector candidate has sim 0.0 to every selected row") {
+    val withZero = Seq(
+      (1L, 0.9, Array(1.0f, 0.0f)),
+      (2L, 0.5, Array(0.0f, 0.0f))
+    ).toDF("vec_id", "rel", "embedding")
+    val out = Rerank.mmr(withZero, 2, lambda = 0.5).orderBy("rank").collect()
+      .map(r => (r.getLong(1), r.getDouble(2)))
+    // 0.5·0.5 − 0.5·sim with sim = 0.0 exactly
+    assert(out.toSeq == Seq((1L, 0.9), (2L, 0.25)))
+  }
 }

@@ -244,6 +244,17 @@ class VectorSearchSpec extends SparkTestBase {
     } finally labeled.unpersist()
   }
 
+  test("a zero query or centroid scores -1.0 in nearestClusters; a zero query bounds every cluster at 1.0") {
+    val q = Array(1f, 0f)
+    // cosines to q: -1.0, zero centroid, 0.0, 1.0; the -1.0 tie keeps index order
+    val cents = Array(Array(-1f, 0f), Array(0f, 0f), Array(0f, 1f), Array(1f, 0f))
+    assert(IvfIndex.nearestClusters(q, cents, 4) == Seq(3, 2, 0, 1))
+    val swapped = Array(cents(1), cents(0), cents(2), cents(3))
+    assert(IvfIndex.nearestClusters(q, swapped, 4) == Seq(3, 2, 0, 1))
+    assert(IvfIndex.nearestClusters(Array(0f, 0f), cents, 3) == Seq(0, 1, 2))
+    assert(IvfIndex.upperBounds(Array(0f, 0f), cents, Array.fill(4)(0.25)).toSeq == Seq.fill(4)(1.0))
+  }
+
   test("a query-vector literal reaches a plan only in VectorSearch.score") {
     // query vectors are named q/qv/qvec/queryVec throughout src/main;
     // the second form catches a literal fed straight into a cosine
