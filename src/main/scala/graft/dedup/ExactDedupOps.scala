@@ -113,25 +113,19 @@ private[dedup] trait ExactDedupOps extends Serializable { this: TextNormalizatio
     * aggregate + hash(doc_id, ln) exchange, ReuseExchange collapses
     * them, and the scan+tokenize+explode+partial-agg runs ONCE with no
     * persist (r20 profile at sf0.1: two 32-task map stages → one,
-    * summed CPU 10.3 → 4.4 s in the quiet run). `reuse = true`
-    * (VERDICT r3 #6) still persists the aggregate MEMORY_AND_DISK for
-    * callers composing further consumers on top; the caller owns the
-    * cache lifetime (unpersist via `spark.catalog.clearCache()` or
-    * drop the session).
+    * summed CPU 10.3 → 4.4 s in the quiet run). Nothing is persisted:
+    * a cache would outlive the returned plan and serve later runs'
+    * plans through CacheManager plan matching.
     */
-  def lineDedupStats(
-      df: DataFrame, idCol: String, textCol: String, reuse: Boolean = false): DataFrame = {
+  def lineDedupStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val lines = df
       .select(col(idCol).as("doc_id"), posexplode(split(col(textCol), "\n")).as(Seq("idx", "raw")))
       .withColumn("ln", trim(col("raw")))
       .filter(length(col("ln")) > 0)
       .select("doc_id", "idx", "ln")
-    val docLines0 = lines
+    val docLines = lines
       .groupBy("doc_id", "ln")
       .agg(count(lit(1)).as("c"), min(col("idx")).as("first_idx"))
-    val docLines =
-      if (reuse) docLines0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else docLines0
     // `c >= 1` is vacuously true — it exists so column pruning cannot
     // drop `c` from this branch's partial aggregate (see scaladoc)
     val firsts = docLines

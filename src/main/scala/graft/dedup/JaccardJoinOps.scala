@@ -1,8 +1,8 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.text.Tokens
 
 /** Exact set-similarity joins: blocked inverted-index Jaccard, the
   * prefix-filtered open-vocabulary form, and the bitmap form for
@@ -30,7 +30,7 @@ private[dedup] trait JaccardJoinOps extends Serializable { this: TextNormalizati
     val t = df.select(
       col(idCol).as("id"),
       col(blockCol).as("block"),
-      array_distinct(split(normalizedText(col(textCol)), " ")).as("toks")
+      array_distinct(split(Tokens.normalized(col(textCol)), " ")).as("toks")
     )
     val sizes = t.select(col("id"), col("block"), size(col("toks")).as("sz"))
     val ex = t.select(col("id"), col("block"), explode(col("toks")).as("token"))
@@ -80,7 +80,7 @@ private[dedup] trait JaccardJoinOps extends Serializable { this: TextNormalizati
 
     val t0 = df.select(
       col(idCol).as("id"),
-      array_distinct(split(normalizedText(col(textCol)), " ")).as("toks")
+      array_distinct(split(Tokens.normalized(col(textCol)), " ")).as("toks")
     )
     // Small slices also materialize the tokenization: `ex` feeds both
     // the frequency aggregate and the join stream side, so without
@@ -186,7 +186,7 @@ private[dedup] trait JaccardJoinOps extends Serializable { this: TextNormalizati
     val t = df.select(
       col(idCol).as("id"),
       col(blockCol).as("block"),
-      array_distinct(split(normalizedText(col(textCol)), " ")).as("toks")
+      array_distinct(split(Tokens.normalized(col(textCol)), " ")).as("toks")
     )
     // Token dictionary. Contiguous ids [0, vocab) are assigned with a
     // distributed zipWithIndex over the sorted tokens — no

@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SimHash near-dup family: 64-bit majority signatures (portable
@@ -51,28 +50,25 @@ private[dedup] trait SimHashOps extends Serializable {
   def simHash(textCol: Column, portableHash: Boolean = false): Column = {
     val hashFn: String => Long = if (portableHash) tokenHash64 else tokenHash64Fast
     val f = udf { (s: String) =>
-      if (s == null) 0L
-      else {
-        val toks = s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-        val counts = new Array[Int](64)
-        var n = 0
-        toks.foreach { t =>
-          val h = hashFn(t)
-          var i = 0
-          while (i < 64) {
-            if (((h >>> i) & 1L) == 1L) counts(i) += 1
-            i += 1
-          }
-          n += 1
-        }
-        var sig = 0L
+      // null and token-free text → 0L: no bit has a majority
+      val counts = new Array[Int](64)
+      var n = 0
+      graft.text.Tokens.words(s).foreach { t =>
+        val h = hashFn(t)
         var i = 0
         while (i < 64) {
-          if (counts(i) * 2 > n) sig |= (1L << i)
+          if (((h >>> i) & 1L) == 1L) counts(i) += 1
           i += 1
         }
-        sig
+        n += 1
       }
+      var sig = 0L
+      var i = 0
+      while (i < 64) {
+        if (counts(i) * 2 > n) sig |= (1L << i)
+        i += 1
+      }
+      sig
     }
     f(textCol)
   }

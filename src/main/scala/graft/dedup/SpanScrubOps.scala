@@ -1,7 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Duplicate-SPAN scrubbing (ExactSubstr-lite, Lee et al. 2022):
@@ -82,7 +81,7 @@ private[dedup] trait SpanScrubOps extends Serializable { this: TextNormalization
     require(n >= 2, s"n must be >= 2, got $n")
     val arrs = df.select(
       col(idCol).as("doc_id"),
-      filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"), t => length(t) > 0).as("a"))
+      graft.text.Tokens.words(col(textCol)).as("a"))
     // fused-UDF gram generation (r19): the transform(sequence…) +
     // slice + concat_ws HOF chain this replaces runs interpreted and
     // profiled at ~80 µs/gram (19 s of q_scrub_spans' 22 s CPU at

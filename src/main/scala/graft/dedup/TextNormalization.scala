@@ -1,25 +1,21 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.text.Tokens
 
-/** Shared text canonicalization for every dedup family: the
-  * reference's normalization (chunker.py:193-194), the content hash,
-  * and the single tokenize+shingle implementation whose universe the
-  * signature builder, candidate verifier and index side all agree on.
+/** Shared text canonicalization for every dedup family: the content
+  * hash of the reference's normalized text, and the one shingle
+  * implementation whose universe the signature builder, candidate
+  * verifier and index side all agree on. The tokens and the normalized
+  * text come from `graft.text.Tokens`.
   */
 private[dedup] trait TextNormalization extends Serializable {
 
-  /** Normalization used by the reference before hashing
-    * (chunker.py:193-194): lowercase + whitespace-collapse (Python
-    * `' '.join(s.lower().split())` — leading/trailing runs vanish).
+  /** Exact-hash content key: md5 of the text the reference hashes
+    * (chunker.py:193-194, [[graft.text.Tokens.normalized]]); null → null.
     */
-  def normalizedText(c: Column): Column =
-    trim(regexp_replace(lower(c), "\\s+", " "))
-
-  /** Exact-hash content key. */
-  def contentHash(c: Column): Column = md5(normalizedText(c))
+  def contentHash(c: Column): Column = md5(Tokens.normalized(c))
 
   /** Distinct word n-grams in ONE fused pass (UDF) — a
     * LinkedHashSet-dedup over [[shingleArray]], so the signature
@@ -81,17 +77,14 @@ private[dedup] trait TextNormalization extends Serializable {
     f.asNondeterministic()(toksCol)
   }
 
-  /** Tokenize + shingle, as a plain Scala function shared by the
-    * signature builder, the candidate verifier, and the index-side
-    * [[distinctShingles]] so all see the exact same shingle universe.
-    * Zero tokens → ZERO shingles (the DuckDB oracles encode the same
-    * rule explicitly). Locale.ROOT lowercasing — default-locale
-    * toLowerCase diverges from engine lower() under tr/az locales
-    * (dotless ı) and Greek final sigma.
+  /** Tokenize ([[graft.text.Tokens.words]]) + shingle, as a plain
+    * Scala function shared by the signature builder, the candidate
+    * verifier, and the index-side [[distinctShingles]] so all see the
+    * exact same shingle universe. Zero tokens → ZERO shingles (the
+    * DuckDB oracles encode the same rule explicitly).
     */
   private[dedup] def shingleArray(text: String, n: Int): Array[String] = {
-    if (text == null) return Array.empty
-    val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+    val toks = Tokens.words(text)
     if (toks.length == 0) Array.empty
     else if (toks.length < n) Array(toks.mkString(" "))
     else Array.tabulate(toks.length - n + 1)(i => toks.slice(i, i + n).mkString(" "))

@@ -2,6 +2,7 @@ package graft.lang
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.text.Tokens.countMatching
 
 /** Language detection as pure Column arithmetic (no UDFs — the whole
   * thing codegens). The reference ships TWO divergent detectors with
@@ -9,9 +10,6 @@ import org.apache.spark.sql.functions._
   * observable behavior and kept separate (SURVEY.md §7.5 item 6).
   */
 object LanguageDetect {
-
-  private def countMatching(c: Column, charClassRegex: String): Column =
-    length(c) - length(regexp_replace(c, charClassRegex, ""))
 
   /** Hangul syllable count (U+AC00–U+D7A3). */
   def hangulCount(c: Column): Column = countMatching(c, "[가-힣]")

@@ -2,6 +2,7 @@ package graft.quality
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.text.Tokens.{countMatching, roundHalfUp, words}
 
 /** Gopher-style structural document filters (Rae et al. 2021, "Scaling
   * Language Models: … Gopher", §A1.1; the same battery C4/CCNet-family
@@ -44,8 +45,6 @@ object GopherRules {
   val MinAlphaWordFrac = 0.80
   val MaxDupLineFrac = 0.3
 
-  private def r6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-
   /** Appends the metric columns and the `keep` verdict to `df`.
     * Output columns: n_words, mean_word_len, symbol_word_ratio,
     * bullet_frac, ellipsis_frac, alpha_word_frac, dup_line_frac, keep.
@@ -56,6 +55,7 @@ object GopherRules {
     // quality battery): materialize the token/line arrays and integer
     // counts once, derive every ratio from the counters
     val staged = df
+      // case-preserving words, unlike Tokens.words (see its scaladoc)
       .withColumn("__words", filter(split(txt, "\\s+"), w => length(w) > 0))
       .withColumn("__lines", split(txt, "\n"))
     val counted = staged
@@ -64,9 +64,8 @@ object GopherRules {
         aggregate(col("__words"), lit(0L), (acc, w) => acc + length(w)))
       .withColumn("__n_alpha_words",
         size(filter(col("__words"), w => w.rlike("[A-Za-z]"))))
-      .withColumn("__n_hash", length(txt) - length(regexp_replace(txt, "#", "")))
-      .withColumn("__n_ellipsis",
-        ((length(txt) - length(regexp_replace(txt, "\\.\\.\\.", ""))) / 3).cast("long"))
+      .withColumn("__n_hash", countMatching(txt, "#"))
+      .withColumn("__n_ellipsis", (countMatching(txt, "\\.\\.\\.") / 3).cast("long"))
       .withColumn("__n_lines", size(col("__lines")))
       .withColumn("__n_bullet",
         size(filter(col("__lines"), l =>
@@ -86,12 +85,12 @@ object GopherRules {
     val dupLineFrac = when(col("__n_lines") === 0, 0.0).otherwise(col("__n_dup_lines") / nL)
     counted
       .withColumn("n_words", col("__n_words"))
-      .withColumn("mean_word_len", r6(meanWl))
-      .withColumn("symbol_word_ratio", r6(symRatio))
-      .withColumn("bullet_frac", r6(bulletFrac))
-      .withColumn("ellipsis_frac", r6(ellipsisFrac))
-      .withColumn("alpha_word_frac", r6(alphaFrac))
-      .withColumn("dup_line_frac", r6(dupLineFrac))
+      .withColumn("mean_word_len", roundHalfUp(meanWl, 6))
+      .withColumn("symbol_word_ratio", roundHalfUp(symRatio, 6))
+      .withColumn("bullet_frac", roundHalfUp(bulletFrac, 6))
+      .withColumn("ellipsis_frac", roundHalfUp(ellipsisFrac, 6))
+      .withColumn("alpha_word_frac", roundHalfUp(alphaFrac, 6))
+      .withColumn("dup_line_frac", roundHalfUp(dupLineFrac, 6))
       .withColumn("keep",
         col("__n_words").between(MinWords, MaxWords) &&
           meanWl.between(MinMeanWordLen, MaxMeanWordLen) &&
@@ -118,11 +117,8 @@ object GopherRules {
     * whitespace tokens of `textCol` — `array_intersect` dedupes on both
     * engines, so the count is capped at 8 by construction.
     */
-  def stopwordHits(textCol: Column): Column = {
-    val toks =
-      filter(split(lower(coalesce(textCol, lit(""))), "\\s+"), w => length(w) > 0)
-    size(array_intersect(toks, array(StopWords.map(lit): _*)))
-  }
+  def stopwordHits(textCol: Column): Column =
+    size(array_intersect(words(textCol), array(StopWords.map(lit): _*)))
 
   /** The COMPLETE Gopher quality filter — one `keep` verdict composing
     * the three published §A1.1 rule families this engine computes in

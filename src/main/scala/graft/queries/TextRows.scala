@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.dedup.Dedup
 import graft.lang.LanguageDetect
 import graft.quality.QualityMonitor
 import graft.queries.CatalogSupport._
@@ -188,7 +189,7 @@ object TextRows extends CatalogFamily {
 
   val qFingerprint: Q = (s, dir) =>
     tbl(s, dir, "documents")
-      .select(col("doc_id"), TextAnalysis.fingerprintMd5(col("text")).as("fingerprint"))
+      .select(col("doc_id"), Dedup.contentHash(col("text")).as("fingerprint"))
 
   val qFingerprintSql: String =
     """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
@@ -347,7 +348,7 @@ object TextRows extends CatalogFamily {
     graft.text.PiiScrub
       .scrubBatched(base)
       .toDF("doc_id", "scrubbed")
-      .withColumn("scrubbed_fingerprint", TextAnalysis.fingerprintMd5(col("scrubbed")))
+      .withColumn("scrubbed_fingerprint", Dedup.contentHash(col("scrubbed")))
   }
 
   val qPiiScrubSql: String = {

@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.text.Tokens
 
 /** BM25 keyword search over a document corpus — the lexical half of
   * the hybrid (keyword + vector) retrieval a production vector store
@@ -35,12 +36,6 @@ object KeywordSearch {
   /** A BM25 score has this many decimals (Spark's HALF_UP `round`). */
   val Bm25Digits = 6
 
-  /** Whitespace tokenization, shared with TextAnalysis/TF-IDF so df
-    * and tf agree with the rest of the text stack.
-    */
-  private def toks(c: Column): Column =
-    filter(split(lower(coalesce(c, lit(""))), "\\s+"), t => length(t) > 0)
-
   /** Per-document BM25 scores for `terms`, top `k` by descending
     * score (ties broken by ascending id — required for a deterministic
     * k-set). Output: idCol, one `tf_<term>` column per query term
@@ -67,7 +62,7 @@ object KeywordSearch {
     // Stage 1: tokenize ONCE (CollapseProject keeps a non-cheap expr
     // referenced >1x staged — SPARK-36718 — so __toks evaluates once
     // per row even though every tf column reads it).
-    val withToks = docs.select(col(idCol), toks(col(textCol)).as("__toks"))
+    val withToks = docs.select(col(idCol), Tokens.words(col(textCol)).as("__toks"))
 
     // Stage 2: scan-stage counters — doc length + per-term tf.
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
@@ -177,7 +172,7 @@ object KeywordSearch {
     // in-run rebuild is bench-harness shape anyway — a production
     // store persists these three tables once (see the scaladoc) and
     // never re-derives them per query.
-    val withToks = docs.select(col(idCol), toks(col(textCol)).as("__toks"))
+    val withToks = docs.select(col(idCol), Tokens.words(col(textCol)).as("__toks"))
     val docLens = withToks.select(col(idCol), size(col("__toks")).cast("long").as("dl"))
     val postings = withToks
       .select(col(idCol), explode(col("__toks")).as("term"))

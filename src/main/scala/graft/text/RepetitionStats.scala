@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * so the DuckDB oracle reproduces values bit-for-bit.
   *
   * Definitions (deterministic, engine-portable):
-  *  - tokens = lowercase, split on whitespace, empties dropped;
+  *  - tokens = [[Tokens.words]] (lowercase, split on whitespace,
+  *    empties dropped);
   *    n-grams are token slices joined with single spaces.
   *  - dup_line_frac       = (lines - distinct lines) / lines over
   *    non-empty lines.
@@ -29,9 +30,6 @@ import org.apache.spark.sql.functions._
   *    count > 1 / len(normalized text)).
   */
 object RepetitionStats {
-
-  private[text] def tokensOf(s: String): Array[String] =
-    s.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
 
   /** Exact HALF_UP rounding at 6 dp of the non-negative integer ratio
     * numer/denom, computed ENTIRELY in integer arithmetic:
@@ -106,7 +104,7 @@ object RepetitionStats {
     val dupLineChars = lineCounts.iterator.collect { case (l, c) if c > 1 => l.length.toLong * (c - 1) }.sum
     val dupLineCharFrac = ratio6(dupLineChars, totalLineChars)
 
-    val toks = tokensOf(text)
+    val toks = Tokens.words(text)
     val totalChars = if (toks.isEmpty) 0 else toks.map(_.length).sum + toks.length - 1
 
     def topFrac(n: Int): Double = {

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Tokens.{countMatching, roundHalfUp, words}
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting. All pure
@@ -9,9 +10,6 @@ import org.apache.spark.sql.functions._
   * scan stage at 100 TB.
   */
 object TextAnalysis {
-
-  private def countMatching(c: Column, regex: String): Column =
-    length(c) - length(regexp_replace(c, regex, ""))
 
   /** Whitespace token count. */
   def tokenCountWhitespace(c: Column): Column =
@@ -32,68 +30,62 @@ object TextAnalysis {
     (pieces.cast("long") + longWordExtra).cast("int")
   }
 
-  /** Quality scoring heuristics: length, punctuation ratio, stopword
-    * ratio, mean word length, alpha ratio. Returns a struct column.
-    */
+  /** The stopwords the quality features and score count. */
   val EnglishStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by", "be", "this"
   )
 
-  /** Engine-agnostic half-up rounding: floor(x·10^k + 0.5)/10^k over
-    * the IEEE double. Spark's round() (BigDecimal HALF_UP over the
-    * binary value) and DuckDB's round() disagree on exact decimal ties
-    * (e.g. 0.49625 at 4 dp — ScaleUp sf1 corpus hits these), while
-    * floor arithmetic is bit-identical wherever both engines hold the
-    * same double.
+  /** The quality features and score over the five per-text counters,
+    * written once. A ratio over a zero denominator is 0.0; features round
+    * half-up at 6 dp; the score averages the RAW ratios (so it never
+    * lands on a rounding boundary) and rounds at 4 dp.
     */
-  private def roundHalfUp(c: Column, scale: Int): Column = {
-    val p = math.pow(10.0, scale)
-    floor(c * p + lit(0.5)).cast("double") / p
+  private final class Quality(
+      val chars: Column, val tokens: Column, val stop: Column, val punct: Column, val alpha: Column) {
+    private def ratio(num: Column, den: Column, rounded: Boolean): Column = {
+      val r = num.cast("double") / den
+      when(den === 0, 0.0).otherwise(if (rounded) roundHalfUp(r, 6) else r)
+    }
+    private def wordLen(rounded: Boolean) = ratio(chars - tokens + 1, tokens, rounded)
+
+    /** (name, value) of each feature, in output order. */
+    def features: Seq[(String, Column)] = Seq(
+      "n_chars" -> chars,
+      "n_tokens" -> tokens,
+      "stopword_ratio" -> ratio(stop, tokens, rounded = true),
+      "punct_ratio" -> ratio(punct, chars, rounded = true),
+      "alpha_ratio" -> ratio(alpha, chars, rounded = true),
+      "avg_word_len" -> wordLen(rounded = true))
+
+    /** In [0,1]: rewards stopwords (fluent prose), sane word length, alpha density. */
+    def score: Column = {
+      val lenScore = least(tokens.cast("double") / 100.0, lit(1.0))
+      val stopScore = least(ratio(stop, tokens, rounded = false) * 5.0, lit(1.0))
+      val wlScore = when(wordLen(rounded = false).between(3.0, 10.0), 1.0).otherwise(0.5)
+      roundHalfUp((lenScore + stopScore + ratio(alpha, chars, rounded = false) + wlScore) / 4.0, 4)
+    }
   }
 
-  def qualityFeatures(c: Column): Column = {
+  /** The five counters of `c`, over its token array `toks`. */
+  private def counted(c: Column, toks: Column): Quality = {
     val txt = coalesce(c, lit(""))
-    val nChars = length(txt)
-    val toks = filter(split(lower(txt), "\\s+"), t => length(t) > 0)
-    val nToks = size(toks)
-    val stop = size(filter(toks, t => t.isInCollection(EnglishStopwords)))
-    val punct = countMatching(txt, "[.,;:!?]")
-    val alpha = countMatching(txt, "(?U)[\\p{L}]")
-    struct(
-      nChars.as("n_chars"),
-      nToks.as("n_tokens"),
-      when(nToks === 0, 0.0).otherwise(roundHalfUp(stop.cast("double") / nToks, 6)).as("stopword_ratio"),
-      when(nChars === 0, 0.0).otherwise(roundHalfUp(punct.cast("double") / nChars, 6)).as("punct_ratio"),
-      when(nChars === 0, 0.0).otherwise(roundHalfUp(alpha.cast("double") / nChars, 6)).as("alpha_ratio"),
-      when(nToks === 0, 0.0)
-        .otherwise(roundHalfUp((nChars - nToks + 1).cast("double") / nToks, 6))
-        .as("avg_word_len")
-    )
+    new Quality(
+      chars = length(txt),
+      tokens = size(toks),
+      stop = size(filter(toks, t => t.isInCollection(EnglishStopwords))),
+      punct = countMatching(txt, "[.,;:!?]"),
+      alpha = countMatching(txt, "(?U)[\\p{L}]"))
   }
 
-  /** Composite quality score in [0,1]: rewards stopword presence
-    * (fluent prose), sane word length, alpha density; penalizes
-    * extremes. Computed from RAW ratios (not the 6-dp-rounded feature
-    * fields) so the average never lands on a decimal rounding boundary;
-    * only the final value is rounded.
+  /** Quality heuristics as a struct: length, stopword ratio, punctuation
+    * ratio, alpha ratio, mean word length.
     */
-  def qualityScore(c: Column): Column = {
-    val txt = coalesce(c, lit(""))
-    val nChars = length(txt)
-    val toks = filter(split(lower(txt), "\\s+"), t => length(t) > 0)
-    val nToks = size(toks)
-    val stopRatio = when(nToks === 0, 0.0)
-      .otherwise(size(filter(toks, t => t.isInCollection(EnglishStopwords))).cast("double") / nToks)
-    val alphaRatio = when(nChars === 0, 0.0)
-      .otherwise(countMatching(txt, "(?U)[\\p{L}]").cast("double") / nChars)
-    val avgWordLen = when(nToks === 0, 0.0)
-      .otherwise((nChars - nToks + 1).cast("double") / nToks)
-    val lenScore = least(nToks.cast("double") / 100.0, lit(1.0))
-    val stopScore = least(stopRatio * 5.0, lit(1.0))
-    val wlScore = when(avgWordLen.between(3.0, 10.0), 1.0).otherwise(0.5)
-    roundHalfUp((lenScore + stopScore + alphaRatio + wlScore) / 4.0, 4)
-  }
+  def qualityFeatures(c: Column): Column =
+    struct(counted(c, words(c)).features.map { case (n, v) => v.as(n) }: _*)
+
+  /** Composite quality score in [0,1]. */
+  def qualityScore(c: Column): Column = counted(c, words(c)).score
 
   /** All quality features plus the composite score in ONE tokenization
     * pass, as a DataFrame transform. Projecting [[qualityFeatures]] and
@@ -106,7 +98,7 @@ object TextAnalysis {
     * expression that is referenced more than once, so the token array
     * and each regex counter are evaluated exactly once per row and
     * every downstream ratio/score is plain arithmetic over the shared
-    * counters. Formulas are identical to [[qualityFeatures]] /
+    * counters. The same [[Quality]] formulas as [[qualityFeatures]] /
     * [[qualityScore]] — bit-identical output (asserted in
     * TextAnalysisSpec).
     *
@@ -114,32 +106,19 @@ object TextAnalysis {
     * alpha_ratio, avg_word_len, quality_score.
     */
   def withQualityAnalysis(df: DataFrame, textCol: String): DataFrame = {
-    val txt = coalesce(col(textCol), lit(""))
+    val q = counted(col(textCol), col("__toks"))
     val counters = df
-      .withColumn("__toks", filter(split(lower(txt), "\\s+"), t => length(t) > 0))
-      .withColumn("__n_chars", length(txt))
-      .withColumn("__n_punct", countMatching(txt, "[.,;:!?]"))
-      .withColumn("__n_alpha", countMatching(txt, "(?U)[\\p{L}]"))
-      .withColumn("__n_tokens", size(col("__toks")))
-      .withColumn("__n_stop", size(filter(col("__toks"), t => t.isInCollection(EnglishStopwords))))
-    val nChars = col("__n_chars")
-    val nToks = col("__n_tokens")
-    val nStop = col("__n_stop")
-    // raw (unrounded) ratios feed the score, exactly as qualityScore does
-    val stopRatioRaw = when(nToks === 0, 0.0).otherwise(nStop.cast("double") / nToks)
-    val alphaRatioRaw = when(nChars === 0, 0.0).otherwise(col("__n_alpha").cast("double") / nChars)
-    val avgWordLenRaw = when(nToks === 0, 0.0).otherwise((nChars - nToks + 1).cast("double") / nToks)
-    val lenScore = least(nToks.cast("double") / 100.0, lit(1.0))
-    val stopScore = least(stopRatioRaw * 5.0, lit(1.0))
-    val wlScore = when(avgWordLenRaw.between(3.0, 10.0), 1.0).otherwise(0.5)
-    counters
-      .withColumn("n_chars", nChars)
-      .withColumn("n_tokens", nToks)
-      .withColumn("stopword_ratio", when(nToks === 0, 0.0).otherwise(roundHalfUp(nStop.cast("double") / nToks, 6)))
-      .withColumn("punct_ratio", when(nChars === 0, 0.0).otherwise(roundHalfUp(col("__n_punct").cast("double") / nChars, 6)))
-      .withColumn("alpha_ratio", when(nChars === 0, 0.0).otherwise(roundHalfUp(col("__n_alpha").cast("double") / nChars, 6)))
-      .withColumn("avg_word_len", when(nToks === 0, 0.0).otherwise(roundHalfUp((nChars - nToks + 1).cast("double") / nToks, 6)))
-      .withColumn("quality_score", roundHalfUp((lenScore + stopScore + alphaRatioRaw + wlScore) / 4.0, 4))
+      .withColumn("__toks", words(col(textCol)))
+      .withColumn("__n_chars", q.chars)
+      .withColumn("__n_punct", q.punct)
+      .withColumn("__n_alpha", q.alpha)
+      .withColumn("__n_tokens", q.tokens)
+      .withColumn("__n_stop", q.stop)
+    val staged = new Quality(
+      col("__n_chars"), col("__n_tokens"), col("__n_stop"), col("__n_punct"), col("__n_alpha"))
+    staged.features
+      .foldLeft(counters) { case (d, (n, v)) => d.withColumn(n, v) }
+      .withColumn("quality_score", staged.score)
       .drop("__toks", "__n_chars", "__n_punct", "__n_alpha", "__n_tokens", "__n_stop")
   }
 
@@ -155,9 +134,9 @@ object TextAnalysis {
     val kana = countMatching(txt, "[\\u3040-\\u30FF]").cast("double") / total
     val cyr = countMatching(txt, "[\\u0400-\\u04FF]").cast("double") / total
     val viet = countMatching(txt, "[ăâđêôơưàáảãạèéẻẽẹìíỉĩịòóỏõọùúủũụỳýỷỹỵ]").cast("double") / total
-    val toks = filter(split(txt, "\\s+"), t => length(t) > 0)
-    def hasAny(words: Seq[String]) =
-      size(filter(toks, t => t.isInCollection(words))).cast("double") / greatest(size(toks), lit(1))
+    val toks = words(c)
+    def hasAny(lexicon: Seq[String]) =
+      size(filter(toks, t => t.isInCollection(lexicon))).cast("double") / greatest(size(toks), lit(1))
     val en = hasAny(Seq("the", "and", "of", "to", "is", "in", "that", "it"))
     val de = hasAny(Seq("der", "die", "das", "und", "ist", "nicht", "ein", "zu"))
     val fr = hasAny(Seq("le", "la", "les", "et", "est", "une", "que", "des"))
@@ -209,7 +188,7 @@ object TextAnalysis {
     val terms = df
       .select(
         col(idCol).as("doc_id"),
-        explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"), t => length(t) > 0)).as("term")
+        explode(words(col(textCol))).as("term")
       )
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val w = Window.partitionBy("doc_id").orderBy(desc("score"), col("term"))
@@ -237,15 +216,11 @@ object TextAnalysis {
       .select("doc_id", "rank", "term", "tf", "df", "score")
   }
 
-  /** Document fingerprint: md5 of the normalized text (stable content
-    * address), plus a 64-bit rolling-hash-style fingerprint via
-    * xxhash64 for cheap joins.
+  /** Document fingerprint: a 64-bit xxhash64 of the normalized text,
+    * for cheap joins. The md5 content address of the same text is
+    * `Dedup.contentHash`.
     */
-  def fingerprintMd5(c: Column): Column =
-    md5(trim(regexp_replace(lower(c), "\\s+", " ")))
-
-  def fingerprint64(c: Column): Column =
-    xxhash64(trim(regexp_replace(lower(c), "\\s+", " ")))
+  def fingerprint64(c: Column): Column = xxhash64(Tokens.normalized(c))
 
   /** Unigram-LM cross-entropy per document — the CCNet-family quality
     * signal (Wenzek et al. 2020 score web pages by LM perplexity; the
@@ -284,7 +259,7 @@ object TextAnalysis {
       df: DataFrame, idCol: String, textCol: String, hotMin: Long = 0L): DataFrame = {
     val arr = df.select(
       col(idCol).as("doc_id"),
-      filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"), t => length(t) > 0).as("a"))
+      words(col(textCol)).as("a"))
     val toks = arr.select(col("doc_id"), explode(col("a")).as("tok"))
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("c"))
     // The knob's token total (= the model's T) from ONE cheap aggregate
@@ -361,7 +336,7 @@ object TextAnalysis {
     require(lambda > 0.0 && lambda <= 1.0, s"lambda $lambda out of (0, 1]")
     val arr = df.select(
       col(idCol).as("doc_id"),
-      filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"), t => length(t) > 0).as("a"))
+      words(col(textCol)).as("a"))
     val toks = arr.select(col("doc_id"), explode(col("a")).as("w"))
     // vocab-scale unigram table, locally checkpointed for the same
     // reasons as unigramCrossEntropy's counts (multiple pruned

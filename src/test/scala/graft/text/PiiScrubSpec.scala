@@ -57,7 +57,7 @@ class PiiScrubSpec extends SparkTestBase {
       "report sent to bob.roberts@other.example yesterday"
     ).toDF("t")
     val prints = df
-      .select(TextAnalysis.fingerprintMd5(PiiScrub.scrub(col("t"))).as("fp"))
+      .select(graft.dedup.Dedup.contentHash(PiiScrub.scrub(col("t"))).as("fp"))
       .distinct()
       .count()
     assert(prints == 1L)

@@ -44,7 +44,7 @@ class TextAnalysisSpec extends SparkTestBase {
     import spark.implicits._
     val df = Seq("Hello  World", "hello world", "different").toDF("t")
       .select(
-        TextAnalysis.fingerprintMd5(col("t")).as("md5"),
+        graft.dedup.Dedup.contentHash(col("t")).as("md5"),
         TextAnalysis.fingerprint64(col("t")).as("f64")
       )
     val rows = df.collect()
